@@ -37,7 +37,6 @@ _DEMOTE_ORDER = (
     "graph2_autotune_best",
     "cold_pass_seconds",
     "load_avg",
-    "lsh_selectivity",
     # the headline suite's calibration bracket leaves only under heavy
     # pressure (it is the suite's own drift adjudicator — VERDICT r18
     # item 1; the full gate record always lands in detail)
@@ -641,12 +640,7 @@ def main() -> int:
     qs = entrymod.queries()
 
     headline = [
-        # vector surface. knn_lsh is deliberately NOT here: its measured
-        # selectivity on this isotropic data is 0.64 at recall 0.94
-        # (recorded every run as extra.lsh_selectivity), i.e. the bucket
-        # join admits ~2/3 of the |Q|·|B| product — at 100× scale that IS
-        # a full scan, so it stays a tested operator (tests/test_index)
-        # with IVF/SQ8/layered-graph the approximate paths of record.
+        # vector surface
         "knn_exact",
         # large-batch exact kNN: 2000 queries amortize fixed job overhead
         # (~3,200 QPS at sf0.1 — within 1.5x of BASELINE.md FAISS-HNSW
@@ -659,11 +653,8 @@ def main() -> int:
         "knn_ivfpq",
         "knn_sq8",
         "knn_ivf_sq8",
-        # knn_graph (flat beam-search graph) is deliberately NOT here:
-        # ~5 stage-waves per hop make it 4.9× slower than layered2 at
-        # sf0.1 and a scale-killer at 100×. It stays a tested operator
-        # (tests/test_index graph_search_recall); layered/layered2/sq8
-        # are the graph paths of record.
+        # layered/layered2/sq8 are the graph paths of record: each probe
+        # walks its segments inside one Arrow kernel.
         "knn_graph_layered",
         "knn_graph_layered2",
         # the r13 worker-served mode (probes pull cached decoded
@@ -715,20 +706,9 @@ def main() -> int:
 
     build_seconds = warm_indexes(spark, sf_dir)
 
-    # measured LSH candidate selectivity (fraction of the |Q|·|B| product
-    # the bucket join admits) — the honesty metric behind the knn_lsh
-    # data-limitation note in queries_index.py
-    from cs598vectordb_spark.operators.index import lsh_candidates
-    from cs598vectordb_spark.queries_index import lsh_index_for
     from cs598vectordb_spark.sources.tables import load_table, queries_from_embeddings
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qdf = queries_from_embeddings(emb, DEFAULT_N_QUERIES)
-    lsh_sel = round(
-        lsh_candidates(lsh_index_for(spark, sf_dir), qdf).count()
-        / max(emb.count() * DEFAULT_N_QUERIES, 1),
-        4,
-    )
 
     # (nprobe1, nprobe2, beam) recall/selectivity frontier of the index
     # of record (layered2), recorded every run so probe-parameter drift
@@ -2236,7 +2216,6 @@ def main() -> int:
             # start/end GEMM+membw readings + whether the contended-
             # window re-draw fired — the suite's own adjudicator
             "headline_cal": headline_cal_summary(headline_gate),
-            "lsh_selectivity": lsh_sel,
             # the 1M headline, inline so the round record carries it
             # (full block incl. frontier + dynamic in bench detail)
             "large_1m": {

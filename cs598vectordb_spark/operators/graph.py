@@ -1,34 +1,22 @@
 """Graph-based ANN — the reference's headline index family (hnswlib /
-FAISS IndexHNSWFlat, dynamic_script_faiss.py:53-57), re-expressed as
-DataFrame iteration instead of a pointer-chasing in-memory graph.
+FAISS IndexHNSWFlat, dynamic_script_faiss.py:53-57), re-expressed for
+Spark instead of as a pointer-chasing in-memory graph.
 
-Spark cannot mutate a shared graph during traversal, so the two halves
-become set-at-a-time algorithms:
+Spark cannot mutate a shared graph during traversal, so the index is
+segmented: a k-means coarse layer prunes each query to a few segments,
+and every segment holds an exact (or spill-partitioned) kNN subgraph
+that one Arrow kernel walks best-first in numpy.
 
-* ``build_knn_graph_partitioned`` — the build path of record:
-  spill-partitioned exact subgraphs (k-means cells, every vector
-  assigned to its `spill` nearest cells, exact blocked edges per cell
-  in one Arrow kernel, one top-k merge). Two shuffle stages total.
+* ``build_layered_graph`` / ``knn_graph_layered`` — one-level coarse
+  layer (driver-sized centroids, the Milvus per-segment-HNSW shape).
+* ``build_layered_graph2`` / ``knn_graph_layered2`` — the same
+  segments over the two-level ivf2 coarse layer, so segment count
+  scales past any driver-sized top layer; served by worker-cached
+  segments (``open_layered2(served=True)``) on the read path of record.
 
-* ``build_knn_graph`` — NN-descent (Dong et al., WWW'11): start from a
-  deterministic pseudo-random K-neighbor graph, then repeatedly propose
-  neighbors-of-neighbors (one self-join on the edge list), score the
-  proposals exactly, and keep the best K per node. Each round improves
-  the graph monotonically. Per-round cost is |V|·K² proposal edges —
-  never |V|² — but each round is ~5 Spark stage waves, so the
-  partitioned builder beats it on wall clock; kept as the
-  assumption-free fallback.
-
-* ``knn_graph_search`` — batched best-first (beam) search: ALL queries
-  walk the graph simultaneously. A round = frontier ⋈ graph (expand) →
-  score new candidates → per-query top-B beam (window). T rounds of
-  diameter-ish hops, then top-k of everything visited. Each round
-  shuffles ≤ |Q|·B·K scored rows; the base table is touched only through
-  the bounded candidate join, exactly like the LSH re-rank.
-
-Determinism: seeds come from the engine's polynomial rolling hash of
-(vec_id, seed), not an RNG — identical graphs and results across runs;
-recall floors are pinned in tests (≥0.7 bar, BASELINE.md's Annoy floor).
+Determinism: segment builds are seeded k-means plus exact edges with
+id tie-breaks — identical graphs and results across runs; recall
+floors are pinned in tests (≥0.7 bar, BASELINE.md's Annoy floor).
 """
 
 from __future__ import annotations
@@ -41,247 +29,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
-from cs598vectordb_spark.functions.distance import squared_l2
-
-_ROLL_MOD = 1_000_000_007
-
-
-def _pseudo(col: F.Column, salt: int) -> F.Column:
-    """Deterministic pseudo-random int64 from an id — cheap affine-mod
-    mix, stable across engines and runs (no RNG state)."""
-    return (col * F.lit(1_103_515_245) + F.lit(12_345 + salt)) % F.lit(_ROLL_MOD)
-
-
-def _score_pairs(edges: DataFrame, base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(src, dst, dist): attach exact distances to an edge list with two
-    id-equi-joins against the base payload. At 100 TB both joins shuffle
-    on the uniform vec id — no skew, no cross product."""
-    a = base.select(F.col(id_col).alias("src"), F.col(vec_col).alias("_sv"))
-    b = base.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("_dv"))
-    return (
-        edges.join(a, "src")
-        .join(b, "dst")
-        .select("src", "dst", squared_l2("_sv", "_dv").alias("dist"))
-    )
-
-
-def build_knn_graph(
-    base: DataFrame,
-    k: int = DEFAULT_K,
-    rounds: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = SEED,
-) -> DataFrame:
-    """(src, dst, dist): the directed kNN graph after `rounds` of
-    NN-descent refinement. Each round localCheckpoints (lineage would
-    otherwise double per iteration, same trick as dedup_clusters)."""
-    n = base.count()
-    ids = base.select(F.col(id_col).alias("src"))
-    # deterministic random init: k distinct-ish targets per node
-    inits = ids.select(
-        "src",
-        F.explode(
-            F.array(*[(_pseudo(F.col("src"), seed + 7 * j) % n) for j in range(k)])
-        ).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    w = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-
-    def topk(scored: DataFrame) -> DataFrame:
-        return (
-            scored.groupBy("src", "dst")
-            .agg(F.min("dist").alias("dist"))
-            .withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .drop("_r")
-        )
-
-    graph = topk(_score_pairs(inits, base, id_col, vec_col)).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        # neighbor-of-neighbor proposals along BOTH edge directions —
-        # undirected propagation converges much faster (NN-descent §2.2)
-        und = graph.select("src", "dst").union(
-            graph.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        hop = (
-            und.alias("g1")
-            .join(und.alias("g2"), F.col("g1.dst") == F.col("g2.src"))
-            .select(F.col("g1.src").alias("src"), F.col("g2.dst").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-        )
-        proposals = hop.subtract(graph.select("src", "dst"))
-        scored_new = _score_pairs(proposals, base, id_col, vec_col)
-        graph = topk(graph.unionByName(scored_new)).localCheckpoint(eager=True)
-    return graph
-
-
-def build_knn_graph_partitioned(
-    base: DataFrame,
-    k: int = DEFAULT_K,
-    nlist: int = 8,
-    spill: int = 2,
-    train_sample: int = 10_000,
-    exact_segment_rows: int = 16_384,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = SEED,
-) -> DataFrame:
-    """(src, dst, dist): flat kNN graph via spill-partitioned exact
-    subgraphs — the fast path of record for T-family graph builds.
-
-    The join-based NN-descent builder (build_knn_graph) pays init+3
-    refinement rounds, each a multi-stage shuffle (self-join, subtract,
-    two score joins, window) — ~5 Spark stage waves per round, which is
-    wall-clock-dominant regardless of data size. This builder instead
-    k-means the base into ~nlist cells, assigns every vector to its
-    `spill` nearest cells (SPANN closure assignment: a true-NN pair near
-    a shared boundary co-occurs in some cell), computes each cell's
-    EXACT blocked kNN edges inside ONE Arrow kernel, and merges the
-    union with a single groupBy + per-src top-k — two shuffle stages
-    total. Cells beyond exact_segment_rows recurse into the same
-    spill-partitioned local build, so per-task memory stays bounded at
-    100 TB scale; cross-cell truth is what the spill overlap captures.
-
-    Reference analog: FAISS builds its HNSW in seconds in-process
-    (/root/reference/dynamic_script_faiss.py:53-57); this is the
-    cluster-shaped equivalent with deterministic seeds."""
-    import pandas as pd
-
-    from cs598vectordb_spark.operators.index import _kmeans_fit
-
-    spark = base.sparkSession
-    sample = base.select(id_col, vec_col).orderBy(id_col).limit(train_sample).toPandas()
-    Xs = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
-    C = _kmeans_fit(Xs, nlist, seed)
-    bc = spark.sparkContext.broadcast(C)
-    n_spill = min(spill, nlist)
-
-    def assign(batches):
-        Cb = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            B = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = (
-                np.square(B).sum(1, keepdims=True)
-                - 2.0 * (B @ Cb.T)
-                + np.square(Cb).sum(1)[None, :]
-            )
-            cells = np.argpartition(d2, n_spill - 1, axis=1)[:, :n_spill]
-            idx = np.repeat(np.arange(len(pdf)), n_spill)
-            out = pdf.iloc[idx].reset_index(drop=True)
-            yield out.assign(cell=cells.ravel().astype(np.int32))
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    in_schema = base.select(id_col, vec_col).schema
-    assigned = base.select(id_col, vec_col).mapInPandas(
-        assign, StructType(list(in_schema.fields) + [StructField("cell", IntegerType())])
-    )
-
-    def seg_edges(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        if len(ids) <= 1:
-            return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                {"src": np.int64, "dst": np.int64, "dist": np.float64}
-            )
-        X = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
-        if len(ids) <= exact_segment_rows:
-            nb, dd = _local_knn_graph(X, ids, k)
-        else:
-            nb, dd = _local_partitioned_graph(X, ids, k)
-        counts = np.fromiter((len(a) for a in nb), dtype=np.int64, count=len(nb))
-        return pd.DataFrame(
-            {
-                "src": np.repeat(ids, counts),
-                "dst": np.concatenate(nb),
-                "dist": np.concatenate(dd).astype(np.float64),
-            }
-        )
-
-    edges = assigned.groupBy("cell").applyInPandas(
-        seg_edges, "src long, dst long, dist double"
-    )
-    w = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-    return (
-        edges.groupBy("src", "dst")
-        .agg(F.min("dist").alias("dist"))
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-    )
-
-
-def knn_graph_search(
-    graph: DataFrame,
-    base: DataFrame,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    beam: int = 20,
-    hops: int = 3,
-    n_seeds: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = SEED,
-) -> DataFrame:
-    """(q_id, rank, vec_id, dist): batched beam search. Seeds are
-    deterministic pseudo-random entry points per query; each hop expands
-    the current beam through the graph's out-edges, scores the new
-    nodes against the (broadcast, driver-sized) query batch, and keeps
-    the best `beam` visited nodes per query."""
-    n = base.count()
-    seeds = queries.select(
-        "q_id",
-        F.explode(
-            F.array(*[(_pseudo(F.col("q_id"), seed + 13 * j) % n) for j in range(n_seeds)])
-        ).alias("node"),
-    )
-    qv = queries.select(F.col("q_id"), F.col(vec_col).alias("_qv"))
-    bv = base.select(F.col(id_col).alias("node"), F.col(vec_col).alias("_nv"))
-
-    def score(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(bv, "node")
-            .join(F.broadcast(qv), "q_id")
-            .select("q_id", "node", squared_l2("_qv", "_nv").alias("dist"))
-        )
-
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("node").asc())
-    visited = (
-        score(seeds.distinct())
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= beam)
-        .drop("_r")
-        .localCheckpoint(eager=True)
-    )
-    out_edges = graph.select(F.col("src").alias("node"), F.col("dst"))
-    for _ in range(hops):
-        frontier = visited.select("q_id", "node")
-        expanded = (
-            frontier.join(out_edges, "node")
-            .select("q_id", F.col("dst").alias("node"))
-            .subtract(frontier)
-        )
-        visited = (
-            visited.unionByName(score(expanded))
-            .groupBy("q_id", "node")
-            .agg(F.min("dist").alias("dist"))
-            .withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= beam)
-            .drop("_r")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        visited.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", F.col("node").alias("vec_id"), "dist")
-    )
 
 
 # ---- layered (segmented) graph index ------------------------------------
-# The flat DataFrame beam search above is stage-count-bound: every hop is
-# a join + window + checkpoint (~4 stages), so probe latency is Spark
+# A DataFrame beam search is stage-count-bound: every hop is a join +
+# window + checkpoint (~4 stages), so probe latency is Spark
 # scheduling, not compute. The layered design is the HNSW-at-cluster-scale
 # shape the reference itself benchmarks: Milvus builds ONE graph PER
 # SEGMENT and merges across segments at query time
@@ -349,8 +101,9 @@ def _local_knn_graph(
     50k-row segment's full float64 matrix would be ~20 GB, an executor
     OOM at exactly the segment sizes a 100 TB base produces). Compute is
     still |seg|² GEMM, which is why the builders cap the exact path and
-    hand larger segments to the spill-partitioned/NN-descent fallbacks
-    (forced end-to-end at exact_segment_rows=0 in tests/test_index.py)."""
+    hand larger segments to the spill-partitioned fallback
+    (_local_partitioned_graph, forced end-to-end at exact_segment_rows=0
+    in tests/test_index.py)."""
     from cs598vectordb_spark.operators.knn import squared_l2_block
 
     c = len(ids)
@@ -374,88 +127,6 @@ def _local_knn_graph(
     return nbrs, dists
 
 
-def _blocked_pair_dists(
-    X: np.ndarray, sq: np.ndarray, src: np.ndarray, dst: np.ndarray,
-    score_block: int = 500_000,
-) -> np.ndarray:
-    """Exact squared-L2 for an edge list, scored in blocked gather-einsums
-    so peak gather memory is score_block·dim floats."""
-    out = np.empty(len(src))
-    for lo in range(0, len(src), score_block):
-        s, d = src[lo : lo + score_block], dst[lo : lo + score_block]
-        out[lo : lo + score_block] = np.maximum(
-            sq[s] - 2.0 * np.einsum("ij,ij->i", X[s], X[d]) + sq[d], 0.0
-        )
-    return out
-
-
-def _descent_rounds(
-    X: np.ndarray,
-    ids: np.ndarray,
-    cur_src: np.ndarray,
-    cur_dst: np.ndarray,
-    cur_d: np.ndarray,
-    k_eff: int,
-    rounds: int,
-    max_proposals: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized NN-descent rounds over a position-space edge list.
-    Each round: CSR the UNDIRECTED edge multiset (Dong et al. §2.2 —
-    out-edges alone plateau well below 0.9 graph recall), propose every
-    (u, nbrs(v)) 2-hop pair as one ragged expansion, score the deduped
-    fresh pairs in blocked gather-GEMMs, and keep each node's best k_eff
-    by (dist, id) with one segmented rank pass — no per-node Python loop
-    anywhere. Above max_proposals the expanded edge set is
-    deterministically subsampled (affine-mod hash), the classic
-    NN-descent sampling-rate knob."""
-    c = len(ids)
-    pos = np.arange(c, dtype=np.int64)
-    sq = np.square(X).sum(axis=1)
-    cur_key = cur_src * c + cur_dst
-    for _ in range(rounds):
-        e_src = np.concatenate([cur_src, cur_dst])
-        e_dst = np.concatenate([cur_dst, cur_src])
-        eorder = np.argsort(e_src, kind="stable")
-        e_src, e_dst = e_src[eorder], e_dst[eorder]
-        indptr = np.searchsorted(e_src, np.arange(c + 1))
-        deg = np.diff(indptr)
-        exp_src, exp_dst = e_src, e_dst  # the edges we expand (maybe sampled)
-        counts = deg[exp_dst]
-        total = int(counts.sum())
-        if total > max_proposals:
-            keep = (exp_src * c + exp_dst) * 2_654_435_761 % _ROLL_MOD < int(
-                _ROLL_MOD * (max_proposals / total)
-            )
-            exp_src, exp_dst = exp_src[keep], exp_dst[keep]
-            counts = deg[exp_dst]
-            total = int(counts.sum())
-        # ragged expansion: for each kept edge (u, v) propose (u, nbrs(v));
-        # the gather indexes the FULL CSR arrays, only expansion is sampled
-        prop_src = np.repeat(exp_src, counts)
-        offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-        prop_dst = e_dst[np.repeat(indptr[exp_dst], counts) + offs]
-        mask = prop_src != prop_dst
-        new_key = np.setdiff1d(
-            np.unique(prop_src[mask] * c + prop_dst[mask]), cur_key
-        )
-        if len(new_key) == 0:
-            break
-        prop_src, prop_dst = new_key // c, new_key % c
-        prop_d = _blocked_pair_dists(X, sq, prop_src, prop_dst)
-        # pool = current ∪ proposals (disjoint by construction) → top-k
-        # per src by (dist, id), selected with one segmented rank pass
-        all_src = np.concatenate([cur_src, prop_src])
-        all_dst = np.concatenate([cur_dst, prop_dst])
-        all_d = np.concatenate([cur_d, prop_d])
-        so = np.lexsort((ids[all_dst], all_d, all_src))
-        all_src, all_dst, all_d = all_src[so], all_dst[so], all_d[so]
-        grp_start = np.searchsorted(all_src, pos)
-        keep = (np.arange(len(all_src)) - grp_start[all_src]) < k_eff
-        cur_src, cur_dst, cur_d = all_src[keep], all_dst[keep], all_d[keep]
-        cur_key = cur_src * c + cur_dst
-    return cur_src, cur_dst, cur_d
-
-
 def _finalize_edges(
     ids: np.ndarray, cur_src: np.ndarray, cur_dst: np.ndarray, cur_d: np.ndarray
 ) -> tuple[list[np.ndarray], list[np.ndarray]]:
@@ -471,48 +142,12 @@ def _finalize_edges(
     )
 
 
-def _local_nn_descent(
-    X: np.ndarray,
-    ids: np.ndarray,
-    degree: int,
-    rounds: int = 3,
-    max_proposals: int = 32_000_000,
-) -> tuple[list[np.ndarray], list[np.ndarray]]:
-    """NN-descent from a deterministic pseudo-random init — kept as the
-    assumption-free fallback and the polish engine; for large segments
-    the partitioned builder (_local_partitioned_graph) converges far
-    faster because its init is already near-exact."""
-    c = len(ids)
-    k_eff = min(degree, c - 1)
-    order = np.argsort(ids, kind="stable")
-    X, ids = X[order], ids[order]
-    # init: pseudo-random distinct-ish targets per node (position space),
-    # deduped pairwise via the flat (src·c + dst) key
-    pos = np.arange(c, dtype=np.int64)
-    init = np.stack(
-        [(pos * 1_103_515_245 + 12_345 + 7 * j) % _ROLL_MOD % c for j in range(k_eff)],
-        axis=1,
-    )
-    for j in range(k_eff):  # avoid self-loops deterministically
-        init[:, j] = np.where(init[:, j] == pos, (init[:, j] + 1) % c, init[:, j])
-    cur_key = np.unique(np.repeat(pos, k_eff) * c + init.ravel())
-    cur_src, cur_dst = cur_key // c, cur_key % c
-    sq = np.square(X).sum(axis=1)
-    cur_d = _blocked_pair_dists(X, sq, cur_src, cur_dst)
-    cur_src, cur_dst, cur_d = _descent_rounds(
-        X, ids, cur_src, cur_dst, cur_d, k_eff, rounds, max_proposals
-    )
-    return _finalize_edges(ids, cur_src, cur_dst, cur_d)
-
-
 def _local_partitioned_graph(
     X: np.ndarray,
     ids: np.ndarray,
     degree: int,
     spill: int = 2,
     target_cell: int = 4096,
-    polish_rounds: int = 0,
-    polish_proposals: int = 32_000_000,
     seed: int = SEED,
 ) -> tuple[list[np.ndarray], list[np.ndarray]]:
     """kNN graph for segments too large for one |seg|² pass: k-means the
@@ -522,10 +157,9 @@ def _local_partitioned_graph(
     blocked graph in float32, and top-k merge the union. Cost is
     Σ|cell|² ≈ spill²·|seg|·target_cell multiply-adds of BLAS — no giant
     edge sorts, no convergence question — vs |seg|² for the flat exact
-    path. Optional polish_rounds of NN-descent close the residual gap
-    (one round from this init beats three from random). Distances are
-    scored in float32 (graph edges feed rows-only probe paths, never the
-    value-hashed oracle surface); ties keep id order via lexsort."""
+    path. Distances are scored in float32 (graph edges feed rows-only
+    probe paths, never the value-hashed oracle surface); ties keep id
+    order via lexsort."""
     from cs598vectordb_spark.operators.index import _kmeans_fit
 
     c = len(ids)
@@ -565,16 +199,12 @@ def _local_partitioned_graph(
     all_d = np.concatenate(d_parts)
     uniq_key, first = np.unique(all_key, return_index=True)  # exact dists → any dup ok
     cur_src, cur_dst, cur_d = uniq_key // c, uniq_key % c, all_d[first]
-    # top-k per src across the union before any polishing
+    # top-k per src across the union
     so = np.lexsort((ids[cur_dst], cur_d, cur_src))
     cur_src, cur_dst, cur_d = cur_src[so], cur_dst[so], cur_d[so]
     grp_start = np.searchsorted(cur_src, np.arange(c, dtype=np.int64))
     keep = (np.arange(len(cur_src)) - grp_start[cur_src]) < k_eff
     cur_src, cur_dst, cur_d = cur_src[keep], cur_dst[keep], cur_d[keep]
-    if polish_rounds:
-        cur_src, cur_dst, cur_d = _descent_rounds(
-            X, ids, cur_src, cur_dst, cur_d, k_eff, polish_rounds, polish_proposals
-        )
     return _finalize_edges(ids, cur_src, cur_dst, cur_d)
 
 
@@ -2033,21 +1663,6 @@ def insert_into_layered(
     # superseded index intentionally left persisted (may still be
     # serving in overlap mode) — callers release it via close()
     return LayeredGraphIndex(segs, C, index.nlist, degree, codec)
-
-
-def graph_quality(graph: DataFrame, truth: DataFrame) -> DataFrame:
-    """One-row graph recall: fraction of the exact kNN graph's edges
-    present in the built graph (the NN-descent convergence metric)."""
-    g = graph.select("src", "dst")
-    t = truth.select(F.col("q_id").alias("src"), F.col("vec_id").alias("dst")).filter(
-        F.col("src") != F.col("dst")
-    )
-    n_truth = t.count()
-    hit = t.join(g, ["src", "dst"]).count()
-    spark = graph.sparkSession
-    return spark.createDataFrame(
-        [(round(hit / max(n_truth, 1), 4), n_truth)], "graph_recall double, n_edges long"
-    )
 
 
 def materialize_layered2(

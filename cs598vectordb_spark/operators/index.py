@@ -1,17 +1,10 @@
 """Approximate-NN index builds — "index = materialized table" (SURVEY.md
-§2.3 T1/T2/T4).
+§2.3 T2/T4).
 
 The reference's indexes are opaque in-memory structures (HNSW graph
 dynamic_script_faiss.py:53-57, IVF-PQ multi_tenant_script.py:94-99). Spark
 has no graph index; the capability (sub-linear approximate top-k) is
 delivered the Spark-native way:
-
-* LSH (T1 analog): MLlib BucketedRandomProjectionLSH fit → the *hash
-  table* is materialized as rows (vec_id, table_idx, bucket). Search is a
-  bucket equi-join (query hashes ⋈ base hashes) → candidate set → exact
-  re-rank. OR-amplification across numHashTables. The join is the index
-  probe: at 100 TB the hash table is bucketed-by (table_idx, bucket) so
-  the probe shuffles only the (tiny) query side.
 
 * IVF (T2 analog): KMeans centroids (nlist) → base table written
   PARTITIONED BY centroid_id. A query probes its nprobe nearest
@@ -36,212 +29,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
-from cs598vectordb_spark.functions.distance import squared_l2
-
-# ------------------------------------------------------------------ LSH
-
-
-@dataclass
-class LshIndex:
-    """Materialized LSH index: hyperplane matrix + bucketed hash table.
-
-    projections has shape (num_tables * hashes_per_table, dim); table t's
-    compound bucket is the '|'-joined floors of its hashes_per_table
-    projections (AND-amplification within a table, OR across tables)."""
-
-    hash_table: DataFrame  # (vec_id, table_idx, bucket)
-    projections: np.ndarray
-    bucket_length: float
-    num_tables: int
-    hashes_per_table: int = 1
-
-    def close(self) -> None:
-        """Release the hash table if a caller persisted it (workload
-        protocols build per-snapshot indexes and must not leak them)."""
-        self.hash_table.unpersist()
-
-
-def _random_projections(num_tables: int, dim: int, seed: int = SEED) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    proj = rng.standard_normal((num_tables, dim))
-    return proj / np.linalg.norm(proj, axis=1, keepdims=True)
-
-
-def _hash_long(
-    df: DataFrame,
-    projections: np.ndarray,
-    bucket_length: float,
-    hashes_per_table: int,
-    vec_col: str,
-    keep_cols: list[str],
-    out_schema: str,
-) -> DataFrame:
-    """Long-form LSH hashing (one output row per input row per table) as a
-    single Arrow kernel: all num_tables × hashes_per_table projections are
-    ONE numpy GEMM per batch, then compound buckets are '|'-joined floors
-    (AND-amplification within a table, OR across tables).
-
-    This replaced a Catalyst formulation that inlined every hyperplane as
-    a 64-literal array with zip_with+aggregate per projection — a
-    multi-thousand-node expression tree that blew past codegen limits and
-    ran interpreted, ~10× slower than this kernel. The GEMM shape also
-    survives 100 TB: hashing is embarrassingly parallel, no shuffle."""
-    proj = projections
-    num_tables = proj.shape[0] // hashes_per_table
-
-    def kern(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            H = np.floor((V @ proj.T) / bucket_length).astype(np.int64)
-            per_table = [
-                ["|".join(map(str, row)) for row in H[:, t * hashes_per_table : (t + 1) * hashes_per_table]]
-                for t in range(num_tables)
-            ]
-            out = pdf[keep_cols].iloc[np.repeat(np.arange(n), num_tables)].reset_index(drop=True)
-            out["table_idx"] = np.tile(np.arange(num_tables, dtype=np.int32), n)
-            out["bucket"] = [per_table[t][i] for i in range(n) for t in range(num_tables)]
-            yield out
-
-    return df.mapInPandas(kern, out_schema)
-
-
-def build_lsh_index(
-    base: DataFrame,
-    bucket_length: float = 1.0,
-    num_tables: int = 8,
-    hashes_per_table: int = 1,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = SEED,
-) -> LshIndex:
-    """Fit + materialize: one long-form hash table (vec_id, table_idx,
-    bucket). Long form keeps the probe a plain equi-join and lets the
-    table be written bucketed by (table_idx, bucket) at scale."""
-    if dim is None:
-        dim = len(base.select(vec_col).first()[0])
-    proj = _random_projections(num_tables * hashes_per_table, dim, seed)
-    table = _hash_long(
-        base.select(id_col, vec_col),
-        proj,
-        bucket_length,
-        hashes_per_table,
-        vec_col,
-        keep_cols=[id_col],
-        out_schema=f"{id_col} long, table_idx int, bucket string",
-    )
-    return LshIndex(table, proj, bucket_length, num_tables, hashes_per_table)
-
-
-def _multiprobe_expand(q_long: DataFrame, hashes_per_table: int, n_probes: int) -> DataFrame:
-    """Multi-probe LSH (Lv et al., VLDB'07): besides the home bucket,
-    probe buckets whose LAST hash component is perturbed ±1, ±2, … —
-    the cheapest neighbors in hash space. Expansion happens on the query
-    side only (|Q|·T rows → |Q|·T·n_probes), so the base table and the
-    broadcast-join plan are untouched; recall rises without more tables."""
-    if n_probes <= 1:
-        return q_long
-    deltas = []
-    for i in range(1, n_probes):
-        deltas.append((i + 1) // 2 * (1 if i % 2 else -1))  # +1, -1, +2, -2, ...
-    parts = F.split(F.col("bucket"), r"\|")
-    last = F.element_at(parts, hashes_per_table).cast("long")
-    prefix = (
-        F.concat_ws("|", F.slice(parts, 1, hashes_per_table - 1))
-        if hashes_per_table > 1
-        else F.lit("")
-    )
-    variants = F.array(
-        F.col("bucket"),
-        *[
-            F.when(F.lit(hashes_per_table) > 1, F.concat(prefix, F.lit("|"), (last + d).cast("string")))
-            .otherwise((last + d).cast("string"))
-            for d in deltas
-        ],
-    )
-    return q_long.select(
-        "q_id", "table_idx", F.explode(variants).alias("bucket")
-    ).distinct()
-
-
-def lsh_candidates(
-    index: LshIndex,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probes: int = 1,
-) -> DataFrame:
-    """(q_id, vec_id) candidate set: OR-amplified bucket join. Dedup runs
-    on the bare id pair — re-attaching the query embedding happens after,
-    so the distinct never shuffles array payloads.
-
-    The query side is hashed on the DRIVER (numpy — the query batch is
-    driver-sized by design, same stance as knn_exact's broadcast): probing
-    costs zero distributed stages beyond the bucket join itself. Only the
-    base-side hash table is ever computed distributed."""
-    import pandas as pd
-
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    n = len(qpdf)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    h = index.hashes_per_table
-    num_tables = index.projections.shape[0] // h
-    H = np.floor((Q @ index.projections.T) / index.bucket_length).astype(np.int64)
-    q_long = queries.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {
-                "q_id": np.repeat(qpdf["q_id"].to_numpy(dtype=np.int64), num_tables),
-                "table_idx": np.tile(np.arange(num_tables, dtype=np.int32), n),
-                "bucket": [
-                    "|".join(map(str, H[i, t * h : (t + 1) * h]))
-                    for i in range(n)
-                    for t in range(num_tables)
-                ],
-            }
-        ),
-        "q_id long, table_idx int, bucket string",
-    )
-    q_long = _multiprobe_expand(q_long, index.hashes_per_table, n_probes)
-    return (
-        index.hash_table.join(F.broadcast(q_long), ["table_idx", "bucket"])
-        .select("q_id", id_col)
-        .distinct()
-    )
-
-
-def knn_lsh(
-    index: LshIndex,
-    base: DataFrame,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probes: int = 1,
-) -> DataFrame:
-    """Probe: hash queries with the same projections, bucket-join against
-    the hash table (OR over tables; n_probes>1 adds multi-probe neighbor
-    buckets), exact re-rank candidates.
-
-    Plan shape at scale: broadcast the hashed queries (small side) into
-    the join, dedupe candidates, then one exact-distance pass over
-    |candidates| rows — never over the full base."""
-    cand = lsh_candidates(index, queries, id_col, vec_col, n_probes)
-    qv = queries.select(F.col("q_id"), F.col(vec_col).alias("_q_emb"))
-    scored = (
-        cand.join(base.select(F.col(id_col), F.col(vec_col).alias("_b_emb")), id_col)
-        .join(F.broadcast(qv), "q_id")
-        .select("q_id", id_col, squared_l2("_q_emb", "_b_emb").alias("dist"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", F.col(id_col).alias("vec_id"), "dist")
-    )
-
 
 # ------------------------------------------------------------------ IVF
 
@@ -525,50 +312,6 @@ def build_ivf_index_mllib(
 
 
 # ------------------------------------------------------------- autotune
-
-
-def autotune_lsh(
-    base: DataFrame,
-    queries: DataFrame,
-    truth: DataFrame,
-    target_recall: float = 0.7,
-    k: int = DEFAULT_K,
-    grid: list[tuple[float, int]] | None = None,
-) -> tuple[dict, list[dict]]:
-    """T4: sweep (bucket_length, num_tables), score recall against the
-    exact oracle, return (best config clearing the target with the
-    fewest tables, full trace). Mirrors MRPT's autotune-to-0.9
-    (dynamic_script_mrpt.py:46)."""
-    from cs598vectordb_spark.operators.metrics import recall_at_k
-
-    grid = grid or [(0.1, 4), (0.1, 8), (0.25, 4), (0.25, 8), (0.5, 4), (0.5, 8), (1.0, 8)]
-    n_q = queries.count()
-    n_b = base.count()
-    trace = []
-    best = None
-    for bucket_length, num_tables in grid:
-        idx = build_lsh_index(base, bucket_length, num_tables)
-        # hash table feeds both the selectivity count and the search —
-        # persist so each grid point hashes the base exactly once
-        idx.hash_table = idx.hash_table.persist()
-        try:
-            # true probe cost: fraction of the |Q|×|B| product actually scored
-            n_cand = lsh_candidates(idx, queries).count()
-            selectivity = n_cand / (n_q * n_b) if n_q and n_b else 1.0
-            pred = knn_lsh(idx, base, queries, k)
-            rec = recall_at_k(pred, truth, k).collect()[0][0]
-        finally:
-            idx.hash_table.unpersist()
-        entry = {
-            "bucket_length": bucket_length,
-            "num_tables": num_tables,
-            "recall": rec,
-            "selectivity": round(selectivity, 4),
-        }
-        trace.append(entry)
-        if rec >= target_recall and (best is None or selectivity < best["selectivity"]):
-            best = entry
-    return best or {}, trace
 
 
 def autotune_ivf(

@@ -48,16 +48,6 @@ def _build_probe(backend: str, scratch_dir: str | None = None):
     auto-compaction policy bounds) instead of in-memory regroups."""
     if backend == "exact":
         return (lambda base: base), (lambda base, idx, queries, k: knn_exact(base, queries, k))
-    if backend == "lsh":
-        from cs598vectordb_spark.operators.index import build_lsh_index, knn_lsh
-
-        def build(base: DataFrame):
-            idx = build_lsh_index(base, bucket_length=2.0, num_tables=16, hashes_per_table=4)
-            idx.hash_table = idx.hash_table.persist()
-            idx.hash_table.count()
-            return idx
-
-        return build, (lambda base, idx, queries, k: knn_lsh(idx, base, queries, k))
     if backend == "ivf":
         from cs598vectordb_spark.operators.index import build_ivf_index, knn_ivf
 

@@ -1,7 +1,7 @@
-"""ANN-index + workload queries() entries (SURVEY.md §2.3 T1/T2/T4, §2.5).
+"""ANN-index + workload queries() entries (SURVEY.md §2.3 T2/T4, §2.5).
 
-These are the genuinely non-SQL-expressible ops (seeded random
-projections, k-means centroids, wall-clock metrics) — registered without
+These are the genuinely non-SQL-expressible ops (seeded k-means
+centroids, graph adjacency, wall-clock metrics) — registered without
 oracle_sql, so the driver records the weaker rows-only check. Their
 correctness contract lives in tests/test_index.py: recall floors vs the
 exact oracle (≥0.70, the reference's Annoy floor; autotuned target 0.9 —
@@ -16,13 +16,7 @@ from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, DEFAULT_N_QUERIES
 from cs598vectordb_spark.operators import workloads
-from cs598vectordb_spark.operators.index import (
-    autotune_lsh,
-    build_ivf_index,
-    build_lsh_index,
-    knn_ivf,
-    knn_lsh,
-)
+from cs598vectordb_spark.operators.index import build_ivf_index, knn_ivf
 from cs598vectordb_spark.operators.knn import knn_exact
 from cs598vectordb_spark.operators.metrics import (
     phase_regions,
@@ -60,23 +54,6 @@ def _warm(spark: SparkSession, key_parts: tuple, builder):
         idx = builder()
         _WARM[key] = idx
     return idx
-
-
-def lsh_index_for(
-    spark: SparkSession,
-    sf_dir: str,
-    bucket_length: float = 2.0,
-    num_tables: int = 16,
-    hashes_per_table: int = 4,
-):
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        idx = build_lsh_index(emb, bucket_length, num_tables, hashes_per_table)
-        idx.hash_table = idx.hash_table.persist()
-        idx.hash_table.count()  # materialize at build time, not first probe
-        return idx
-
-    return _warm(spark, ("lsh", sf_dir, bucket_length, num_tables, hashes_per_table), build)
 
 
 def ivf_index_for(spark: SparkSession, sf_dir: str, nlist: int = 16, mllib: bool = False):
@@ -136,23 +113,6 @@ def sq_artifacts_for(spark: SparkSession, sf_dir: str):
         return (codec, enc)
 
     return _warm(spark, ("sq8", sf_dir), build)
-
-
-def knn_graph_for(spark: SparkSession, sf_dir: str, k: int = 10):
-    """Flat kNN graph, built once per (session, sf_dir). Uses the
-    spill-partitioned exact builder (two shuffle stages, graph recall
-    ≥0.95 at spill=3/nlist=8 on sf0.1) — ~4x faster than the join-based
-    NN-descent rounds it replaced (build_knn_graph stays available as
-    the assumption-free fallback and for the refinement tests)."""
-    from cs598vectordb_spark.operators.graph import build_knn_graph_partitioned
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        g = build_knn_graph_partitioned(emb, k=k, spill=3, nlist=8).persist()
-        g.count()
-        return g
-
-    return _warm(spark, ("knng", sf_dir, k), build)
 
 
 def ivf2_index_for(
@@ -262,16 +222,12 @@ def warm_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
 
     out: dict[str, float] = {}
     for name, fn in (
-        ("lsh_build", lambda: lsh_index_for(spark, sf_dir)),
         ("ivf_build", lambda: ivf_index_for(spark, sf_dir)),
         ("ivf_materialize", lambda: ivf_materialized_for(spark, sf_dir)),
         ("pq_train_encode", lambda: pq_artifacts_for(spark, sf_dir)),
         ("sq8_train_encode", lambda: sq_artifacts_for(spark, sf_dir)),
         ("ivf_sq8_build", lambda: ivf_sq_index_for(spark, sf_dir)),
         ("ivfpq_build", lambda: ivfpq_index_for(spark, sf_dir)),
-        # flat knn_graph build removed from the warm set: its probe is no
-        # longer a headline query (superseded by layered2), and the warm
-        # registry builds it lazily if the rows-only variants are called.
         ("layered_graph_build", lambda: layered_graph_for(spark, sf_dir)),
         ("ivf2_build", lambda: ivf2_index_for(spark, sf_dir)),
         ("layered_graph_sq8_build", lambda: layered_graph_sq8_for(spark, sf_dir)),
@@ -284,32 +240,6 @@ def warm_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         fn()
         out[name] = round(_time.time() - t0, 3)
     return out
-
-
-@register("knn_lsh")
-def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1/Q2: LSH bucket-join approximate kNN (AND×4, OR×16, bl=2.0 —
-    the autotuned high-recall point on this data). Index from the warm
-    registry: first call builds + persists, later calls probe only.
-
-    DATA-LIMITATION NOTE (measured, sf0.1): on this isotropic synthetic
-    embedding table the recall/selectivity frontier is recall 0.94 at
-    0.64 candidate selectivity, 0.90 at 0.66 (multiprobe T=8), 0.59 at
-    0.24, 0.31 at 0.07 — identical across bucket lengths, i.e. a
-    property of the data, not of tuning. High-recall LSH here scores
-    ~2/3 of the |Q|x|B| product, so it cannot beat the pruned-kernel
-    probes; IVF (materialized) and SQ8 are the engine's approximate
-    paths of record (140-175+ QPS at >=0.9 recall), with layered-graph
-    for update-heavy serving. LSH remains the right tool when data has
-    genuine cluster structure, and the autotune sweep (lsh_autotune)
-    measures exactly when that is true. Bench records the measured
-    selectivity per run (extra.lsh_selectivity); as of round 5 the op is
-    OFF the bench headline (a probe whose candidate set is 64% of the
-    cross product is a full scan at 100× scale) and stays a registered,
-    recall-floor-tested operator."""
-    emb, q = _setup(spark, sf_dir)
-    idx = lsh_index_for(spark, sf_dir)
-    return knn_lsh(idx, emb, q, k=_K).select("q_id", "rank", "vec_id")
 
 
 @register("knn_ivf")
@@ -332,33 +262,11 @@ def q_knn_ivf_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_ivf(idx, q, k=_K, nprobe=8).select("q_id", "rank", "vec_id")
 
 
-@register("lsh_recall")
-def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of knn_lsh vs exact — the reference's headline metric."""
-    emb, q = _setup(spark, sf_dir)
-    idx = lsh_index_for(spark, sf_dir)
-    return recall_at_k(knn_lsh(idx, emb, q, _K), knn_exact(emb, q, _K), _K)
-
-
 @register("ivf_recall")
 def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, q = _setup(spark, sf_dir)
     idx = ivf_index_for(spark, sf_dir, nlist=16)
     return recall_at_k(knn_ivf(idx, q, _K, nprobe=8), knn_exact(emb, q, _K), _K)
-
-
-@register("lsh_autotune")
-def q_lsh_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T4: the autotune sweep trace (param grid × recall × probe cost);
-    the chosen config is the cheapest clearing the 0.7 floor."""
-    emb, q_full = _setup(spark, sf_dir)
-    q = q_full.limit(20)
-    truth = knn_exact(emb, q, _K)
-    _, trace = autotune_lsh(emb, q, truth, target_recall=0.7, k=_K)
-    return spark.createDataFrame(
-        [(t["bucket_length"], t["num_tables"], t["recall"], t["selectivity"]) for t in trace],
-        "bucket_length double, num_tables int, recall double, selectivity double",
-    )
 
 
 @register("bench_loop")
@@ -693,25 +601,6 @@ def q_pq_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recall_at_k(knn_pq_refined(enc, cb, emb, q, _K), knn_exact(emb, q, _K), _K)
 
 
-@register("knn_graph")
-def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/graph: batched beam search over the flat kNN graph — the
-    engine's analog of the reference's headline HNSW family
-    (dynamic_script_faiss.py:53-57), as set-at-a-time DataFrame hops.
-    The graph now comes from the spill-partitioned exact builder (graph
-    recall ≥0.95, two shuffle stages); the layered index is the probe
-    path of record, this flat walk stays as the set-at-a-time variant.
-    Deterministic (hash seeds) but graph-structure-dependent → rows-only;
-    recall floors live in graph_search_recall and tests."""
-    from cs598vectordb_spark.operators.graph import knn_graph_search
-
-    emb, q = _setup(spark, sf_dir)
-    g = knn_graph_for(spark, sf_dir)
-    return knn_graph_search(g, emb, q, k=_K, beam=20, hops=3).select(
-        "q_id", "rank", "vec_id"
-    )
-
-
 @register("knn_graph_layered")
 def q_knn_graph_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2/layered graph: centroid top layer prunes to the nprobe nearest
@@ -719,8 +608,8 @@ def q_knn_graph_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow kernel (best-first beam, numpy), one window merges. The
     per-segment-graph + cross-segment-merge architecture is how the
     reference's Milvus backend serves HNSW at scale
-    (dynamic_script_milvus.py:76-82); vs the flat knn_graph beam it
-    replaces ~12 per-hop stages with 2."""
+    (dynamic_script_milvus.py:76-82); vs a flat DataFrame beam search
+    it replaces ~12 per-hop stages with 2."""
     from cs598vectordb_spark.operators.graph import knn_graph_layered
 
     _, q = _setup(spark, sf_dir)
@@ -795,29 +684,6 @@ def q_graph_layered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("graph_quality")
-def q_graph_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph-quality metric: fraction of true kNN edges present in the
-    built graph (over the query sample's exact neighborhoods)."""
-    from cs598vectordb_spark.operators.graph import graph_quality
-
-    emb, q = _setup(spark, sf_dir)
-    g = knn_graph_for(spark, sf_dir)
-    return graph_quality(g, knn_exact(emb, q, _K))
-
-
-@register("graph_search_recall")
-def q_graph_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of graph beam search vs exact."""
-    from cs598vectordb_spark.operators.graph import knn_graph_search
-
-    emb, q = _setup(spark, sf_dir)
-    g = knn_graph_for(spark, sf_dir)
-    return recall_at_k(
-        knn_graph_search(g, emb, q, _K, beam=20, hops=3), knn_exact(emb, q, _K), _K
-    )
-
-
 @register("knn_ivf_sq8")
 def q_knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2/IVF+SQ8: compressed inverted lists — probe reads nprobe/nlist
@@ -864,16 +730,6 @@ def q_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, q = _setup(spark, sf_dir)
     codec, enc = sq_artifacts_for(spark, sf_dir)
     return recall_at_k(knn_sq(enc, codec, q, _K), knn_exact(emb, q, _K), _K)
-
-
-@register("knn_lsh_multiprobe")
-def q_knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1/Q2 multi-probe variant (Lv et al., VLDB'07): half the hash
-    tables (T=8) probing ±1-perturbed neighbor buckets — recall ~0.90 at
-    the T=16 single-probe candidate budget, with half the index storage."""
-    emb, q = _setup(spark, sf_dir)
-    idx = lsh_index_for(spark, sf_dir, num_tables=8)
-    return knn_lsh(idx, emb, q, k=_K, n_probes=3).select("q_id", "rank", "vec_id")
 
 
 @register("knn_ivf2")

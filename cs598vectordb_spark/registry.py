@@ -283,17 +283,12 @@ _ROWS_ONLY_EVIDENCE: dict[str, str] = {
     "media_resize": "tests/test_multimodal.py::test_resize_plan_matches_metadata",
     # vector / PCA
     "pca_spectrum": "tests/test_knn.py::test_pca_invariants",
-    # LSH family
-    "knn_lsh": "tests/test_index.py::test_lsh_recall_floor",
-    "lsh_recall": "tests/test_index.py::test_lsh_recall_floor",
-    "knn_lsh_multiprobe": "tests/test_index.py::test_multiprobe_raises_recall_over_single_probe",
-    "lsh_autotune": "tests/test_index.py::test_autotune_meets_target",
     # IVF family
     "knn_ivf": "tests/test_index.py::test_ivf_recall_floor",
     "ivf_recall": "tests/test_index.py::test_ivf_recall_floor",
     "knn_ivf_materialized": "tests/test_plans.py::test_ivf_partition_pruning_and_equality",
     "knn_ivf_mllib": "tests/test_index.py::test_ivf_mllib_recall_floor",
-    "ivf_autotune": "tests/test_index.py::test_ivf_recall_floor",
+    "ivf_autotune": "tests/test_index.py::test_autotune_meets_target",
     "knn_ivf_sq8": "tests/test_index.py::test_ivf_sq8_pruned_and_recall",
     "ivf_sq8_recall": "tests/test_index.py::test_ivf_sq8_pruned_and_recall",
     "knn_ivf2": "tests/test_index.py::test_ivf2_recall_and_full_probe_exact",
@@ -326,10 +321,7 @@ _ROWS_ONLY_EVIDENCE: dict[str, str] = {
     "dynamic_ivfpq": "tests/test_updates_metrics.py::test_dynamic_ivfpq_recovers_recall",
     "dynamic_overlap_ivfpq": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
     # graph family
-    "knn_graph": "tests/test_index.py::test_knn_graph_monotone_refinement_and_search_recall",
-    "graph_quality": "tests/test_index.py::test_knn_graph_monotone_refinement_and_search_recall",
-    "graph_search_recall": "tests/test_index.py::test_knn_graph_monotone_refinement_and_search_recall",
-    "knn_graph_materialized": "tests/test_index.py::test_partitioned_flat_graph_build",
+    "knn_graph_materialized": "tests/test_index.py::test_layered_graph_materialize_roundtrip",
     "knn_graph_layered": "tests/test_index.py::test_layered_graph_recall_and_merge",
     "graph_layered_recall": "tests/test_index.py::test_layered_graph_recall_and_merge",
     "knn_graph_sq8": "tests/test_index.py::test_layered_graph_sq8_recall_and_incremental",

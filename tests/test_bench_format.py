@@ -41,7 +41,6 @@ def _worst_case_out() -> dict:
             "knn_exact_5k_qps": 4123.4,
             "knn_exact_10k_qps": 6123.4,
             "load_avg": {"start": [31.25, 30.11, 29.87], "end": [33.5, 31.2, 30.0]},
-            "lsh_selectivity": 0.6412,
             "graph2_autotune_best": {
                 "nprobe1": 4, "nprobe2": 12, "beam": 32,
                 "recall": 0.92, "selectivity": 0.75,

@@ -57,7 +57,7 @@ def test_knn_join_full_probe_matches_bruteforce(spark, sf_dir):
 
 
 def test_knn_join_partial_probe_recall_floor(spark, sf_dir):
-    """nprobe=4 of the derived nlist clears the LSH-family 0.70 floor
+    """nprobe=4 of the derived nlist clears the reference's 0.70 Annoy floor
     EVEN ON THIS fixture, whose embeddings are directionally
     near-isotropic (only ~9% of true cosine neighbors share the
     query's label — measured r15), the worst case for any blocking;

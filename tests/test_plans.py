@@ -17,13 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K
-from cs598vectordb_spark.operators.index import (
-    build_ivf_index,
-    build_lsh_index,
-    knn_ivf,
-    knn_lsh,
-    materialize_ivf,
-)
+from cs598vectordb_spark.operators.index import build_ivf_index, knn_ivf, materialize_ivf
 from cs598vectordb_spark.operators.knn import knn_exact
 from cs598vectordb_spark.sources.tables import load_table, queries_from_embeddings
 
@@ -67,14 +61,6 @@ def test_ivf_partition_pruning_and_equality(spark, sf_dir, emb_q, tmp_path):
     a = sorted(map(tuple, pruned.select("q_id", "rank", "vec_id").collect()))
     b = sorted(map(tuple, memory.select("q_id", "rank", "vec_id").collect()))
     assert a == b
-
-
-def test_lsh_probe_is_broadcast_join(spark, emb_q):
-    emb, q = emb_q
-    idx = build_lsh_index(emb, bucket_length=2.0, num_tables=8, hashes_per_table=2)
-    plan = plan_of(knn_lsh(idx, emb, q, k=DEFAULT_K))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_topk_uses_window_group_limit(spark, emb_q):
