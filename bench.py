@@ -653,15 +653,13 @@ def main() -> int:
         "knn_ivfpq",
         "knn_sq8",
         "knn_ivf_sq8",
-        # layered/layered2/sq8 are the graph paths of record: each probe
-        # walks its segments inside one Arrow kernel.
-        "knn_graph_layered",
+        # layered2 is the graph path of record: each probe walks its
+        # segments inside one Arrow kernel.
         "knn_graph_layered2",
         # the r13 worker-served mode (probes pull cached decoded
         # segments worker-side instead of shipping the payload per
         # batch — the 1M crossover path; see large_base_1m detail)
         "knn_graph2_served",
-        "knn_graph_sq8",
         "recall_low_dim",
         "knn_post_delete",
         # io surface
@@ -1732,52 +1730,6 @@ def main() -> int:
             "recall_vs_exact": ipq_rec_mt,
         }
 
-    # the COMPRESSED layered family through the batcher (r15): the
-    # SQ8-segment index is the backend built FOR high tenant counts
-    # (4× more resident segments per worker-cache byte) and was the
-    # last serving family still paying the saturating unbatched path.
-    # One 50-tenant point at 1M; nlist ∝ rows (~1k rows/segment, the
-    # grid discipline), codec inside the walk kernel. Runs here, still
-    # before the maintenance blocks (the concurrency-measurement
-    # placement rule).
-    from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        knn_graph_layered,
-    )
-    from cs598vectordb_spark.operators.serving import probe_fn_for
-
-    t0 = time.time()
-    lb1m_sq8 = build_layered_graph(lb1m, nlist=1024, degree=16, compress=True)
-    sq8_build_s = round(time.time() - t0, 1)
-    sq8_kw = dict(nprobe=12, beam=32, rounds=3, n_entry=8)
-    probe_bs = probe_fn_for(spark, "graph_sq8", lb1m_sq8, k=10, **sq8_kw)
-    probe_bs(qpdf_mt)  # warm the merged-probe path once
-    truth_mt3 = knn_exact(lb1m, q_mt, 10).persist()
-    truth_mt3.count()
-    sq8_rec = recall_at_k(
-        knn_graph_layered(lb1m_sq8, q_mt, 10, **sq8_kw), truth_mt3, 10
-    ).collect()[0]["recall"]
-    truth_mt3.unpersist()
-    for n_clients in (50,):
-        batcher = DynamicBatcher(probe_bs, max_wait_ms=50.0)
-
-        def _bts_client(i: int) -> float:
-            t0 = time.time()
-            batcher.submit(qpdf_mt)
-            return max(time.time() - t0, 1e-9)
-
-        with _MTPool(max_workers=n_clients) as pool:
-            walls = list(pool.map(_bts_client, range(n_clients)))
-        multi_tenant_1m[f"batched_sq8_{n_clients}"] = {
-            "sum_qps": round(sum(200.0 / w for w in walls), 1),
-            "avg_latency_ms": round(1000 * sum(walls) / len(walls), 1),
-            "wall_s": round(max(walls), 3),
-            "n_probe_calls": batcher.n_probe_calls,
-            "recall_vs_exact": sq8_rec,
-            "build_s": sq8_build_s,
-        }
-    lb1m_sq8.segments.unpersist()
-
     # dynamic protocol at SIFT1M shape (VERDICT r12 item 8): the
     # reference's signature experiment is QPS/recall through
     # delete-25% → reinsert (dynamic_script_faiss.py:75-117;
@@ -2184,8 +2136,8 @@ def main() -> int:
             n: qps(n)
             for n in (
                 "knn_ivf_materialized", "knn_ivf2", "knn_pq_refined",
-                "knn_ivfpq", "knn_sq8", "knn_ivf_sq8", "knn_graph_layered",
-                "knn_graph_layered2", "knn_graph2_served", "knn_graph_sq8",
+                "knn_ivfpq", "knn_sq8", "knn_ivf_sq8", "knn_graph_layered2",
+                "knn_graph2_served",
             )
         },
         "cold_pass_per_query": cold,

@@ -3,16 +3,15 @@ FAISS IndexHNSWFlat, dynamic_script_faiss.py:53-57), re-expressed for
 Spark instead of as a pointer-chasing in-memory graph.
 
 Spark cannot mutate a shared graph during traversal, so the index is
-segmented: a k-means coarse layer prunes each query to a few segments,
-and every segment holds an exact (or spill-partitioned) kNN subgraph
-that one Arrow kernel walks best-first in numpy.
+segmented: a two-level k-means coarse layer (operators/ivf2) prunes each
+query to a few segments, and every segment holds an exact (or
+spill-partitioned) kNN subgraph that one Arrow kernel walks best-first
+in numpy.
 
-* ``build_layered_graph`` / ``knn_graph_layered`` — one-level coarse
-  layer (driver-sized centroids, the Milvus per-segment-HNSW shape).
-* ``build_layered_graph2`` / ``knn_graph_layered2`` — the same
-  segments over the two-level ivf2 coarse layer, so segment count
-  scales past any driver-sized top layer; served by worker-cached
-  segments (``open_layered2(served=True)``) on the read path of record.
+* ``build_layered_graph2`` / ``knn_graph_layered2`` — the segmented
+  graph; segment count scales as nlist1·nlist2 past any driver-sized
+  top layer. Served by worker-cached segments
+  (``open_layered2(served=True)``) on the read path of record.
 
 Determinism: segment builds are seeded k-means plus exact edges with
 id tie-breaks — identical graphs and results across runs; recall
@@ -40,53 +39,23 @@ from cs598vectordb_spark.config import DEFAULT_K, SEED
 # (/root/reference/dynamic_script_milvus.py:76-82 HNSW index on a
 # sharded collection). Spark rendering:
 #
-#   top layer  = k-means centroids (driver-sized, like IVF) — prune to
-#                the nprobe nearest segments per query;
+#   top layer  = the ivf2 two-level pruner: L1 (driver-sized) prunes to
+#                nprobe1 cells, ONLY those cells' L2 sub-centroid rows
+#                are pulled (bounded: nprobe1·nlist2 — never the full L2
+#                matrix), and the nprobe2 nearest (l1, l2) sub-cells are
+#                the probed segments;
 #   base layer = a per-segment kNN subgraph, co-partitioned with its
 #                vectors, walked ENTIRELY inside one Arrow kernel
 #                (best-first beam search in numpy — no per-hop stages).
 #
 # Probe plan: filter(probed segments) → applyInPandas walk → one global
 # top-k window. The segment table is persisted repartition()ed on
-# centroid_id, so the groupBy before the kernel needs NO exchange
+# segment_id, so the groupBy before the kernel needs NO exchange
 # (asserted in tests/test_plans.py); the only shuffle carries
-# ≤ nprobe·|Q|·k candidate rows. At 100 TB each segment is a few million
-# vectors whose subgraph a single executor walks in memory — the
-# DiskANN/SPANN sharding story — while segment count scales out.
-
-
-class LayeredGraphIndex:
-    """Per-segment kNN subgraphs + driver-sized centroid top layer.
-    With `codec` set, segments store SQ8 codes instead of float vectors
-    (4x less executor memory per resident segment — the DiskANN-style
-    compressed-graph-in-RAM trade) and the walk kernel reconstructs
-    on the fly."""
-
-    def __init__(
-        self,
-        segments: DataFrame,
-        centroids: np.ndarray,
-        nlist: int,
-        degree: int,
-        codec=None,
-        serve_dir: str | None = None,  # worker-served mode (open_layered)
-    ):
-        self.segments = segments  # (centroid_id, vec_id, embedding|codes, nbr_ids)
-        self.centroids = centroids
-        self.nlist = nlist
-        self.degree = degree
-        self.codec = codec  # operators.sq.SqCodec or None
-        self.serve_dir = serve_dir
-
-    def close(self) -> None:
-        """Release the persisted segment table. Maintenance ops
-        (delete_from_layered / insert_into_layered) intentionally leave
-        the superseded version persisted — in overlap mode it is still
-        serving probes while the new one builds — so the protocol driver
-        calls close() once the replacement is recorded as serving;
-        without it a long delete/insert sweep accumulates one persisted
-        index copy per maintenance step."""
-        self.segments.unpersist()
+# ≤ nprobe2·|Q|·k candidate rows. Segment count scales as nlist1·nlist2
+# with driver memory holding only nlist1 centroids + the probed L2 rows;
+# at 100 TB each segment is a few million vectors whose subgraph a single
+# executor walks in memory — the DiskANN/SPANN sharding story.
 
 
 def _local_knn_graph(
@@ -208,84 +177,6 @@ def _local_partitioned_graph(
     return _finalize_edges(ids, cur_src, cur_dst, cur_d)
 
 
-def build_layered_graph(
-    base: DataFrame,
-    nlist: int = 16,
-    degree: int = 16,
-    exact_segment_rows: int = 16_384,
-    compress: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = SEED,
-) -> LayeredGraphIndex:
-    """Assign vectors to k-means segments (reusing the IVF trainer), then
-    build each segment's kNN subgraph inside one applyInPandas stage and
-    persist the (segment, vector, adjacency) table hash-partitioned on
-    centroid_id so probes reach the walk kernel exchange-free."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from cs598vectordb_spark.operators.index import build_ivf_index
-
-    ivf = build_ivf_index(base, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed)
-    vec_type = base.schema[vec_col].dataType
-    out_schema = StructType(
-        [
-            StructField("centroid_id", IntegerType()),
-            StructField(id_col, LongType()),
-            StructField(vec_col, vec_type),
-            StructField("nbr_ids", ArrayType(LongType())),
-        ]
-    )
-
-    def seg_graph(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        X = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
-        if len(ids) <= 1:
-            nbrs = [np.array([], dtype=np.int64)] * len(ids)
-        elif len(ids) <= exact_segment_rows:
-            nbrs, _ = _local_knn_graph(X, ids, degree)
-        else:
-            # oversized segments: spill-partitioned build — linear in
-            # |seg| (vs the exact path's quadratic), memory bounded by
-            # the blocked scorer. Edge recall ≈1.0 on clusterable data,
-            # ~0.5-0.7 on worst-case isotropic vectors (measured; beam
-            # search tolerates imperfect edges, and the layered probe's
-            # recall ceiling is the IVF prune, not subgraph quality).
-            nbrs, _ = _local_partitioned_graph(X, ids, degree)
-        return pd.DataFrame(
-            {
-                "centroid_id": pdf["centroid_id"],
-                id_col: ids,
-                vec_col: pdf[vec_col],
-                "nbr_ids": nbrs,
-            }
-        )
-
-    segs = ivf.assigned.groupBy("centroid_id").applyInPandas(seg_graph, out_schema)
-    codec = None
-    if compress:
-        # graph edges were chosen from exact float distances; the STORED
-        # payload is the int8 codes — the walk reconstructs per batch
-        from cs598vectordb_spark.operators.sq import sq_encode, train_sq
-
-        codec = train_sq(base, vec_col=vec_col)
-        segs = sq_encode(
-            segs, codec, vec_col=vec_col, id_col=id_col,
-            extra_cols=["centroid_id", "nbr_ids"],
-        )
-    segments = segs.repartition(nlist, "centroid_id").persist()
-    segments.count()
-    return LayeredGraphIndex(segments, ivf.centroids, nlist, degree, codec)
-
-
 def _beam_walk_block(
     ids: np.ndarray,
     X: np.ndarray,
@@ -336,11 +227,9 @@ def _beam_walk_block(
 
 def _walk_probed_segments(
     segments: DataFrame,
-    key_col: str,
     probed: dict[int, np.ndarray],
     q_ids: np.ndarray,
     Q: np.ndarray,
-    codec,
     k: int,
     beam: int,
     rounds: int,
@@ -348,39 +237,33 @@ def _walk_probed_segments(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Shared probe tail for every layered-graph variant: filter the
-    segment table to the probed keys, walk each probed segment's subgraph
-    for all of its queries inside ONE applyInPandas kernel (best-first
-    beam in numpy — no per-hop Spark stages), then merge with a single
-    per-query window. `probed` maps segment key → indices into Q; both
-    are driver-sized by design (the query batch is the one by-design
-    driver-side collect). With a codec the kernel reconstructs int8 codes
-    on the fly."""
+    """Probe tail of the pinned and cold serving modes: filter the
+    segment table to the probed segment ids, walk each probed segment's
+    subgraph for all of its queries inside ONE applyInPandas kernel
+    (best-first beam in numpy — no per-hop Spark stages), then merge
+    with a single per-query window. `probed` maps segment_id → indices
+    into Q; both are driver-sized by design (the query batch is the one
+    by-design driver-side collect)."""
     import pandas as pd
 
     spark = segments.sparkSession
-    codec_arrs = (codec.mins, codec.ranges) if codec is not None else None
-    data_col = "codes" if codec is not None else vec_col
     # pooled: repeated probes (streams, tenant loops) must not
     # accumulate per-call broadcasts — see _pooled_broadcast
-    bc = _pooled_broadcast(spark, (q_ids, Q, probed, codec_arrs))
+    bc = _pooled_broadcast(spark, (q_ids, Q, probed))
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        bq_ids, bQ, bprobed, bcodec = bc.value
+        bq_ids, bQ, bprobed = bc.value
         empty = pd.DataFrame({"q_id": [], "vec_id": [], "dist": []}).astype(
             {"q_id": np.int64, "vec_id": np.int64, "dist": np.float64}
         )
         if len(pdf) == 0:
             return empty
-        qsel = bprobed.get(int(pdf[key_col].iloc[0]))
+        qsel = bprobed.get(int(pdf["segment_id"].iloc[0]))
         if qsel is None or len(qsel) == 0:
             return empty
         pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        X = np.ascontiguousarray(np.stack(pdf[data_col].to_numpy()), dtype=np.float64)
-        if bcodec is not None:  # reconstruct from int8 codes
-            mns, rngs = bcodec
-            X = mns[None, :] + X / 255.0 * rngs[None, :]
+        X = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
         c = len(ids)
         # adjacency in local-position space (ids are sorted → searchsorted).
         # Edges to ids NOT in the segment (stale after incremental deletes)
@@ -413,8 +296,8 @@ def _walk_probed_segments(
         )
 
     local = (
-        segments.filter(F.col(key_col).isin(sorted(probed)))
-        .groupBy(key_col)
+        segments.filter(F.col("segment_id").isin(sorted(probed)))
+        .groupBy("segment_id")
         .applyInPandas(walk, "q_id long, vec_id long, dist double")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
@@ -483,7 +366,7 @@ def _read_epoch(seg_dir: str) -> str | None:
 
 
 # Bounded pool of live probe broadcasts. Every probe call broadcasts its
-# (queries, probed-map, codec) block; a long-running served stream (one
+# (queries, probed-map) block; a long-running served stream (one
 # probe per micro-batch) would otherwise accumulate broadcasts for the
 # life of the stream (ADVICE r13). Eviction uses unpersist(), NOT
 # destroy(): an evicted broadcast still referenced by an in-flight
@@ -523,28 +406,23 @@ def _seg_cache_cap() -> int:
 
 def _served_segment(
     seg_dir: str,
-    key_col: str,
     sid: int,
     id_col: str,
-    data_col: str,
-    codec_arrs=None,
+    vec_col: str,
     epoch: str | None = None,
 ):
     """Decode one materialized segment into the walk kernel's arrays,
-    LRU-cached in this worker process. The payload column is cached in
+    LRU-cached in this worker process. The vector column is cached in
     its SOURCE dtype — float32 for array<float> layouts (half the
-    bytes), int8/int16 for SQ8 code layouts (the compressed-graph
-    memory win survives serving) — and upcast/reconstructed to float64
-    per walk, which replays the Arrow path's own math exactly, so
-    served results are bit-identical to the payload-shipping path.
-    `codec_arrs` (mins, ranges) is only used to precompute sq_x over
-    the reconstructed values. Staleness: the cache key carries the
+    bytes) — and upcast to float64 per walk, which replays the Arrow
+    path's own math exactly, so served results are bit-identical to
+    the payload-shipping path. Staleness: the cache key carries the
     index's `epoch` stamp (the _EPOCH sidecar materialize_* rewrites
     on every overwrite — store-agnostic), falling back to the
     partition directory's mtime for pre-epoch indexes, so an index
     REBUILT in place at the same path can never be served from a stale
     worker cache — the superseded entry just ages out of the LRU."""
-    part = os.path.join(seg_dir, f"{key_col}={sid}")
+    part = os.path.join(seg_dir, f"segment_id={sid}")
     key = (
         seg_dir,
         int(sid),
@@ -557,10 +435,10 @@ def _served_segment(
         return hit
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(part, columns=[id_col, data_col, "nbr_ids"])
+    tbl = pq.read_table(part, columns=[id_col, vec_col, "nbr_ids"])
     ids_raw = tbl.column(id_col).to_numpy()
     c = len(ids_raw)
-    emb = tbl.column(data_col).combine_chunks()
+    emb = tbl.column(vec_col).combine_chunks()
     X = emb.flatten().to_numpy(zero_copy_only=False).reshape(c, -1)
     order = np.argsort(ids_raw, kind="stable")
     ids = np.ascontiguousarray(ids_raw[order], dtype=np.int64)
@@ -579,9 +457,6 @@ def _served_segment(
         for s, e in ((noff[o], noff[o + 1]) for o in order)
     ]
     X64 = np.ascontiguousarray(X, dtype=np.float64)
-    if codec_arrs is not None:
-        mns, rngs = codec_arrs
-        X64 = mns[None, :] + X64 / 255.0 * rngs[None, :]
     sq_x = np.square(X64).sum(axis=1)
     nbytes = (
         ids.nbytes + X.nbytes + sq_x.nbytes
@@ -602,11 +477,9 @@ def _served_segment(
 def _walk_served_segments(
     spark,
     seg_dir: str,
-    key_col: str,
     probed: dict[int, np.ndarray],
     q_ids: np.ndarray,
     Q: np.ndarray,
-    codec,
     k: int,
     beam: int,
     rounds: int,
@@ -618,44 +491,35 @@ def _walk_served_segments(
     (segment_id) list — ONE int row per probed segment — and the walk
     kernel pulls segment payloads worker-side via `_served_segment`.
     Same query broadcast, same `_beam_walk_block`, same window merge as
-    `_walk_probed_segments`; only the payload transport differs. With
-    a codec (SQ8 segments) the worker caches the int8 codes — the
-    compressed index's 4× memory advantage carries into the serving
-    cache — and reconstructs per walk."""
+    `_walk_probed_segments`; only the payload transport differs."""
     import pandas as pd
 
-    codec_arrs = (codec.mins, codec.ranges) if codec is not None else None
-    data_col = "codes" if codec is not None else vec_col
-    bc = _pooled_broadcast(spark, (q_ids, Q, probed, codec_arrs))
+    bc = _pooled_broadcast(spark, (q_ids, Q, probed))
     sids = sorted(int(s) for s in probed)
     width = max(1, min(len(sids), 2 * spark.sparkContext.defaultParallelism))
-    sdf = spark.createDataFrame([(s,) for s in sids], f"{key_col} int")
+    sdf = spark.createDataFrame([(s,) for s in sids], "segment_id int")
 
     def serve(batches):
-        bq_ids, bQ, bprobed, barrs = bc.value
+        bq_ids, bQ, bprobed = bc.value
         epoch = _read_epoch(seg_dir)  # once per task, not per segment
         for pdf in batches:
-            for sid in pdf[key_col].tolist():
+            for sid in pdf["segment_id"].tolist():
                 qsel = bprobed.get(int(sid))
                 if qsel is None or len(qsel) == 0:
                     continue
-                # a probed centroid with ZERO assigned vectors has no
-                # partition directory (open_layered's probed keys come
-                # from ALL k-means centroids, and _kmeans_fit never
-                # reseeds empty clusters) — skip it like the Arrow
-                # path's empty-segment semantics, don't fail the job
-                # (ADVICE r13 medium). layered2 keys derive from the
-                # assignment itself, so this branch is l1-path-only.
-                if not os.path.isdir(os.path.join(seg_dir, f"{key_col}={sid}")):
+                # a probed sub-cell can have NO partition directory:
+                # probed keys come from l2_table rows, and a sub-cell
+                # holding no vectors writes no segment_id=K/ directory —
+                # e.g. when deletes empty a sub-cell and the index is
+                # then re-materialized, l2_table keeps that row. Skip it
+                # like the Arrow path's empty-segment semantics, don't
+                # fail the job (ADVICE r13 medium).
+                if not os.path.isdir(os.path.join(seg_dir, f"segment_id={sid}")):
                     continue
                 ids, Xs, nbr_pos, sq_x, _ = _served_segment(
-                    seg_dir, key_col, int(sid), id_col, data_col, barrs,
-                    epoch=epoch,
+                    seg_dir, int(sid), id_col, vec_col, epoch=epoch
                 )
                 X = np.ascontiguousarray(Xs, dtype=np.float64)
-                if barrs is not None:
-                    mns, rngs = barrs
-                    X = mns[None, :] + X / 255.0 * rngs[None, :]
                 out_q, out_id, out_d = _beam_walk_block(
                     ids, X, nbr_pos, sq_x, bQ, bq_ids, qsel,
                     k, beam, rounds, n_entry,
@@ -669,7 +533,7 @@ def _walk_served_segments(
                         }
                     )
 
-    local = sdf.repartition(width, key_col).mapInPandas(
+    local = sdf.repartition(width, "segment_id").mapInPandas(
         serve, "q_id long, vec_id long, dist double"
     )
     w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
@@ -678,81 +542,6 @@ def _walk_served_segments(
         .filter(F.col("rank") <= k)
         .select("q_id", "rank", "vec_id", "dist")
     )
-
-
-def knn_graph_layered(
-    index: LayeredGraphIndex,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    nprobe: int = 8,
-    beam: int = 24,
-    rounds: int = 3,
-    n_entry: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(q_id, rank, vec_id, dist): centroid-pruned per-segment beam walk.
-    Top layer scored driver-side (queries and centroids are both
-    driver-sized, exactly like knn_ivf); each probed segment walks its
-    subgraph for all of its queries inside ONE kernel invocation; a single
-    window merges the ≤ nprobe·|Q|·k candidates globally."""
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    d2 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ index.centroids.T)
-        + np.square(index.centroids).sum(1)[None, :]
-    )
-    nearest = np.argsort(d2, axis=1)[:, : min(nprobe, index.nlist)]
-    probed: dict[int, list[int]] = {}
-    for j, row in enumerate(nearest):
-        for cid in row:
-            probed.setdefault(int(cid), []).append(j)
-    probed_np = {
-        cid: np.asarray(js, dtype=np.int64) for cid, js in probed.items()
-    }
-    if getattr(index, "serve_dir", None) is not None:
-        return _walk_served_segments(
-            index.segments.sparkSession,
-            index.serve_dir,
-            "centroid_id",
-            probed_np,
-            q_ids,
-            Q,
-            index.codec,
-            k,
-            beam,
-            rounds,
-            n_entry,
-            id_col,
-            vec_col,
-        )
-    return _walk_probed_segments(
-        index.segments,
-        "centroid_id",
-        probed_np,
-        q_ids,
-        Q,
-        index.codec,
-        k,
-        beam,
-        rounds,
-        n_entry,
-        id_col,
-        vec_col,
-    )
-
-
-# ---- layered graph over a TWO-LEVEL coarse layer -------------------------
-# knn_graph_layered's top layer is a driver-sized centroid matrix — the
-# same nlist ceiling flat IVF has, solved for IVF by operators/ivf2. The
-# graph index sits on the identical two-level pruner: L1 (driver-sized)
-# prunes to nprobe1 cells, ONLY those cells' L2 sub-centroid rows are
-# pulled (bounded: nprobe1·nlist2 — never the full L2 matrix), and each
-# probed (l1, l2) sub-cell is a graph segment walked by the shared
-# kernel. Segment count now scales as nlist1·nlist2 with driver memory
-# holding only nlist1 centroids + the probed L2 rows.
 
 
 class LayeredGraph2Index:
@@ -777,6 +566,13 @@ class LayeredGraph2Index:
         self.serve_dir = serve_dir
 
     def close(self) -> None:
+        """Release the persisted segment table. Maintenance ops
+        (delete_from_layered2 / insert_into_layered2) intentionally leave
+        the superseded version persisted — in overlap mode it is still
+        serving probes while the new one builds — so the protocol driver
+        calls close() once the replacement is recorded as serving;
+        without it a long delete/insert sweep accumulates one persisted
+        index copy per maintenance step."""
         self.segments.unpersist()
 
 
@@ -903,9 +699,8 @@ def knn_graph_layered2(
     the driver (nlist1 GEMM over the driver-sized coarse layer), the
     probed cells' L2 rows pulled from the DISTRIBUTED L2 table (bounded
     collect: nprobe1·nlist2 rows — the full centroid matrix never
-    reaches the driver, unlike knn_graph_layered's top layer), the best
-    nprobe2 sub-cells per query walked by the shared segment kernel, one
-    window merge. Same plan tail as knn_graph_layered."""
+    reaches the driver), the best nprobe2 sub-cells per query walked by
+    the shared segment kernel, one window merge."""
     qpdf = queries.select("q_id", vec_col).toPandas()
     q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
     Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
@@ -953,11 +748,9 @@ def knn_graph_layered2(
         return _walk_served_segments(
             index.segments.sparkSession,
             index.serve_dir,
-            "segment_id",
             probed_np,
             q_ids,
             Q,
-            None,
             k,
             beam,
             rounds,
@@ -967,11 +760,9 @@ def knn_graph_layered2(
         )
     return _walk_probed_segments(
         index.segments,
-        "segment_id",
         probed_np,
         q_ids,
         Q,
-        None,
         k,
         beam,
         rounds,
@@ -1143,14 +934,36 @@ def autotune_layered2(
     return best or {}, trace
 
 
+# ---- incremental maintenance of the layered index ------------------------
+# The reference's core dynamic experiment is graph-index degradation under
+# delete/re-insert: FAISS HNSW can only tombstone, NGT stalls for minutes
+# after inserts (dynamic_script_faiss.py:75-117;
+# logs/dynamic_updates_ngt.txt:10-13). The layered index maintains itself
+# WITHOUT a global rebuild:
+#
+#   delete — drop the rows from their segments; edges INTO deleted nodes
+#            dangle and the walk kernel masks them (quality decays with
+#            delete volume, the honest HNSW-tombstone behavior);
+#   insert — assign the delta to segments, then ONE repair kernel per
+#            affected segment: new nodes get exact edges (GEMM new×seg),
+#            existing nodes merge the new nodes into their candidate pool
+#            (GEMM old×new + recomputed survivor edges) — the classic
+#            incremental-graph insert, cost |delta|·|seg|, never |seg|².
+#
+# Centroids are intentionally left untouched: incremental maintenance
+# serves reads between periodic full rebuilds, exactly the
+# serve-while-rebuild split dynamic_overlap measures.
+
+
 def delete_from_layered2(
     index: LayeredGraph2Index,
     keep: DataFrame,
     id_col: str = "vec_id",
     dropped: DataFrame | None = None,
 ) -> LayeredGraph2Index:
-    """Hierarchical-index delete, same tombstone semantics as
-    delete_from_layered (dangling edges masked by the walk kernel).
+    """Hierarchical-index delete with tombstone semantics: the rows
+    leave their segments and edges into them dangle, masked by the walk
+    kernel.
 
     Two physical strategies (r15): when the caller passes the DROPPED
     ids (dynamic workloads always know them — the delete is specified
@@ -1200,8 +1013,7 @@ def insert_into_layered2(
     |delta|·nlist2 scored candidate set never crosses an exchange
     (the r14 row_number-window form shuffled all of it and was the
     superlinear term in the measured 10M insert-repair wall). Touched
-    segments then run the same shared repair kernel as the flat
-    layered index."""
+    segments then run the shared repair kernel (_make_repair_kernel)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = delta.sparkSession
@@ -1280,7 +1092,7 @@ def insert_into_layered2(
         # for the touched-segment collect, once in the repair pass)
         .persist()
     )
-    repair = _make_repair_kernel(id_col, vec_col, index.degree, None)
+    repair = _make_repair_kernel(id_col, vec_col, index.degree)
     touched = [
         int(r[0]) for r in assigned_delta.select("segment_id").distinct().collect()
     ]
@@ -1304,114 +1116,20 @@ def insert_into_layered2(
     )
 
 
-def materialize_layered(index: LayeredGraphIndex, path: str) -> LayeredGraphIndex:
-    """Persist the layered index to parquet (segments PARTITIONED BY
-    centroid_id + a small centroid sidecar table) and re-open it — the
-    engine's analog of faiss.write_index/read_index
-    (/root/reference/dynamic_script_faiss.py builds in-process; Milvus
-    persists per-segment indexes, which is the shape stored here). Lets
-    an index outlive the session that built it."""
-    spark = index.segments.sparkSession
-    index.segments.write.mode("overwrite").partitionBy("centroid_id").parquet(
-        os.path.join(path, "segments")
-    )
-    _write_epoch(os.path.join(path, "segments"))
-    # plain-Python rows + explicit schema: no type inference and no Arrow
-    # dependency (ndarray cells crash the non-Arrow inference fallback if
-    # the session's Arrow conversion is degraded for any reason)
-    mins = None if index.codec is None else [float(x) for x in index.codec.mins]
-    rngs = None if index.codec is None else [float(x) for x in index.codec.ranges]
-    rows = [
-        (i, [float(x) for x in index.centroids[i]], index.nlist, index.degree, mins, rngs)
-        for i in range(index.nlist)
-    ]
-    spark.createDataFrame(
-        rows,
-        "centroid_id long, centroid array<double>, nlist int, degree int, "
-        "codec_mins array<double>, codec_ranges array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    return open_layered(spark, path)
-
-
-def open_layered(spark, path: str, served: bool = False) -> LayeredGraphIndex:
-    """Re-open a materialized layered index. The one-time repartition on
-    centroid_id restores the hash partitioning the walk kernel's
-    exchange-free plan relies on (parquet scans do not advertise a
-    partitioning); after the persist, probes are identical to a
-    freshly built index.
-
-    ``served=True`` opens in WORKER-SERVED mode (see open_layered2):
-    probes ship only the probed centroid-id list and workers
-    pyarrow-read + LRU-cache their segments from this path. For an SQ8
-    index the worker cache holds the int8 CODES — the compressed
-    index's 4× memory advantage carries into serving — and the walk
-    reconstructs per batch; results are bit-identical to the pinned
-    probe either way (pinned in tests/test_index.py::
-    test_graph_sq8_served_matches_pinned)."""
-    meta = spark.read.parquet(os.path.join(path, "centroids"))
-    rows = meta.orderBy("centroid_id").collect()
-    centroids = np.ascontiguousarray(
-        np.stack([np.asarray(r["centroid"]) for r in rows]), dtype=np.float64
-    )
-    nlist, degree = int(rows[0]["nlist"]), int(rows[0]["degree"])
-    codec = None
-    if rows[0]["codec_mins"] is not None:
-        from cs598vectordb_spark.operators.sq import SqCodec
-
-        codec = SqCodec(
-            np.asarray(rows[0]["codec_mins"], dtype=np.float64),
-            np.asarray(rows[0]["codec_ranges"], dtype=np.float64),
-        )
-    segs = spark.read.parquet(os.path.join(path, "segments"))
-    if served:
-        return LayeredGraphIndex(
-            segs, centroids, nlist, degree, codec,
-            serve_dir=os.path.join(path, "segments"),
-        )
-    segs = segs.repartition(nlist, "centroid_id").persist()
-    segs.count()
-    return LayeredGraphIndex(segs, centroids, nlist, degree, codec)
-
-
-# ---- incremental maintenance of the layered index ------------------------
-# The reference's core dynamic experiment is graph-index degradation under
-# delete/re-insert: FAISS HNSW can only tombstone, NGT stalls for minutes
-# after inserts (dynamic_script_faiss.py:75-117;
-# logs/dynamic_updates_ngt.txt:10-13). The layered index maintains itself
-# WITHOUT a global rebuild:
-#
-#   delete — drop the rows from their segments; edges INTO deleted nodes
-#            dangle and the walk kernel masks them (quality decays with
-#            delete volume, the honest HNSW-tombstone behavior);
-#   insert — assign the delta to segments, then ONE repair kernel per
-#            affected segment: new nodes get exact edges (GEMM new×seg),
-#            existing nodes merge the new nodes into their candidate pool
-#            (GEMM old×new + recomputed survivor edges) — the classic
-#            incremental-graph insert, cost |delta|·|seg|, never |seg|².
-#
-# Centroids are intentionally left untouched: incremental maintenance
-# serves reads between periodic full rebuilds, exactly the
-# serve-while-rebuild split dynamic_overlap measures.
-
-
-def _make_repair_kernel(id_col: str, data_col: str, degree: int, codec_arrs):
-    """Per-segment repair kernel shared by every layered variant (the
-    grouping key column rides through untouched): (a) new nodes get
+def _make_repair_kernel(id_col: str, vec_col: str, degree: int):
+    """Per-segment repair kernel of insert_into_layered2 (the
+    segment_id column rides through untouched): (a) new nodes get
     exact top-degree edges, (b) existing nodes re-rank surviving old
     edges merged with the arrivals, (c) dangling edges from earlier
     deletes drop, (d) nodes left under-degree backfill from surviving
     neighbors' 2-hop neighborhoods so degree does not erode across
-    cycles. With codec_arrs set, ranking happens in reconstructed-float
-    space — the same space the walk kernel scores probes in."""
+    cycles."""
     import pandas as pd
 
     def repair(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        X = np.ascontiguousarray(np.stack(pdf[data_col].to_numpy()), dtype=np.float64)
-        if codec_arrs is not None:
-            mns, rngs = codec_arrs
-            X = mns[None, :] + X / 255.0 * rngs[None, :]
+        X = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
         c = len(ids)
         is_new = pdf["nbr_ids"].isna().to_numpy()
         new_pos = np.flatnonzero(is_new)
@@ -1555,121 +1273,11 @@ def _make_repair_kernel(id_col: str, data_col: str, degree: int, codec_arrs):
     return repair
 
 
-def delete_from_layered(index: LayeredGraphIndex, keep: DataFrame, id_col: str = "vec_id") -> LayeredGraphIndex:
-    """New index serving only ids present in `keep` (the post-delete
-    snapshot). One semi-join + repartition of the INDEX table — bounded by
-    index size, no distance computation, no k-means. Dangling edges stay
-    until the next insert repair or full rebuild."""
-    segs = (
-        index.segments.join(keep.select(id_col), id_col, "semi")
-        .repartition(index.nlist, "centroid_id")
-        .persist()
-    )
-    segs.count()
-    # the OLD index stays persisted on purpose: in overlap mode it is
-    # still serving probes while this maintenance runs in the background;
-    # once the new version is recorded as serving, callers release it
-    # via close() (dynamic_protocol does this per maintenance step)
-    return LayeredGraphIndex(
-        segs, index.centroids, index.nlist, index.degree, index.codec
-    )
-
-
-def insert_into_layered(
-    index: LayeredGraphIndex,
-    delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> LayeredGraphIndex:
-    """New index with `delta` rows inserted and their segments repaired.
-    Delta rows are centroid-assigned with the same broadcast kernel as the
-    builder; each affected segment then runs one repair kernel that (a)
-    gives every new node exact top-degree edges, (b) re-ranks every
-    existing node's neighborhood against the new arrivals, (c) drops
-    edges left dangling by earlier deletes, and (d) BACKFILLS any node
-    the dangling drops left under-degree from its surviving neighbors'
-    neighborhoods — without (d), degree shrinks monotonically across
-    repeated delete/insert cycles and graph quality silently erodes over
-    long W2 sweeps even though each single cycle's recall holds.
-
-    Compressed (SQ8) segments insert too: arrivals are encoded with the
-    index's frozen codec and the repair kernel ranks in
-    reconstructed-float space — the same space the walk kernel scores,
-    so edges and probe distances stay consistent. (The codec itself is
-    NOT retrained; out-of-range arrival coordinates clamp, the honest
-    drift cost until the next periodic rebuild. The reference inserts
-    into every backend it benchmarks — dynamic_script_faiss.py:108,
-    dynamic_script_ngt.py:113-115.)"""
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    spark = delta.sparkSession
-    degree = index.degree
-    codec = index.codec
-    C = index.centroids
-    bc = spark.sparkContext.broadcast(C)
-
-    def assign(batches):
-        Cb = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            B = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = (
-                np.square(B).sum(1, keepdims=True)
-                - 2.0 * (B @ Cb.T)
-                + np.square(Cb).sum(1)[None, :]
-            )
-            yield pdf.assign(centroid_id=d2.argmin(axis=1).astype(np.int32))
-
-    out_schema = index.segments.schema  # float or compressed layout
-    data_col = vec_col if codec is None else "codes"
-    assigned_f = delta.select(id_col, vec_col).mapInPandas(
-        assign,
-        StructType(
-            list(delta.select(id_col, vec_col).schema.fields)
-            + [StructField("centroid_id", IntegerType())]
-        ),
-    )
-    if codec is not None:
-        from cs598vectordb_spark.operators.sq import sq_encode
-
-        assigned_f = sq_encode(
-            assigned_f, codec, vec_col=vec_col, id_col=id_col,
-            extra_cols=["centroid_id"],
-        )
-    assigned_delta = assigned_f.withColumn(
-        "nbr_ids", F.lit(None).cast("array<bigint>")
-    ).select(*out_schema.fieldNames())
-    codec_arrs = (codec.mins, codec.ranges) if codec is not None else None
-    repair = _make_repair_kernel(id_col, data_col, degree, codec_arrs)
-
-    touched = [
-        int(r[0]) for r in assigned_delta.select("centroid_id").distinct().collect()
-    ]
-    untouched = index.segments.filter(~F.col("centroid_id").isin(touched))
-    repaired = (
-        index.segments.filter(F.col("centroid_id").isin(touched))
-        .unionByName(assigned_delta)
-        .groupBy("centroid_id")
-        .applyInPandas(repair, out_schema)
-    )
-    segs = (
-        untouched.unionByName(repaired)
-        .repartition(index.nlist, "centroid_id")
-        .persist()
-    )
-    segs.count()
-    # superseded index intentionally left persisted (may still be
-    # serving in overlap mode) — callers release it via close()
-    return LayeredGraphIndex(segs, C, index.nlist, degree, codec)
-
-
 def materialize_layered2(
     index: LayeredGraph2Index, path: str, pinned: bool = True
 ) -> LayeredGraph2Index:
     """Persist the hierarchical index to parquet and re-open it — the
-    layered2 sibling of materialize_layered (reference analog:
+    engine's write_index/read_index (reference analog:
     faiss.write_index/read_index; Milvus persists per-segment indexes,
     /root/reference/dynamic_script_milvus.py:76-82). Three artifacts:
     segments PARTITIONED BY segment_id, the DISTRIBUTED L2 centroid

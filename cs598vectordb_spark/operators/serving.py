@@ -149,23 +149,12 @@ class DynamicBatcher:
                     fut.set_exception(exc)
 
 
-def layered2_probe_fn(
-    spark,
-    index,
-    k: int = 10,
-    nprobe1: int = 2,
-    nprobe2: int = 6,
-    beam: int = 24,
-    rounds: int = 3,
-    n_entry: int = 8,
-    vec_col: str = "embedding",
-):
-    """A DynamicBatcher probe_fn over a layered2 index: merged pandas
-    batch -> Spark frame -> knn_graph_layered2 -> collected pandas.
-    The createDataFrame/collect pair is the probe's own by-design
-    driver-sized query/result traffic, just for the union batch."""
-    from cs598vectordb_spark.operators.graph import knn_graph_layered2
-
+def _collected_probe(spark, search, vec_col: str):
+    """The shared body of the probe_fn factories: merged pandas batch ->
+    Spark frame -> `search(frame)` (a DataFrame of q_id, rank, vec_id,
+    dist) -> collected pandas. The createDataFrame/collect pair is the
+    probe's own by-design driver-sized query/result traffic, just for
+    the union batch."""
     schema = f"q_id long, {vec_col} array<float>"
 
     def probe(qpdf: pd.DataFrame) -> pd.DataFrame:
@@ -182,10 +171,7 @@ def layered2_probe_fn(
                 ],
                 schema,
             )
-        rows = knn_graph_layered2(
-            index, qdf, k, nprobe1=nprobe1, nprobe2=nprobe2, beam=beam,
-            rounds=rounds, n_entry=n_entry,
-        ).collect()
+        rows = search(qdf).collect()
         return pd.DataFrame(
             {
                 "q_id": [r.q_id for r in rows],
@@ -196,6 +182,31 @@ def layered2_probe_fn(
         )
 
     return probe
+
+
+def layered2_probe_fn(
+    spark,
+    index,
+    k: int = 10,
+    nprobe1: int = 2,
+    nprobe2: int = 6,
+    beam: int = 24,
+    rounds: int = 3,
+    n_entry: int = 8,
+    vec_col: str = "embedding",
+):
+    """A DynamicBatcher probe_fn over a layered2 index: merged pandas
+    batch -> Spark frame -> knn_graph_layered2 -> collected pandas."""
+    from cs598vectordb_spark.operators.graph import knn_graph_layered2
+
+    return _collected_probe(
+        spark,
+        lambda qdf: knn_graph_layered2(
+            index, qdf, k, nprobe1=nprobe1, nprobe2=nprobe2, beam=beam,
+            rounds=rounds, n_entry=n_entry,
+        ),
+        vec_col,
+    )
 
 
 def ivfpq_probe_fn(
@@ -217,82 +228,13 @@ def ivfpq_probe_fn(
     multi_tenant_script.py:130-136)."""
     from cs598vectordb_spark.operators.ivfpq import knn_ivfpq_refined
 
-    schema = f"q_id long, {vec_col} array<float>"
-
-    def probe(qpdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            qdf = spark.createDataFrame(qpdf[["q_id", vec_col]], schema=schema)
-        except Exception:  # degraded-Arrow session: exact fallback
-            qdf = spark.createDataFrame(
-                [
-                    (int(q), [float(x) for x in v])
-                    for q, v in zip(qpdf["q_id"], qpdf[vec_col])
-                ],
-                schema,
-            )
-        rows = knn_ivfpq_refined(
+    return _collected_probe(
+        spark,
+        lambda qdf: knn_ivfpq_refined(
             index, base, qdf, k=k, nprobe=nprobe, mult=mult, vec_col=vec_col
-        ).collect()
-        return pd.DataFrame(
-            {
-                "q_id": [r.q_id for r in rows],
-                "rank": [r.rank for r in rows],
-                "vec_id": [r.vec_id for r in rows],
-                "dist": [r.dist for r in rows],
-            }
-        )
-
-    return probe
-
-
-def layered_probe_fn(
-    spark,
-    index,
-    k: int = 10,
-    nprobe: int = 12,
-    beam: int = 32,
-    rounds: int = 4,
-    n_entry: int = 12,
-    vec_col: str = "embedding",
-):
-    """A DynamicBatcher probe_fn over the flat layered graph (v1 —
-    the family whose segments may store SQ8 codes, index.codec set):
-    merged pandas batch -> Spark frame -> knn_graph_layered ->
-    collected pandas. This closes the batching span over the last
-    unbatched serving family (VERDICT r14 "what's missing" #3 named
-    graph-SQ8 alongside the IVF-PQ fused path r15 already wired):
-    compressed segments are the backend that scales tenant count on
-    fixed executor memory, so it is exactly the one the thundering
-    herd hits."""
-    from cs598vectordb_spark.operators.graph import knn_graph_layered
-
-    schema = f"q_id long, {vec_col} array<float>"
-
-    def probe(qpdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            qdf = spark.createDataFrame(qpdf[["q_id", vec_col]], schema=schema)
-        except Exception:  # degraded-Arrow session: exact fallback
-            qdf = spark.createDataFrame(
-                [
-                    (int(q), [float(x) for x in v])
-                    for q, v in zip(qpdf["q_id"], qpdf[vec_col])
-                ],
-                schema,
-            )
-        rows = knn_graph_layered(
-            index, qdf, k, nprobe=nprobe, beam=beam, rounds=rounds,
-            n_entry=n_entry,
-        ).collect()
-        return pd.DataFrame(
-            {
-                "q_id": [r.q_id for r in rows],
-                "rank": [r.rank for r in rows],
-                "vec_id": [r.vec_id for r in rows],
-                "dist": [r.dist for r in rows],
-            }
-        )
-
-    return probe
+        ),
+        vec_col,
+    )
 
 
 def probe_fn_for(
@@ -313,12 +255,6 @@ def probe_fn_for(
     if family == "ivfpq":
         return ivfpq_probe_fn(
             spark, index, base, k=k, vec_col=vec_col, **probe_kwargs
-        )
-    if family in ("graph", "graph_sq8"):
-        # one probe fn: the SQ8-vs-float difference lives entirely in
-        # index.codec, which the layered kernel already handles
-        return layered_probe_fn(
-            spark, index, k=k, vec_col=vec_col, **probe_kwargs
         )
     raise ValueError(f"unknown index family for batched serving: {family!r}")
 

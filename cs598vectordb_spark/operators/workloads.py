@@ -58,20 +58,6 @@ def _build_probe(backend: str, scratch_dir: str | None = None):
             return idx
 
         return build, (lambda base, idx, queries, k: knn_ivf(idx, queries, k, nprobe=8))
-    if backend in ("graph", "graph_sq8"):
-        from cs598vectordb_spark.operators.graph import (
-            build_layered_graph,
-            knn_graph_layered,
-        )
-
-        return (
-            lambda base: build_layered_graph(
-                base, nlist=16, degree=16, compress=(backend == "graph_sq8")
-            ),
-            lambda base, idx, queries, k: knn_graph_layered(
-                idx, queries, k, nprobe=12, beam=32, rounds=4, n_entry=12
-            ),
-        )
     if backend == "graph2":
         from cs598vectordb_spark.operators.graph import (
             build_layered_graph2,
@@ -127,19 +113,7 @@ def _maintenance(backend: str):
     is the reference's core dynamic story: FAISS HNSW tombstones, NGT
     stalls minutes post-insert (logs/dynamic_updates_ngt.txt:10-13) — the
     layered index instead semi-joins deletes out (dangling edges masked at
-    probe time) and repairs only the delta's segments on insert — the
-    compressed (graph_sq8) backend included: arrivals are encoded with
-    the serving index's codec and repaired in reconstructed space."""
-    if backend in ("graph", "graph_sq8"):
-        from cs598vectordb_spark.operators.graph import (
-            delete_from_layered,
-            insert_into_layered,
-        )
-
-        return (
-            lambda idx, keep: delete_from_layered(idx, keep),
-            lambda idx, delta: insert_into_layered(idx, delta),
-        )
+    probe time) and repairs only the delta's segments on insert."""
     if backend == "graph2":
         from cs598vectordb_spark.operators.graph import (
             delete_from_layered2,
@@ -183,7 +157,7 @@ def _apply_delete(maint, idx, keep, deleted):
 
 def _close_index(idx) -> None:
     """Release a superseded index's persisted state, if the backend has
-    any (LayeredGraphIndex.close(); the 'exact' backend's index IS the
+    any (LayeredGraph2Index.close(); the 'exact' backend's index IS the
     snapshot DataFrame — nothing to release)."""
     close = getattr(idx, "close", None)
     if callable(close):
@@ -461,7 +435,7 @@ def recall_degradation(
     final_recall >= baseline_recall - 0.02 — is pinned in
     tests/test_updates_metrics.py. Summary aggregation happens on the
     already-driver-sized metrics table (a few rows per phase)."""
-    backends = backends or ["graph2", "graph_sq8"]
+    backends = backends or ["graph2"]
     update_percents = update_percents or UPDATE_PERCENTS
 
     metrics = None

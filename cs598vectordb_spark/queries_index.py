@@ -134,26 +134,12 @@ def ivf2_index_for(
     return _warm(spark, ("ivf2", sf_dir, nlist1, nlist2), build)
 
 
-def layered_graph_for(
-    spark: SparkSession, sf_dir: str, nlist: int = 16, degree: int = 16
-):
-    """Segmented (per-cluster) kNN-subgraph index — the Milvus
-    per-segment-HNSW shape (dynamic_script_milvus.py:76-82)."""
-    from cs598vectordb_spark.operators.graph import build_layered_graph
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        return build_layered_graph(emb, nlist=nlist, degree=degree)
-
-    return _warm(spark, ("layered_graph", sf_dir, nlist, degree), build)
-
-
 def layered_graph2_for(
     spark: SparkSession, sf_dir: str, nlist1: int = 4, nlist2: int = 4, degree: int = 16
 ):
     """Layered graph over the ivf2 two-level coarse layer — segment count
     scales as nlist1·nlist2 while the driver holds only nlist1 centroids
-    (the flat layered index's one remaining driver-size ceiling)."""
+    (no driver-sized top layer caps the segment count)."""
     from cs598vectordb_spark.operators.graph import build_layered_graph2
 
     def build():
@@ -161,40 +147,6 @@ def layered_graph2_for(
         return build_layered_graph2(emb, nlist1=nlist1, nlist2=nlist2, degree=degree)
 
     return _warm(spark, ("layered_graph2", sf_dir, nlist1, nlist2, degree), build)
-
-
-def layered_graph_sq8_for(
-    spark: SparkSession, sf_dir: str, nlist: int = 16, degree: int = 16
-):
-    """Layered graph whose segments store SQ8 codes (4x memory) — the
-    DiskANN-style compressed-graph-in-RAM trade; edges from exact floats,
-    walk distances from reconstructed codes."""
-    from cs598vectordb_spark.operators.graph import build_layered_graph
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        return build_layered_graph(emb, nlist=nlist, degree=degree, compress=True)
-
-    return _warm(spark, ("layered_graph_sq8", sf_dir, nlist, degree), build)
-
-
-def layered_graph_materialized_for(
-    spark: SparkSession, sf_dir: str, nlist: int = 16, degree: int = 16
-):
-    """Layered graph persisted to parquet and reopened (write_index/
-    read_index parity) — probes are identical to the in-memory build."""
-    import os as _os
-
-    from cs598vectordb_spark.operators.graph import materialize_layered
-    from cs598vectordb_spark.queries_sources import _io_dir
-
-    def build():
-        return materialize_layered(
-            layered_graph_for(spark, sf_dir, nlist, degree),
-            _os.path.join(_io_dir(sf_dir, "graph_index"), "t"),
-        )
-
-    return _warm(spark, ("layered_graph_mat", sf_dir, nlist, degree), build)
 
 
 def ivf_sq_index_for(spark: SparkSession, sf_dir: str, nlist: int = 16):
@@ -228,9 +180,7 @@ def warm_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         ("sq8_train_encode", lambda: sq_artifacts_for(spark, sf_dir)),
         ("ivf_sq8_build", lambda: ivf_sq_index_for(spark, sf_dir)),
         ("ivfpq_build", lambda: ivfpq_index_for(spark, sf_dir)),
-        ("layered_graph_build", lambda: layered_graph_for(spark, sf_dir)),
         ("ivf2_build", lambda: ivf2_index_for(spark, sf_dir)),
-        ("layered_graph_sq8_build", lambda: layered_graph_sq8_for(spark, sf_dir)),
         ("layered_graph2_build", lambda: layered_graph2_for(spark, sf_dir)),
         # the served headline probe reads these on-disk artifacts; build
         # them here so its timed number is probe-only like the others
@@ -295,14 +245,14 @@ def q_dynamic_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_recall_degradation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's headline dynamic artifact: recall-degradation
     curves across update cycles at update_percents=[25,50,75] on the
-    engine's incremental indexes (layered2 + compressed layered/SQ8),
+    engine's incremental graph index (layered2),
     in the results_summary shape of dynamic_script_faiss.py:68-73,
     120-125 plus the post-delete dip column. Recovery invariant
     (final_recall >= baseline - 0.02) pinned in
     tests/test_updates_metrics.py; wall-clock columns vary → rows-only."""
     emb, q = _setup(spark, sf_dir)
     return workloads.recall_degradation(
-        spark, emb, q.limit(20), backends=["graph2", "graph_sq8"]
+        spark, emb, q.limit(20), backends=["graph2"]
     )
 
 
@@ -365,39 +315,6 @@ def q_dynamic_overlap_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dynamic_overlap_graph")
-def q_dynamic_overlap_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2/exclusive=false with the LAYERED GRAPH backend and INCREMENTAL
-    maintenance: during-update intervals probe the serving per-segment
-    graph while the background thread semi-joins deletes out /
-    delta-repairs only the touched segments — the engine's answer to the
-    reference's graph-update pathologies (FAISS HNSW tombstone-only
-    deletes, NGT's minutes-long post-insert stall,
-    logs/dynamic_updates_ngt.txt:10-13). post_* recall shows tombstone
-    decay then repair recovery."""
-    emb, q = _setup(spark, sf_dir)
-    return workloads.dynamic_protocol(
-        spark, emb, q, backend="graph", update_percents=[50],
-        intervals_per_phase=2, exclusive=False,
-    )
-
-
-@register("dynamic_overlap_graph_sq8")
-def q_dynamic_overlap_graph_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2/exclusive=false on the COMPRESSED (SQ8-segment) layered graph —
-    the memory-scaling backend runs the reference's full delete+insert
-    experiment too: arrivals are encoded with the serving index's frozen
-    codec and the repair kernel ranks in reconstructed-float space, so
-    the compressed index no longer sits out the core dynamic story
-    (every reference backend inserts: dynamic_script_faiss.py:108,
-    dynamic_script_ngt.py:113-115, dynamic_script_redis.py:152)."""
-    emb, q = _setup(spark, sf_dir)
-    return workloads.dynamic_protocol(
-        spark, emb, q, backend="graph_sq8", update_percents=[50],
-        intervals_per_phase=2, exclusive=False,
-    )
-
-
 @register("dynamic_overlap_graph2")
 def q_dynamic_overlap_graph2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2/exclusive=false on the HIERARCHICAL layered graph: incremental
@@ -429,26 +346,13 @@ def q_multi_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multi_tenant_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 against a served ANN index (the reference's actual setup — N
     clients share one FAISS index, multi_tenant_script.py:121-180): the
-    layered graph builds once, then 10/30 concurrent clients probe it
-    under the FAIR scheduler; per-client-count mean latency/qps + summed
-    throughput, recall column from the shared exact truth."""
+    layered2 graph builds once, then 10/30 concurrent clients probe it
+    unbatched under the FAIR scheduler; per-client-count mean
+    latency/qps + summed throughput, recall column from the shared
+    exact truth."""
     emb, q = _setup(spark, sf_dir)
     m = workloads.multi_tenant(
-        spark, emb, q, backend="graph", client_counts=[10, 30]
-    )
-    return tenant_summary(m)
-
-
-@register("multi_tenant_graph_sq8")
-def q_multi_tenant_graph_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 on the COMPRESSED layered graph: N clients share one
-    SQ8-segment index — the memory-per-resident-segment trade is exactly
-    what multi-tenant serving stresses (many tenants × resident
-    segments), so the compressed backend is the one that scales tenant
-    count on fixed executors. 10/30 clients under FAIR scheduling."""
-    emb, q = _setup(spark, sf_dir)
-    m = workloads.multi_tenant(
-        spark, emb, q, backend="graph_sq8", client_counts=[10, 30]
+        spark, emb, q, backend="graph2", client_counts=[10, 30]
     )
     return tenant_summary(m)
 
@@ -523,27 +427,6 @@ def q_knn_filtered_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("multi_tenant_batched_sq8")
-def q_multi_tenant_batched_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 dynamic batching over the COMPRESSED layered-graph family
-    (r15): the SQ8-segment index was the last serving family still
-    paying the saturating unbatched path under concurrency (VERDICT
-    r14 gap #3) — and it is the family built for high tenant counts,
-    since compressed resident segments are what let many tenants share
-    fixed executor memory. Same slot arithmetic; the codec lives
-    entirely inside the layered kernel. Rows-only (wall-clock);
-    per-tenant result rows pinned EQUAL to solo SQ8 probes in
-    tests/test_serving.py::test_batched_sq8_matches_solo."""
-    from cs598vectordb_spark.operators.serving import multi_tenant_batched
-
-    emb, _ = _setup(spark, sf_dir)
-    return multi_tenant_batched(
-        spark, emb, layered_graph_sq8_for(spark, sf_dir),
-        n_clients=8, n_queries=50, family="graph_sq8",
-        probe_kwargs=dict(nprobe=12, beam=32, rounds=4, n_entry=12),
-    )
-
-
 @register("pq_reconstruction")
 def q_pq_reconstruction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ quality dashboard: mean squared reconstruction error + achieved
@@ -601,65 +484,15 @@ def q_pq_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recall_at_k(knn_pq_refined(enc, cb, emb, q, _K), knn_exact(emb, q, _K), _K)
 
 
-@register("knn_graph_layered")
-def q_knn_graph_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/layered graph: centroid top layer prunes to the nprobe nearest
-    segments, each probed segment walks its own kNN subgraph inside ONE
-    Arrow kernel (best-first beam, numpy), one window merges. The
-    per-segment-graph + cross-segment-merge architecture is how the
-    reference's Milvus backend serves HNSW at scale
-    (dynamic_script_milvus.py:76-82); vs a flat DataFrame beam search
-    it replaces ~12 per-hop stages with 2."""
-    from cs598vectordb_spark.operators.graph import knn_graph_layered
-
-    _, q = _setup(spark, sf_dir)
-    idx = layered_graph_for(spark, sf_dir)
-    return knn_graph_layered(idx, q, k=_K, nprobe=12, beam=32, rounds=4, n_entry=12).select(
-        "q_id", "rank", "vec_id"
-    )
-
-
-@register("knn_graph_materialized")
-def q_knn_graph_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/layered graph served FROM DISK: the persisted segment+adjacency
-    table reopened (one repartition at open restores the exchange-free
-    walk), probed identically to knn_graph_layered — the
-    write_index/read_index lifecycle the reference's FAISS/Milvus
-    backends rely on."""
-    from cs598vectordb_spark.operators.graph import knn_graph_layered
-
-    _, q = _setup(spark, sf_dir)
-    idx = layered_graph_materialized_for(spark, sf_dir)
-    return knn_graph_layered(idx, q, k=_K, nprobe=12, beam=32, rounds=4, n_entry=12).select(
-        "q_id", "rank", "vec_id"
-    )
-
-
-@register("knn_graph_sq8")
-def q_knn_graph_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/compressed layered graph: the same single-kernel beam walk
-    over segments holding int8 codes instead of floats — 4x less
-    executor memory per resident segment (at 100 TB this decides whether
-    a segment's graph+payload fits in RAM at all, the DiskANN trade);
-    distances come from on-the-fly reconstruction."""
-    from cs598vectordb_spark.operators.graph import knn_graph_layered
-
-    _, q = _setup(spark, sf_dir)
-    idx = layered_graph_sq8_for(spark, sf_dir)
-    return knn_graph_layered(idx, q, k=_K, nprobe=12, beam=32, rounds=4, n_entry=12).select(
-        "q_id", "rank", "vec_id"
-    )
-
-
 @register("knn_graph_layered2")
 def q_knn_graph_layered2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2/hierarchical layered graph: the layered walk behind ivf2's
     two-level pruner. L1 is the only driver-resident centroid matrix;
     the probed cells' L2 rows come off the distributed L2 table as a
     bounded collect (nprobe1·nlist2 rows), so segment count — and with
-    it base size — scales past any driver-sized top layer. Same
-    exchange-free walk kernel + single-window merge as
-    knn_graph_layered."""
+    it base size — scales past any driver-sized top layer. The probed
+    segments are walked by the exchange-free kernel and merged by a
+    single window."""
     from cs598vectordb_spark.operators.graph import knn_graph_layered2
 
     _, q = _setup(spark, sf_dir)
@@ -667,21 +500,6 @@ def q_knn_graph_layered2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_graph_layered2(
         idx, q, k=_K, nprobe1=4, nprobe2=12, beam=32, rounds=4, n_entry=12
     ).select("q_id", "rank", "vec_id")
-
-
-@register("graph_layered_recall")
-def q_graph_layered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the layered-graph probe vs exact (≥0.9 pinned in
-    tests/test_index.py)."""
-    from cs598vectordb_spark.operators.graph import knn_graph_layered
-
-    emb, q = _setup(spark, sf_dir)
-    idx = layered_graph_for(spark, sf_dir)
-    return recall_at_k(
-        knn_graph_layered(idx, q, _K, nprobe=12, beam=32, rounds=4, n_entry=12),
-        knn_exact(emb, q, _K),
-        _K,
-    )
 
 
 @register("knn_ivf_sq8")
@@ -876,41 +694,6 @@ def q_knn_graph2_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, q = _setup(spark, sf_dir)
     opened = graph2_served_for(spark, sf_dir)
     return knn_graph_layered2(opened, q, _K, nprobe1=4, nprobe2=12, beam=32).select(
-        "q_id", "rank", "vec_id"
-    )
-
-
-@register("knn_graph_sq8_served")
-def q_knn_graph_sq8_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Worker-served probe over the COMPRESSED (SQ8) layered index:
-    workers pyarrow-read and LRU-cache the int8 CODES — the
-    compressed-graph 4× memory trade carries into the serving cache —
-    and reconstruct per walk. Bit-identical to the pinned SQ8 probe
-    (tests/test_index.py::test_graph_sq8_served_matches_pinned) →
-    rows-only like the rest of the graph family."""
-    import os as _os
-
-    from cs598vectordb_spark.operators.graph import (
-        knn_graph_layered,
-        materialize_layered,
-        open_layered,
-    )
-
-    def build():
-        path = _os.path.join(
-            "/tmp/cs598_spark_io",
-            _os.path.basename(sf_dir.rstrip("/")),
-            "graph_sq8_mat_16",
-        )
-        pinned = materialize_layered(
-            layered_graph_sq8_for(spark, sf_dir), path
-        )
-        pinned.segments.unpersist()  # serving mode reads the files
-        return open_layered(spark, path, served=True)
-
-    _, q = _setup(spark, sf_dir)
-    opened = _warm(spark, ("layered_graph_sq8_served", sf_dir), build)
-    return knn_graph_layered(opened, q, _K, nprobe=6, beam=32).select(
         "q_id", "rank", "vec_id"
     )
 

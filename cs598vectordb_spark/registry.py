@@ -321,16 +321,9 @@ _ROWS_ONLY_EVIDENCE: dict[str, str] = {
     "dynamic_ivfpq": "tests/test_updates_metrics.py::test_dynamic_ivfpq_recovers_recall",
     "dynamic_overlap_ivfpq": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
     # graph family
-    "knn_graph_materialized": "tests/test_index.py::test_layered_graph_materialize_roundtrip",
-    "knn_graph_layered": "tests/test_index.py::test_layered_graph_recall_and_merge",
-    "graph_layered_recall": "tests/test_index.py::test_layered_graph_recall_and_merge",
-    "knn_graph_sq8": "tests/test_index.py::test_layered_graph_sq8_recall_and_incremental",
     "knn_graph_layered2": "tests/test_index.py::test_layered_graph2_recall_and_plan",
     "knn_graph2_materialized": "tests/test_index.py::test_layered2_materialize_roundtrip",
     "knn_graph2_served": "tests/test_index.py::test_graph2_served_matches_pinned",
-    "knn_graph_sq8_served": (
-        "tests/test_index.py::test_graph_sq8_served_matches_pinned"
-    ),
     "knn_graph2_filtered": "tests/test_index.py::test_graph2_filtered_ann",
     "knn_filtered_adaptive": "tests/test_index.py::test_knn_filtered_adaptive",
     "graph2_autotune": "tests/test_index.py::test_graph2_autotune_frontier",
@@ -342,18 +335,12 @@ _ROWS_ONLY_EVIDENCE: dict[str, str] = {
     "plot_series": "tests/test_updates_metrics.py::test_plot_series_and_phase_regions_closed_form",
     "dynamic_overlap": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
     "dynamic_overlap_ivf": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
-    "dynamic_overlap_graph": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
-    "dynamic_overlap_graph_sq8": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
     "dynamic_overlap_graph2": "tests/test_index.py::test_dynamic_overlap_measures_during_update",
     "multi_tenant": "tests/test_index.py::test_multi_tenant_rows_and_throughput",
     "multi_tenant_graph": "tests/test_index.py::test_multi_tenant_rows_and_throughput",
-    "multi_tenant_graph_sq8": "tests/test_index.py::test_multi_tenant_rows_and_throughput",
     "multi_tenant_batched": "tests/test_serving.py::test_batched_results_match_solo",
     "multi_tenant_batched_ivfpq": (
         "tests/test_serving.py::test_batched_ivfpq_matches_solo"
-    ),
-    "multi_tenant_batched_sq8": (
-        "tests/test_serving.py::test_batched_sq8_matches_solo"
     ),
     # streaming-serving + streaming sketches
     "stream_knn_graph2": "tests/test_streaming.py::test_stream_knn_graph2_recall",

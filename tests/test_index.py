@@ -158,69 +158,6 @@ def test_ivf_sq8_pruned_and_recall(spark, sf_dir, tmp_path):
     assert rec >= 0.7, rec
 
 
-def test_layered_graph_recall_and_merge(spark, sf_dir):
-    """Layered (per-segment) graph: registered-parameter probe clears the
-    0.9 recall bar; a full-probe walk with beam >= segment size touches
-    every segment and recovers (near-)exact results."""
-    from cs598vectordb_spark.operators.graph import build_layered_graph, knn_graph_layered
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = queries_from_embeddings(emb, NQ)
-    truth = knn_exact(emb, q, K)
-    idx = build_layered_graph(emb, nlist=16, degree=16)
-    rec = recall_at_k(
-        knn_graph_layered(idx, q, K, nprobe=12, beam=32, rounds=4, n_entry=12),
-        truth,
-        K,
-    ).collect()[0][0]
-    assert rec >= 0.9, rec
-    # every row of every segment is reachable when all segments are
-    # probed and the beam covers the segment: recall goes exact
-    full = recall_at_k(
-        knn_graph_layered(idx, q, K, nprobe=16, beam=64, rounds=8, n_entry=16),
-        truth,
-        K,
-    ).collect()[0][0]
-    assert full >= 0.99, full
-
-
-def test_layered_graph_incremental_delete_insert_recovers(spark, sf_dir):
-    """Reference dynamic story (delete/re-insert degradation,
-    dynamic_script_faiss.py:75-117): incremental delete drops recall vs
-    the baseline truth by ~the deleted fraction (dangling edges are
-    masked, deleted ids can no longer be returned); the delta-insert
-    repair restores it to the fresh-build level — no full rebuild, only
-    the touched segments recompute."""
-    from cs598vectordb_spark.operators import updates as upd
-    from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        delete_from_layered,
-        insert_into_layered,
-        knn_graph_layered,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = queries_from_embeddings(emb, NQ)
-    truth = knn_exact(emb, q, K)
-    kw = dict(nprobe=12, beam=32, rounds=4, n_entry=12)
-
-    idx = build_layered_graph(emb, nlist=16, degree=16)
-    base_rec = recall_at_k(knn_graph_layered(idx, q, K, **kw), truth, K).collect()[0][0]
-
-    v1 = upd.delete_tail_pct(emb, 50)
-    idx_del = delete_from_layered(idx, v1)
-    del_rec = recall_at_k(knn_graph_layered(idx_del, q, K, **kw), truth, K).collect()[0][0]
-    assert del_rec < base_rec  # deleted neighbors are unreachable
-
-    delta = upd.deleted_tail_slice(emb, 50)
-    idx_ins = insert_into_layered(idx_del, delta)
-    # index now serves exactly the restored id set
-    assert idx_ins.segments.count() == emb.count()
-    ins_rec = recall_at_k(knn_graph_layered(idx_ins, q, K, **kw), truth, K).collect()[0][0]
-    assert ins_rec >= 0.9, ins_rec
-    assert ins_rec >= base_rec - 0.02, (base_rec, ins_rec)
-
-
 def test_ivf2_recall_and_full_probe_exact(spark, sf_dir):
     """Two-level IVF: registered-parameter probe clears the 0.7 floor;
     probing every cell and every sub-list degenerates to exact search
@@ -241,62 +178,47 @@ def test_layered_graph_beam_monotonicity(spark, sf_dir):
     """Property: widening the beam (and rounds) never lowers recall —
     the greedy-search monotonicity HNSW's ef parameter relies on. Checked
     across a beam ladder on the same built index."""
-    from cs598vectordb_spark.operators.graph import build_layered_graph, knn_graph_layered
+    from cs598vectordb_spark.operators.graph import (
+        build_layered_graph2,
+        knn_graph_layered2,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = queries_from_embeddings(emb, NQ)
     truth = knn_exact(emb, q, K)
-    idx = build_layered_graph(emb, nlist=8, degree=8)
+    idx = build_layered_graph2(emb, nlist1=4, nlist2=2, degree=8)
     recalls = []
     for beam, rounds in [(4, 2), (12, 3), (32, 4), (64, 6)]:
         recalls.append(
             recall_at_k(
-                knn_graph_layered(idx, q, K, nprobe=8, beam=beam, rounds=rounds),
+                knn_graph_layered2(
+                    idx, q, K, nprobe1=4, nprobe2=8, beam=beam, rounds=rounds
+                ),
                 truth,
                 K,
             ).collect()[0][0]
         )
     assert all(b >= a - 1e-9 for a, b in zip(recalls, recalls[1:])), recalls
-
-
-def test_layered_graph_materialize_roundtrip(spark, sf_dir, tmp_path):
-    """write_index/read_index parity: a materialized-and-reopened layered
-    index returns byte-identical probe results to the in-memory build,
-    and the reopened walk plan is still exchange-free before the kernel."""
-    from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        knn_graph_layered,
-        materialize_layered,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = queries_from_embeddings(emb, NQ)
-    idx = build_layered_graph(emb, nlist=8, degree=8)
-    reopened = materialize_layered(idx, str(tmp_path / "graph_idx"))
-    a = sorted(knn_graph_layered(idx, q, K).collect())
-    b = sorted(knn_graph_layered(reopened, q, K).collect())
-    assert a == b
-    plan = (
-        knn_graph_layered(reopened, q, K)._jdf.queryExecution().executedPlan().toString()
-    )
-    probe = plan.split("InMemoryRelation")[0]
-    assert probe.count("Exchange") == 1, probe
+    idx.close()
 
 
 def test_local_graph_fallbacks_approximate_exact_graph(spark, sf_dir):
     """Big-segment fallbacks must approximate the exact per-segment
     graph. Numpy level: the blocked exact builder matches brute force
     exactly; the spill-partitioned builder recovers >=0.95 of edges on
-    clusterable data (its design case) at a forced tiny cell size.
-    Spark level: forcing the fallback end-to-end (exact_segment_rows=0)
-    still clears the probe recall floor."""
+    clusterable data (its design case) at a forced tiny cell size — this
+    half is what exercises spill cells. Spark level: forcing the fallback
+    route end-to-end (exact_segment_rows=0) still clears the probe recall
+    floor; on the fixture no segment exceeds target_cell=4096, so
+    _local_partitioned_graph takes its exact branch and this half checks
+    the builder's routing only."""
     import numpy as np
 
     from cs598vectordb_spark.operators.graph import (
         _local_knn_graph,
         _local_partitioned_graph,
-        build_layered_graph,
-        knn_graph_layered,
+        build_layered_graph2,
+        knn_graph_layered2,
     )
 
     rng = np.random.default_rng(7)
@@ -319,11 +241,16 @@ def test_local_graph_fallbacks_approximate_exact_graph(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = queries_from_embeddings(emb, NQ)
     truth = knn_exact(emb, q, K)
-    idx = build_layered_graph(emb, nlist=8, degree=12, exact_segment_rows=0)
+    idx = build_layered_graph2(
+        emb, nlist1=4, nlist2=2, degree=12, exact_segment_rows=0
+    )
     rec = recall_at_k(
-        knn_graph_layered(idx, q, K, nprobe=8, beam=32, rounds=4), truth, K
+        knn_graph_layered2(idx, q, K, nprobe1=4, nprobe2=8, beam=32, rounds=4),
+        truth,
+        K,
     ).collect()[0][0]
     assert rec >= 0.85, rec
+    idx.close()
 
 
 def test_ivf2_full_probe_is_exact(spark, sf_dir):
@@ -410,70 +337,34 @@ def test_layered_graph2_incremental_delete_insert_recovers(spark, sf_dir):
         i.close()
 
 
-def test_layered_graph_sq8_recall_and_incremental(spark, sf_dir):
-    """Compressed (SQ8-segment) layered graph: reconstruction error may
-    cost a little recall vs the float walk but must clear 0.85; the full
-    delete + incremental-insert cycle works on compressed segments too
-    (arrivals encoded with the frozen codec, repair ranks in
-    reconstructed space) and recovers the pre-delete recall."""
-    from cs598vectordb_spark.operators import updates as upd
-    from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        delete_from_layered,
-        insert_into_layered,
-        knn_graph_layered,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = queries_from_embeddings(emb, NQ)
-    truth = knn_exact(emb, q, K)
-    idx = build_layered_graph(emb, nlist=16, degree=16, compress=True)
-    kw = dict(nprobe=12, beam=32, rounds=4, n_entry=12)
-    rec = recall_at_k(knn_graph_layered(idx, q, K, **kw), truth, K).collect()[0][0]
-    assert rec >= 0.85, rec
-    v1 = upd.delete_tail_pct(emb, 50)
-    idx_del = delete_from_layered(idx, v1)
-    assert idx_del.segments.count() == v1.count()
-    del_rec = recall_at_k(
-        knn_graph_layered(idx_del, q, K, **kw), truth, K
-    ).collect()[0][0]
-    assert del_rec < rec, (del_rec, rec)  # honest degradation
-    idx_ins = insert_into_layered(idx_del, upd.deleted_tail_slice(emb, 50))
-    assert idx_ins.codec is not None and idx_ins.segments.count() == emb.count()
-    ins_rec = recall_at_k(
-        knn_graph_layered(idx_ins, q, K, **kw), truth, K
-    ).collect()[0][0]
-    assert ins_rec >= rec - 0.03, (ins_rec, rec)
-
-
 def test_layered_graph_repeated_cycles_no_erosion(spark, sf_dir):
     """Graph quality must NOT erode across repeated delete/insert cycles:
     the repair kernel's 2-hop backfill restores degree lost to dangling
     edges, so recall after cycle 3 stays within noise of cycle 1."""
     from cs598vectordb_spark.operators import updates as upd
     from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        delete_from_layered,
-        insert_into_layered,
-        knn_graph_layered,
+        build_layered_graph2,
+        delete_from_layered2,
+        insert_into_layered2,
+        knn_graph_layered2,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = queries_from_embeddings(emb, NQ)
     truth = knn_exact(emb, q, K)
-    kw = dict(nprobe=12, beam=32, rounds=4, n_entry=12)
-    idx = build_layered_graph(emb, nlist=8, degree=12)
-    base_rec = recall_at_k(knn_graph_layered(idx, q, K, **kw), truth, K).collect()[0][0]
+    kw = dict(nprobe1=4, nprobe2=8, beam=32, rounds=4, n_entry=12)
+    idx = build_layered_graph2(emb, nlist1=4, nlist2=2, degree=12)
+    base_rec = recall_at_k(knn_graph_layered2(idx, q, K, **kw), truth, K).collect()[0][0]
     recs = []
     for _ in range(3):
         v1 = upd.delete_tail_pct(emb, 30)
         prev = idx
-        idx = insert_into_layered(
-            delete_from_layered(idx, v1), upd.deleted_tail_slice(emb, 30)
-        )
+        deleted = delete_from_layered2(idx, v1)
+        idx = insert_into_layered2(deleted, upd.deleted_tail_slice(emb, 30))
         prev.close()
+        deleted.close()
         recs.append(
-            recall_at_k(knn_graph_layered(idx, q, K, **kw), truth, K).collect()[0][0]
+            recall_at_k(knn_graph_layered2(idx, q, K, **kw), truth, K).collect()[0][0]
         )
     assert recs[-1] >= base_rec - 0.05, (base_rec, recs)
     # mean degree must hold up too (the direct erosion signal)
@@ -481,6 +372,7 @@ def test_layered_graph_repeated_cycles_no_erosion(spark, sf_dir):
 
     deg = idx.segments.select(F.avg(F.size("nbr_ids"))).first()[0]
     assert deg >= 10.0, deg
+    idx.close()
 
 
 def test_graph2_autotune_frontier(spark, sf_dir):
@@ -535,6 +427,10 @@ def test_layered2_materialize_roundtrip(spark, sf_dir, tmp_path):
         "q_id", "rank", "vec_id"
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # the reopened walk plan is still exchange-free before the kernel
+    plan = b._jdf.queryExecution().executedPlan().toString()
+    probe = plan.split("InMemoryRelation")[0]
+    assert probe.count("Exchange") == 1, probe
     opened.segments.unpersist()
 
 
@@ -663,69 +559,41 @@ def test_graph2_served_survives_in_place_rebuild(spark, sf_dir, tmp_path):
 
 def test_served_skips_missing_segment_dir(spark, sf_dir, tmp_path):
     """A probed segment with NO partition directory must be skipped,
-    not crash the probe job (ADVICE r13 medium): open_layered's probed
-    keys come from ALL k-means centroids and an empty cluster writes no
-    directory — the Arrow path silently yields nothing for it, and the
-    served path must match that semantics. Simulated by deleting one
-    partition dir that every probe touches, then asserting the served
-    probe equals the pinned probe over the same surviving segments."""
+    not crash the probe job (ADVICE r13 medium): probed keys come from
+    l2_table rows, and a sub-cell emptied by deletes keeps its l2_table
+    row but writes no directory when the index is re-materialized — the
+    Arrow path silently yields nothing for it, and the served path must
+    match that semantics. Simulated by deleting one partition dir that
+    every probe touches, then asserting the served probe equals the
+    pinned probe over the same surviving segments."""
     import shutil
 
     from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        knn_graph_layered,
-        materialize_layered,
-        open_layered,
+        build_layered_graph2,
+        knn_graph_layered2,
+        materialize_layered2,
+        open_layered2,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = queries_from_embeddings(emb, 5)
     path = str(tmp_path / "gmiss")
-    idx = build_layered_graph(emb, nlist=4, degree=16)
-    pinned = materialize_layered(idx, path)
-    pinned.segments.unpersist()
-    idx.segments.unpersist()
-    shutil.rmtree(os.path.join(path, "segments", "centroid_id=1"))
+    idx = build_layered_graph2(emb, nlist1=2, nlist2=2, degree=16)
+    materialize_layered2(idx, path, pinned=False)
+    idx.close()
+    shutil.rmtree(os.path.join(path, "segments", "segment_id=1"))
 
-    served = open_layered(spark, path, served=True)
-    fresh = open_layered(spark, path)  # re-reads the mutilated parquet
-    kw = dict(k=K, nprobe=4, beam=24, rounds=3)  # nprobe=nlist: 1 is probed
-    got = knn_graph_layered(served, q, **kw).orderBy("q_id", "rank").collect()
-    want = knn_graph_layered(fresh, q, **kw).orderBy("q_id", "rank").collect()
+    served = open_layered2(spark, path, served=True)
+    fresh = open_layered2(spark, path)  # re-reads the mutilated parquet
+    # every cell and sub-cell probed: segment 1 is probed
+    kw = dict(k=K, nprobe1=2, nprobe2=4, beam=24, rounds=3)
+    got = knn_graph_layered2(served, q, **kw).orderBy("q_id", "rank").collect()
+    want = knn_graph_layered2(fresh, q, **kw).orderBy("q_id", "rank").collect()
     assert got == want and len(got) > 0, (
         "served probe over a missing segment dir must match the Arrow "
         "path's empty-segment semantics"
     )
     fresh.segments.unpersist()
-
-
-def test_graph_sq8_served_matches_pinned(spark, sf_dir, tmp_path):
-    """Worker-served mode over the COMPRESSED (SQ8) layered index: the
-    worker cache holds int8 codes (the 4× memory trade survives
-    serving) and the walk reconstructs per batch — results must be
-    bit-identical to the pinned probe on cold and cache-hit paths."""
-    from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        knn_graph_layered,
-        materialize_layered,
-        open_layered,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = queries_from_embeddings(emb, NQ)
-    idx = build_layered_graph(emb, nlist=8, degree=16, compress=True)
-    pinned = materialize_layered(idx, str(tmp_path / "gsq8"))
-    served = open_layered(spark, str(tmp_path / "gsq8"), served=True)
-    assert served.serve_dir is not None and served.codec is not None
-
-    kw = dict(k=K, nprobe=3, beam=24, rounds=3)
-    a = knn_graph_layered(pinned, q, **kw).orderBy("q_id", "rank").collect()
-    b = knn_graph_layered(served, q, **kw).orderBy("q_id", "rank").collect()
-    c = knn_graph_layered(served, q, **kw).orderBy("q_id", "rank").collect()
-    assert a == b, "served (cold) differs from pinned on the SQ8 index"
-    assert a == c, "served (cache-hit) differs from pinned on the SQ8 index"
-    idx.segments.unpersist()
-    pinned.segments.unpersist()
 
 
 def test_graph2_filtered_ann(spark, sf_dir):
@@ -855,7 +723,7 @@ def test_repair_and_walk_tolerate_lone_and_null_arrivals(spark, sf_dir):
     )
 
     # (a) lone new arrival: empty list out, never null
-    repair = _make_repair_kernel("vec_id", "embedding", 4, None)
+    repair = _make_repair_kernel("vec_id", "embedding", 4)
     lone = pd.DataFrame(
         {
             "segment_id": [7],
@@ -975,7 +843,7 @@ def test_repair_kernel_vectorized_matches_reference():
 
     rng = np.random.default_rng(598)
     degree = 4
-    kernel = _make_repair_kernel("vec_id", "embedding", degree, None)
+    kernel = _make_repair_kernel("vec_id", "embedding", degree)
 
     def seg(rows):
         return pd.DataFrame(

@@ -148,13 +148,13 @@ def test_stratified_sample_partitions_by_stratum(spark, sf_dir):
 def test_layered_graph_probe_is_single_kernel_stage(spark, sf_dir, emb_q):
     """The layered-graph probe must reach the walk kernel WITHOUT an
     exchange (the persisted segment table is hash-partitioned on
-    centroid_id, satisfying the groupBy distribution) and shuffle only
+    segment_id, satisfying the groupBy distribution) and shuffle only
     the per-segment candidates into one WindowGroupLimit merge."""
-    from cs598vectordb_spark.operators.graph import build_layered_graph, knn_graph_layered
+    from cs598vectordb_spark.operators.graph import build_layered_graph2, knn_graph_layered2
 
     emb, q = emb_q
-    idx = build_layered_graph(emb, nlist=8, degree=8)
-    plan = knn_graph_layered(idx, q, DEFAULT_K)._jdf.queryExecution().executedPlan().toString()
+    idx = build_layered_graph2(emb, nlist1=4, nlist2=2, degree=8)
+    plan = knn_graph_layered2(idx, q, DEFAULT_K)._jdf.queryExecution().executedPlan().toString()
     probe = plan.split("InMemoryRelation")[0]  # cached build plan excluded
     assert probe.count("Exchange") == 1, probe
     assert "FlatMapGroupsInPandas" in probe

@@ -208,64 +208,3 @@ def test_batched_ivfpq_matches_solo(spark, sf_dir):
     assert batcher.n_submits == 4
     assert batcher.n_probe_calls < 4, "no merge happened"
     idx.codes.unpersist()
-
-
-def test_batched_sq8_matches_solo(spark, sf_dir):
-    """The SQ8 layered family through the batcher (r15 — the last
-    unbatched serving family): 4 concurrent tenants with DISJOINT
-    query frames over one COMPRESSED layered graph; every tenant's
-    rows equal its solo SQ8 probe bit for bit (the walk reconstructs
-    from the same int8 codes regardless of batch composition), and
-    co-arrivals merged."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from cs598vectordb_spark.operators.graph import (
-        build_layered_graph,
-        knn_graph_layered,
-    )
-    from cs598vectordb_spark.operators.serving import probe_fn_for
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = build_layered_graph(emb, nlist=8, degree=16, compress=True)
-    assert idx.codec is not None, "compress=True must set the SQ8 codec"
-    kw = dict(k=5, nprobe=4, beam=24, rounds=3, n_entry=8)
-
-    frames = []
-    for t in range(4):
-        qdf = (
-            emb.filter(
-                (emb.vec_id >= t * 5) & (emb.vec_id < t * 5 + 5)
-            )
-            .select(emb.vec_id.alias("q_id"), "embedding")
-        )
-        frames.append((qdf, qdf.toPandas()))
-
-    gate = threading.Barrier(4)
-    batcher = DynamicBatcher(
-        probe_fn_for(spark, "graph_sq8", idx, **kw), max_wait_ms=1500.0
-    )
-
-    def tenant(t: int):
-        gate.wait(timeout=30)
-        return batcher.submit(frames[t][1])
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        got = list(pool.map(tenant, range(4)))
-
-    for t in range(4):
-        want = sorted(
-            (r.q_id, r.rank, r.vec_id, r.dist)
-            for r in knn_graph_layered(
-                idx, frames[t][0], kw["k"], nprobe=kw["nprobe"],
-                beam=kw["beam"], rounds=kw["rounds"], n_entry=kw["n_entry"],
-            ).collect()
-        )
-        have = sorted(
-            (int(r.q_id), int(r.rank), int(r.vec_id), float(r.dist))
-            for r in got[t].itertuples()
-        )
-        assert have == want, f"tenant {t} diverged from its solo SQ8 probe"
-    assert batcher.n_submits == 4
-    assert batcher.n_probe_calls < 4, "no merge happened"
-    idx.segments.unpersist()

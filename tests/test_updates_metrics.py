@@ -99,14 +99,14 @@ def test_recall_degradation_recovers(spark, sf_dir):
     25/50/75%, the maintained index's recall must recover to within
     0.02 of its own baseline — incremental maintenance (semi-join
     deletes, delta-segment repair inserts) must not erode the index.
-    One backend per data point to keep the test bounded; graph_sq8 (the
-    compressed path) is the harder case so it's the one pinned."""
+    One backend per data point to keep the test bounded; graph2 (the
+    engine's incremental graph index) is the one pinned."""
     from cs598vectordb_spark.operators.workloads import recall_degradation
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = queries_from_embeddings(emb, 20)
     rows = recall_degradation(
-        spark, emb, q, backends=["graph_sq8"], update_percents=[25, 50, 75]
+        spark, emb, q, backends=["graph2"], update_percents=[25, 50, 75]
     ).collect()
     by_pct = {r.update_percent: r for r in rows}
     assert set(by_pct) == {0, 25, 50, 75}, sorted(by_pct)

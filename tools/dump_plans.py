@@ -38,8 +38,8 @@ def main() -> int:
         names = [
             "knn_exact", "knn_exact_2k", "knn_cosine", "knn_ivf_materialized",
             "knn_ivf2", "knn_pq_refined", "knn_ivfpq", "knn_sq8", "knn_ivf_sq8",
-            "knn_graph_layered", "knn_graph_layered2", "knn_graph2_served",
-            "knn_graph_sq8", "recall_low_dim", "knn_post_delete", "scan_fvecs",
+            "knn_graph_layered2", "knn_graph2_served", "recall_low_dim",
+            "knn_post_delete", "scan_fvecs",
             "pricing_summary", "shipping_priority", "local_supplier_volume",
             "order_priority_count", "sessionize", "events_hourly",
             "asof_attribution", "salted_user_stats", "dedup_exact",
