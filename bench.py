@@ -403,8 +403,7 @@ def _cached_ivfpq(spark, lb, root: str, nlist: int, m: int, ksub: int,
     only on the run that actually builds."""
     import numpy as np
 
-    from cs598vectordb_spark.operators.ivfpq import IvfPqIndex, build_ivfpq
-    from cs598vectordb_spark.operators.pq import PqCodebooks
+    from cs598vectordb_spark.operators.ivfpq import IvfPqIndex, PqCodebooks, build_ivfpq
 
     os.makedirs(root, exist_ok=True)
     npz_path = os.path.join(root, "ivfpq_meta.npz")
@@ -648,11 +647,7 @@ def main() -> int:
         "knn_exact_2k",
         "knn_cosine",
         "knn_ivf_materialized",
-        "knn_ivf2",
-        "knn_pq_refined",
         "knn_ivfpq",
-        "knn_sq8",
-        "knn_ivf_sq8",
         # layered2 is the graph path of record: each probe walks its
         # segments inside one Arrow kernel.
         "knn_graph_layered2",
@@ -2135,8 +2130,7 @@ def main() -> int:
         "probe_qps": {
             n: qps(n)
             for n in (
-                "knn_ivf_materialized", "knn_ivf2", "knn_pq_refined",
-                "knn_ivfpq", "knn_sq8", "knn_ivf_sq8", "knn_graph_layered2",
+                "knn_ivf_materialized", "knn_ivfpq", "knn_graph_layered2",
                 "knn_graph2_served",
             )
         },

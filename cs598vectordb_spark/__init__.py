@@ -11,7 +11,7 @@ Architecture stance ("index = table"):
   * Everything is a DataFrame; plans are declared via DataFrame/SQL and
     optimized by Catalyst (predicate pushdown, broadcast joins, AQE).
   * A "vector index" is a materialized, partitioned parquet table
-    (LSH-bucketed or KMeans/IVF centroid-partitioned), so approximate
+    (KMeans/IVF centroid-partitioned), so approximate
     search becomes partition pruning — Spark's native strength.
   * The slow path (batch distance kernels) is Arrow-vectorized
     mapInPandas/pandas_udf; never row-at-a-time Python UDFs.

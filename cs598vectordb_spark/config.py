@@ -15,7 +15,7 @@ DEFAULT_K = 10
 DEFAULT_N_QUERIES = 100
 SMOKE_N_QUERIES = 50
 
-# every randomized component (LSH hyperplanes, KMeans init, sampling).
+# every randomized component (KMeans init, MinHash permutations, sampling).
 SEED = 42
 
 # decimals used when rounding floating aggregates that face the DuckDB

@@ -882,9 +882,9 @@ def autotune_layered2(
 ) -> tuple[dict, list[dict]]:
     """T4 for the engine's best index: sweep (nprobe1, nprobe2, beam) on
     one built layered2 graph, score recall against the exact oracle, and
-    return the cheapest config clearing the target — the missing sibling
-    of autotune_ivf2 (the weaker LSH/IVF/ivf2 paths all had sweeps while
-    the index of record did not).
+    return the cheapest config clearing the target — the graph's
+    counterpart of autotune_ivf (the flat IVF has a sweep; the index of
+    record needs one too).
 
     Cost model: selectivity (fraction of sub-cells a query may touch,
     capped at nprobe1·nlist2 reachable through the L1 prune) is the

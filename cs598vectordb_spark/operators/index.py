@@ -241,7 +241,7 @@ def knn_ivf(
     (multi_tenant_script.py:98). After the pruned scan there are NO
     joins: one map stage emits local top-k, the only shuffle carries
     ≤ |parts|·|Q|·k rows into the final window."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
+    from cs598vectordb_spark.operators.knn import squared_l2_block, topk_canonical
 
     spark = queries.sparkSession
     qpdf = queries.select("q_id", vec_col).toPandas()
@@ -268,7 +268,7 @@ def knn_ivf(
             B = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
             scores = squared_l2_block(B, bQ)
             scores[~bprobed[pdf["centroid_id"].to_numpy(dtype=np.int64)]] = np.inf
-            out = _topk_from_scores(scores, ids, bq_ids, k, ascending=True)
+            out = topk_canonical(scores, ids, bq_ids, k, ascending=True, score_col="dist")
             if len(out):
                 yield out
 

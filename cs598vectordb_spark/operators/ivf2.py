@@ -1,8 +1,8 @@
-"""Two-level IVF (centroid-of-centroids) — nlist scaling beyond a
-driver-sized centroid matrix.
+"""Two-level k-means coarse layer (centroid-of-centroids) — the router
+behind the layered2 graph index (operators/graph.py build_layered_graph2).
 
-Flat IVF (operators/index.py) scores queries against ALL nlist centroids
-on the driver — fine while nlist is thousands, impossible when a 100 TB
+A flat coarse quantizer scores queries against ALL nlist centroids on
+the driver — fine while nlist is thousands, impossible when a 100 TB
 base wants nlist ~ sqrt(N) ~ 10^5-10^6 lists. The classic fix (FAISS's
 IVF_HNSW / two-level coarse quantizers; the reference's own coarse
 quantizer is trained on a bounded sample, multi_tenant_script.py:94-99)
@@ -16,13 +16,9 @@ is hierarchical:
   per-list mean, computed DISTRIBUTED via posexplode + avg — the full
   L2 matrix is never collected to the driver at build time.
 
-Probe: score L1 on the driver (nlist1 GEMM), pick nprobe1 cells, pull
-ONLY those cells' L2 rows (bounded by nprobe1 * nlist2), pick the best
-nprobe2 sub-lists per query, then run the same masked-GEMM local-top-k
-kernel as flat IVF over the pruned scan. On a table materialized
-PARTITIONED BY (l1_id, l2_id), the IN-list filter becomes parquet
-PartitionFilters, so a probe touches nprobe2 / (nlist1 * nlist2) of the
-bytes.
+layered2 builds one kNN-graph segment per (l1_id, l2_id) sub-list and
+routes a probe the same two-level way: L1 scored on the driver, then
+only the probed cells' L2 rows pulled (bounded by nprobe1 · nlist2).
 """
 
 from __future__ import annotations
@@ -30,10 +26,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cs598vectordb_spark.config import DEFAULT_K, SEED
+from cs598vectordb_spark.config import SEED
 
 
 @dataclass
@@ -43,7 +39,6 @@ class Ivf2Index:
     l2_table: DataFrame  # (l1_id, l2_id, centroid) — stays distributed
     nlist1: int
     nlist2: int
-    path: str | None = None
 
 
 def build_ivf2_index(
@@ -111,148 +106,3 @@ def build_ivf2_index(
     )
     l2_table.count()
     return Ivf2Index(assigned, l1.centroids, l2_table, nlist1, nlist2)
-
-
-def autotune_ivf2(
-    index: Ivf2Index,
-    queries: DataFrame,
-    truth: DataFrame,
-    target_recall: float = 0.9,
-    k: int = DEFAULT_K,
-    grid: list[tuple[int, int]] | None = None,
-) -> tuple[dict, list[dict]]:
-    """T4 for the hierarchical index: sweep (nprobe1, nprobe2) on one
-    built index, score recall against the exact oracle, return the
-    cheapest config clearing the target. Selectivity is the fraction of
-    sub-lists (and on a materialized index, of bytes) each query can
-    actually touch: a query reaches at most nprobe1·nlist2 sub-lists
-    through the L1 prune, so nprobe2 beyond that bound is capped —
-    otherwise custom grids with np2 > np1·nlist2 would overstate cost
-    and skew the cheapest-clearing-target pick."""
-    from cs598vectordb_spark.operators.metrics import recall_at_k
-
-    grid = grid or [(2, 4), (2, 8), (4, 8), (4, 12), (4, 16), (8, 16), (8, 32)]
-    n_lists = index.nlist1 * index.nlist2
-    trace, best = [], None
-    for np1, np2 in grid:
-        rec = recall_at_k(knn_ivf2(index, queries, k, np1, np2), truth, k).collect()[0][0]
-        entry = {
-            "nprobe1": np1,
-            "nprobe2": np2,
-            "recall": rec,
-            "selectivity": round(min(np2, np1 * index.nlist2, n_lists) / n_lists, 4),
-        }
-        trace.append(entry)
-        if rec >= target_recall and (best is None or entry["selectivity"] < best["selectivity"]):
-            best = entry
-    return best or {}, trace
-
-
-def materialize_ivf2(index: Ivf2Index, path: str) -> Ivf2Index:
-    """Write the assigned table PARTITIONED BY (l1_id, l2_id) so probe
-    filters become parquet PartitionFilters — 'nprobe2 of nlist1*nlist2
-    inverted lists' as directory pruning."""
-    spark = index.assigned.sparkSession
-    index.assigned.write.mode("overwrite").partitionBy("l1_id", "l2_id").parquet(path)
-    assigned = spark.read.parquet(path)
-    return Ivf2Index(
-        assigned, index.l1_centroids, index.l2_table, index.nlist1, index.nlist2, path
-    )
-
-
-def knn_ivf2(
-    index: Ivf2Index,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    nprobe1: int = 4,
-    nprobe2: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Hierarchical probe: L1 scored on the driver, the probed cells' L2
-    rows pulled (bounded: nprobe1 * nlist2), the best nprobe2 sub-lists
-    per query kept, then one masked-GEMM kernel over the pruned scan and
-    one WindowGroupLimit merge — the flat-IVF plan with a two-level
-    pruner in front."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
-
-    spark = queries.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    nq = len(q_ids)
-
-    # L1: driver GEMM over the (driver-sized) coarse layer
-    C1 = index.l1_centroids
-    d1 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C1.T)
-        + np.square(C1).sum(1)[None, :]
-    )
-    np1 = min(nprobe1, index.nlist1)
-    cells = np.argsort(d1, axis=1)[:, :np1]
-    cell_set = sorted({int(c) for row in cells for c in row})
-
-    # L2: pull ONLY the probed cells' sub-centroids (bounded collect)
-    l2 = (
-        index.l2_table.filter(F.col("l1_id").isin(cell_set))
-        .select("l1_id", "l2_id", "centroid")
-        .collect()
-    )
-    keys = np.array([r["l1_id"] * index.nlist2 + r["l2_id"] for r in l2], dtype=np.int64)
-    C2 = np.ascontiguousarray(np.stack([np.asarray(r["centroid"]) for r in l2]), dtype=np.float64)
-    d2 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C2.T)
-        + np.square(C2).sum(1)[None, :]
-    )
-    # mask sub-lists whose cell the query did not probe
-    cell_ok = np.zeros((nq, len(l2)), dtype=bool)
-    row_cell = keys // index.nlist2
-    for j in range(nq):
-        cell_ok[j] = np.isin(row_cell, cells[j])
-    d2[~cell_ok] = np.inf
-    np2 = min(nprobe2, len(l2))
-    order = np.argsort(d2, axis=1)[:, :np2]
-    probed: dict[int, np.ndarray] = {}
-    for j in range(nq):
-        for key in keys[order[j]][np.isfinite(d2[j, order[j]])]:
-            probed.setdefault(int(key), []).append(j)  # type: ignore[arg-type]
-    probed = {key: np.asarray(js, dtype=np.int64) for key, js in probed.items()}
-    probe_keys = sorted(probed)
-    bc = spark.sparkContext.broadcast((q_ids, Q, probed, index.nlist2))
-
-    def kernel(batches):
-        bq_ids, bQ, bprobed, n2 = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            B = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
-            scores = squared_l2_block(B, bQ)
-            mask = np.zeros(scores.shape, dtype=bool)
-            row_keys = (
-                pdf["l1_id"].to_numpy(dtype=np.int64) * n2
-                + pdf["l2_id"].to_numpy(dtype=np.int64)
-            )
-            for key in np.unique(row_keys):
-                js = bprobed.get(int(key))
-                if js is not None:
-                    mask[np.ix_(row_keys == key, js)] = True
-            scores[~mask] = np.inf
-            out = _topk_from_scores(scores, ids, bq_ids, k, ascending=True)
-            if len(out):
-                yield out
-
-    key_col = F.col("l1_id") * index.nlist2 + F.col("l2_id")
-    local = (
-        index.assigned.filter(F.col("l1_id").isin(cell_set) & key_col.isin(probe_keys))
-        .select(F.col(id_col), F.col(vec_col), F.col("l1_id"), F.col("l2_id"))
-        .mapInPandas(kernel, "q_id long, vec_id long, dist double")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )

@@ -2,9 +2,9 @@
 inverted lists — the composite index the reference's libraries ship as
 their large-scale default (FAISS IndexIVFPQ; Milvus IVF_PQ index type,
 /root/reference/multi_tenant_script.py:94-99 trains the same m×8-bit
-codec). The flat components already exist separately (operators.index
-IVF, operators.pq PQ-over-raw-vectors); this module composes them the
-way the native engines do:
+codec). It is the engine's one compressed index: the coarse quantizer
+is the flat IVF of operators.index, and the PQ codebooks are trained
+here, on residuals, the way the native engines compose them:
 
 1. Coarse quantizer: the existing IVF k-means (driver-sized centroid
    matrix, broadcast assignment kernel).
@@ -15,9 +15,9 @@ way the native engines do:
    probe reads only nprobe/nlist of the data — partition pruning, the
    property that makes the scan sublinear at 100 TB.
 4. ADC with PER-LIST lookup tables: distance(q, x) ≈ Σ_j T[q, list,
-   j, code_j] where T is built from (q − c[list]) — nq·nprobe·m·ksub
-   doubles, driver-sized by construction (the same budget FAISS
-   precomputes), broadcast once per batch of queries.
+   j, code_j] where T is built from (q − c[list]) inside the probe
+   kernel, per list and its probers — the broadcast carries only the
+   queries, centroids and codebooks.
 
 Scale shape: the probe is scan(pruned partitions) → per-batch numpy
 gathers → local top-k → tiny shuffle (≤ |parts|·|Q|·k rows) — identical
@@ -35,8 +35,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
-from cs598vectordb_spark.operators.index import build_ivf_index
-from cs598vectordb_spark.operators.pq import PqCodebooks, _kmeans_fit
+from cs598vectordb_spark.operators.index import _kmeans_fit, build_ivf_index
+
+
+@dataclass
+class PqCodebooks:
+    codebooks: np.ndarray  # (m, ksub, dsub)
+    m: int
+    ksub: int
 
 
 @dataclass
@@ -79,7 +85,7 @@ def build_ivfpq(
     spark = base.sparkSession
 
     # train sub-codebooks on the SAMPLE's residuals (driver-side d×d-free
-    # algebra on train_sample rows, same budget as train_pq)
+    # algebra on train_sample rows, same budget as the IVF trainer)
     sample = (
         base.select(id_col, vec_col).orderBy(id_col).limit(train_sample).toPandas()
     )
@@ -161,15 +167,102 @@ def knn_ivfpq(
 ) -> DataFrame:
     """ADC top-k over the probed lists with per-list residual LUTs.
     Output (q_id, rank, vec_id, dist) — dist is the quantized distance;
-    compose with the exact re-rank (knn_pq_refined pattern) when the
+    compose with the exact re-rank (knn_ivfpq_refined) when the
     shortlist feeds a recall-critical consumer."""
+    return _adc_probe(index, queries, k, nprobe, None, vec_col, id_col)
+
+
+def knn_ivfpq_refined(
+    index: IvfPqIndex,
+    base: DataFrame,
+    queries: DataFrame,
+    k: int = DEFAULT_K,
+    nprobe: int = 8,
+    mult: int = 5,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """IVF-PQ shortlist + exact re-rank (FAISS's IVFPQR shape): the
+    quantized probe selects k·mult candidates from the pruned lists,
+    then ONLY those candidates get exact distances — the compressed
+    scan does the selection, exact math touches ~mult·k/N of the table.
+    This is the SERVING configuration of record for the dynamic
+    protocol: raw ADC at nprobe=8 sits below the engine's advertised
+    ≥0.70 approximate floor on this data, the refined probe clears it
+    (pinned in tests/test_pq.py and tests/test_updates_metrics.py).
+
+    Two physical strategies, picked by the index layout:
+    - FUSED (index built with keep_vectors=True): the probe kernel
+      ADC-selects the per-(query, list) top-mult·k and re-ranks them
+      exactly IN PLACE from the vectors stored beside the codes — plan
+      is scan(pruned) → kernel → one top-k window, the same 2-stage
+      shape as plain ADC. The r11 join form paid an extra window
+      shuffle plus a full-base exchange for the candidate fetch
+      (measured 8× slower than EXACT at 100K base — the whole r11
+      large-base inversion was this fixed cost); fused, the refine adds
+      ~mult·k·dim FLOPs per probe pair and no new stage. The candidate
+      set is a per-list superset of the join form's global-mult·k
+      shortlist, so recall can only improve; floors unchanged.
+    - JOIN (vector-less index): the original shortlist → base join.
+      Every engine caller builds keep_vectors=True (the registered
+      entries, the streaming jobs, the serving probe), so this path
+      serves only a codes-only index and is kept as the reference the
+      fused path's equivalence and plan tests compare against."""
+    from cs598vectordb_spark.functions.distance import squared_l2
+
+    if vec_col in index.codes.columns:
+        return _adc_probe(index, queries, k, nprobe, mult, vec_col, id_col)
+    shortlist = knn_ivfpq(index, queries, k=mult * k, nprobe=nprobe).select(
+        "q_id", "vec_id"
+    )
+    qv = queries.select(F.col("q_id"), F.col(vec_col).alias("_q_emb"))
+    scored = (
+        shortlist.join(
+            base.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_b_emb")),
+            "vec_id",
+        )
+        .join(F.broadcast(qv), "q_id")
+        .select("q_id", "vec_id", squared_l2("_q_emb", "_b_emb").alias("dist"))
+    )
+    return _topk_window(scored, k)
+
+
+def _adc_probe(
+    index: IvfPqIndex,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    mult: int | None,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The one IVF-PQ probe plan: one pruned scan, one Arrow kernel,
+    one final top-k window. Per (query, probed list) the kernel ADC-
+    scores every code row, then either emits the ADC top-k
+    (mult=None, knn_ivfpq) or — over a keep_vectors index — cuts to
+    the top mult·k by (adc, vec_id), computes exact squared-L2 on just
+    those rows' stored vectors and emits their exact top-k (the fused
+    knn_ivfpq_refined). Exact-math volume is the same mult·k per probe
+    pair as the join form; the exchanges the join form paid (shortlist
+    window + full-base join) are gone.
+
+    Granularity note: every cut is per (query, list,
+    PARTITION-FRAGMENT) — when a list's rows span physical partitions
+    (in-memory builds; multi-file lists), each fragment contributes its
+    own top-mult·k, so fragmentation only WIDENS the candidate set
+    (recall is monotone ≥ the whole-list cut; floors unaffected). The
+    flip side: two different physical layouts can return different —
+    both floor-valid — refined top-k for near-boundary candidates,
+    which is why that entry is floor-pinned, not value-hashed. The 1M
+    measurement of exactly this: a 32k-tiny-file layout made the probe
+    effectively exact over probed lists (recall 0.995) where the
+    1-file-per-list layout's honest ADC cut reads 0.71 at mult=10."""
     spark = index.codes.sparkSession
     qpdf = queries.select("q_id", vec_col).toPandas()
     q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
     Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
     C = index.centroids
     books = index.cb.codebooks
-    m, dsub = index.cb.m, books.shape[2]
 
     # driver-side probe selection: queries and centroids are both
     # driver-sized (the reference's own design point)
@@ -214,38 +307,21 @@ def knn_ivfpq(
                 Cd = np.stack(grp["codes"].to_numpy())  # (n, m)
                 ids = grp[id_col].to_numpy(dtype=np.int64)
                 n = len(ids)
-                k_eff = min(k, n)
-                # per-list LUT + ADC for EVERY prober in one vectorized
-                # pass: m small GEMMs and m gathers of shape (p, n) —
-                # the per-prober Python loop this replaces did p·m tiny
-                # gathers and dominated the probe's fixed overhead at
-                # serving batch sizes (p ≈ nq·nprobe/nlist per list).
                 qis = np.asarray(probers, dtype=np.int64)
-                Rq = bQ[qis] - bC[int(cid)]  # (p, dim)
-                scores = np.zeros((len(probers), n))
-                for j in range(m):
-                    sub = Rq[:, j * dsub : (j + 1) * dsub]
-                    Tj = (
-                        np.square(sub).sum(1, keepdims=True)
-                        - 2.0 * (sub @ Bk[j].T)
-                        + bb2[j][None, :]
-                    )  # (p, ksub)
-                    scores += Tj[:, Cd[:, j]]
+                scores = _adc_scores(bQ[qis] - bC[int(cid)], Cd, Bk, bb2)
+                if mult is None:  # ADC top-k straight off the codes
+                    kk, dists, cand_ids = min(k, n), scores, [ids] * len(probers)
+                else:  # exact refine on the ADC-selected rows only
+                    V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+                    mk = min(mult * k, n)
+                    sel = np.stack([_ordered_cut(s, ids, mk) for s in scores])
+                    dists = np.square(V[sel] - bQ[qis][:, None, :]).sum(axis=2)  # (p, mk)
+                    kk, cand_ids = min(k, mk), ids[sel]
                 for t in range(len(probers)):
-                    s = scores[t]
-                    part = np.argpartition(s, k_eff - 1)[:k_eff]
-                    # widen the cut to EVERY row tied with the k-boundary
-                    # score (identical code vectors are plausible at small
-                    # ksub / duplicate inputs), then order the candidates
-                    # by (score, vec_id) — the same total order the final
-                    # window uses — so the emitted top-k is deterministic
-                    # across partitionings, not argpartition-arbitrary.
-                    cand = np.flatnonzero(s <= s[part].max())
-                    order = np.lexsort((ids[cand], s[cand]))[:k_eff]
-                    sel = cand[order]
-                    out_q.append(np.full(k_eff, bq_ids[qis[t]], dtype=np.int64))
-                    out_id.append(ids[sel])
-                    out_d.append(s[sel])
+                    pick = _ordered_cut(dists[t], cand_ids[t], kk)
+                    out_q.append(np.full(kk, bq_ids[qis[t]], dtype=np.int64))
+                    out_id.append(cand_ids[t][pick])
+                    out_d.append(dists[t][pick])
             if out_q:
                 yield pd.DataFrame(
                     {
@@ -255,201 +331,51 @@ def knn_ivfpq(
                     }
                 )
 
-    local = pruned.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
+    return _topk_window(
+        pruned.mapInPandas(kern, "q_id long, vec_id long, dist double"), k
     )
 
 
-def knn_ivfpq_refined(
-    index: IvfPqIndex,
-    base: DataFrame,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    nprobe: int = 8,
-    mult: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF-PQ shortlist + exact re-rank (FAISS's IVFPQR shape): the
-    quantized probe selects k·mult candidates from the pruned lists,
-    then ONLY those candidates get exact distances — the compressed
-    scan does the selection, exact math touches ~mult·k/N of the table.
-    This is the SERVING configuration of record for the dynamic
-    protocol: raw ADC at nprobe=8 sits below the engine's advertised
-    ≥0.70 approximate floor on this data, the refined probe clears it
-    (pinned in tests/test_pq.py and tests/test_updates_metrics.py).
+def _adc_scores(
+    Rq: np.ndarray, Cd: np.ndarray, Bk: np.ndarray, bb2: np.ndarray
+) -> np.ndarray:
+    """(p, n) ADC distances of p query residuals Rq against one list's
+    (n, m) codes Cd: per subspace one small LUT GEMM for EVERY prober
+    and one gather of shape (p, n) — the per-prober Python loop this
+    replaced did p·m tiny gathers and dominated the probe's fixed
+    overhead at serving batch sizes (p ≈ nq·nprobe/nlist per list)."""
+    m, dsub = Bk.shape[0], Bk.shape[2]
+    scores = np.zeros((len(Rq), len(Cd)))
+    for j in range(m):
+        sub = Rq[:, j * dsub : (j + 1) * dsub]
+        Tj = (
+            np.square(sub).sum(1, keepdims=True)
+            - 2.0 * (sub @ Bk[j].T)
+            + bb2[j][None, :]
+        )  # (p, ksub)
+        scores += Tj[:, Cd[:, j]]
+    return scores
 
-    Two physical strategies, picked by the index layout:
-    - FUSED (index built with keep_vectors=True): the probe kernel
-      ADC-selects the per-(query, list) top-mult·k and re-ranks them
-      exactly IN PLACE from the vectors stored beside the codes — plan
-      is scan(pruned) → kernel → one top-k window, the same 2-stage
-      shape as plain ADC. The r11 join form paid an extra window
-      shuffle plus a full-base exchange for the candidate fetch
-      (measured 8× slower than EXACT at 100K base — the whole r11
-      large-base inversion was this fixed cost); fused, the refine adds
-      ~mult·k·dim FLOPs per probe pair and no new stage. The candidate
-      set is a per-list superset of the join form's global-mult·k
-      shortlist, so recall can only improve; floors unchanged.
-    - JOIN (vector-less index): the original shortlist → base join —
-      kept for indexes whose codes-only layout is the point (COW
-      streaming deltas), and as the oracle of the fused path's
-      equivalence test."""
-    from cs598vectordb_spark.functions.distance import squared_l2
 
-    if vec_col in index.codes.columns:
-        return _knn_ivfpq_refined_fused(
-            index, queries, k=k, nprobe=nprobe, mult=mult,
-            vec_col=vec_col, id_col=id_col,
-        )
-    shortlist = knn_ivfpq(index, queries, k=mult * k, nprobe=nprobe).select(
-        "q_id", "vec_id"
-    )
-    qv = queries.select(F.col("q_id"), F.col(vec_col).alias("_q_emb"))
-    scored = (
-        shortlist.join(
-            base.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_b_emb")),
-            "vec_id",
-        )
-        .join(F.broadcast(qv), "q_id")
-        .select("q_id", "vec_id", squared_l2("_q_emb", "_b_emb").alias("dist"))
-    )
+def _ordered_cut(s: np.ndarray, ids: np.ndarray, kk: int) -> np.ndarray:
+    """Positions of the kk best scores in s under the (score, vec_id)
+    total order the final window uses. The argpartition cut is widened
+    to EVERY row tied with the boundary score first (identical code
+    vectors are plausible at small ksub / duplicate inputs), so the
+    pick is deterministic across partitionings, not
+    argpartition-arbitrary."""
+    part = np.argpartition(s, kk - 1)[:kk]
+    cand = np.flatnonzero(s <= s[part].max())
+    order = np.lexsort((ids[cand], s[cand]))[:kk]
+    return cand[order]
+
+
+def _topk_window(scored: DataFrame, k: int) -> DataFrame:
+    """Final per-query merge: (q_id, rank, vec_id, dist) for the k
+    smallest dist, ties broken by vec_id."""
     w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
-
-
-def _knn_ivfpq_refined_fused(
-    index: IvfPqIndex,
-    queries: DataFrame,
-    k: int,
-    nprobe: int,
-    mult: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Map-side ADC-select + exact re-rank over a keep_vectors index:
-    one pruned scan, one Arrow kernel, one final top-k window. Per
-    (query, probed list): ADC scores every code row (the vectorized
-    m-gather pass shared with knn_ivfpq), cuts to the top mult·k by
-    (adc, vec_id) deterministic order, computes exact squared-L2 on
-    just those rows' stored vectors, and emits the local exact top-k;
-    the window merges per-list winners globally. Exact-math volume is
-    the same mult·k per probe pair as the join form; the exchanges the
-    join form paid (shortlist window + full-base join) are gone.
-
-    Granularity note: the mult·k ADC cut is per (query, list,
-    PARTITION-FRAGMENT) — when a list's rows span physical partitions
-    (in-memory builds; multi-file lists), each fragment contributes its
-    own top-mult·k, so fragmentation only WIDENS the candidate set
-    (recall is monotone ≥ the whole-list cut; floors unaffected). The
-    flip side: two different physical layouts can return different —
-    both floor-valid — top-k for near-boundary candidates, which is
-    why this entry is floor-pinned, not value-hashed. The 1M
-    measurement of exactly this: a 32k-tiny-file layout made the probe
-    effectively exact over probed lists (recall 0.995) where the
-    1-file-per-list layout's honest ADC cut reads 0.71 at mult=10."""
-    spark = index.codes.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    C = index.centroids
-    books = index.cb.codebooks
-    m, dsub = index.cb.m, books.shape[2]
-
-    qc = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C.T)
-        + np.square(C).sum(1)[None, :]
-    )
-    probed = np.argsort(qc, axis=1)[:, :nprobe]
-
-    # worker-side LUTs (see knn_ivfpq): broadcast stays O(nq·dim), not
-    # the 262 MB nq·nprobe·m·ksub tensor that dominated the probe
-    nq = len(q_ids)
-    probe_map: dict[int, list[int]] = {}
-    for qi in range(nq):
-        for pi in range(nprobe):
-            probe_map.setdefault(int(probed[qi, pi]), []).append(qi)
-    b2 = np.square(books).sum(2)
-    bc = spark.sparkContext.broadcast((q_ids, Q, C, books, b2, probe_map))
-
-    lists = sorted(probe_map)
-    pruned = index.codes.filter(F.col("centroid_id").isin(lists))
-
-    def kern(batches):
-        import pandas as pd
-
-        bq_ids, bQ, bC, Bk, bb2, bmap = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_q, out_id, out_d = [], [], []
-            for cid, grp in pdf.groupby("centroid_id"):
-                probers = bmap.get(int(cid))
-                if not probers:
-                    continue
-                Cd = np.stack(grp["codes"].to_numpy())
-                V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
-                ids = grp[id_col].to_numpy(dtype=np.int64)
-                n = len(ids)
-                mk = min(mult * k, n)
-                k_eff = min(k, n)
-                qis = np.asarray(probers, dtype=np.int64)
-                Rq = bQ[qis] - bC[int(cid)]
-                scores = np.zeros((len(probers), n))
-                for j in range(m):
-                    sub = Rq[:, j * dsub : (j + 1) * dsub]
-                    Tj = (
-                        np.square(sub).sum(1, keepdims=True)
-                        - 2.0 * (sub @ Bk[j].T)
-                        + bb2[j][None, :]
-                    )
-                    scores += Tj[:, Cd[:, j]]
-                # deterministic ADC cut per prober: widen boundary ties,
-                # order by (adc, vec_id), take mult·k
-                sel = np.empty((len(probers), mk), dtype=np.int64)
-                for t in range(len(probers)):
-                    s = scores[t]
-                    part = np.argpartition(s, mk - 1)[:mk]
-                    cand = np.flatnonzero(s <= s[part].max())
-                    order = np.lexsort((ids[cand], s[cand]))[:mk]
-                    sel[t] = cand[order]
-                # exact refine on the selected rows only: (p, mk) pairs
-                Cs = V[sel]  # (p, mk, dim)
-                qv = bQ[qis]  # (p, dim)
-                ex = np.square(Cs - qv[:, None, :]).sum(axis=2)  # (p, mk)
-                for t in range(len(probers)):
-                    d = ex[t]
-                    kk = min(k_eff, mk)
-                    part = np.argpartition(d, kk - 1)[:kk]
-                    cand = np.flatnonzero(d <= d[part].max())
-                    tids = ids[sel[t]]
-                    order = np.lexsort((tids[cand], d[cand]))[:kk]
-                    pick = cand[order]
-                    out_q.append(np.full(kk, bq_ids[qis[t]], dtype=np.int64))
-                    out_id.append(tids[pick])
-                    out_d.append(d[pick])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_id),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
-
-    local = pruned.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("q_id", "rank", "vec_id", "dist")
     )

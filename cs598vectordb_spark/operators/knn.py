@@ -99,15 +99,6 @@ def topk_canonical(
     )
 
 
-def _topk_from_scores(
-    scores: np.ndarray, ids: np.ndarray, q_ids: np.ndarray, k: int, ascending: bool
-) -> pd.DataFrame:
-    """Back-compat shim for the IVF/SQ8/ivf2 probe kernels — the
-    canonical cut with the historical (scores, ids, q_ids, k,
-    ascending) signature and 'dist' column."""
-    return topk_canonical(scores, ids, q_ids, k, ascending, score_col="dist")
-
-
 def squared_l2_block(B: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """||b-q||² for every (base, query) pair — one BLAS GEMM.
 
@@ -157,7 +148,7 @@ def _topk_per_query(
         raise ValueError(f"unknown metric {metric}")
     if score_round is not None:
         np.round(scores, score_round, out=scores)
-    return _topk_from_scores(scores, ids, q_ids, k, ascending)
+    return topk_canonical(scores, ids, q_ids, k, ascending, score_col="dist")
 
 
 def knn_exact(

@@ -1,7 +1,8 @@
-"""Scalar quantization (SQ8) — the int8 compression leg FAISS ships as
-IndexScalarQuantizer (the reference's IVF-PQ config multi_tenant_script.py:
-94-99 is the sibling compression path; SQ trades less recall for a
-simpler, fully deterministic codec).
+"""Scalar quantization (SQ8) codec — the int8 compression FAISS ships as
+IndexScalarQuantizer. The engine's compressed search index of record is
+IVF-PQ (operators/ivfpq.py, the reference's multi_tenant_script.py:94-99
+config); this module is the codec alone, graded value-for-value by the
+sq8_encode / sq8_error oracles.
 
 Per-dimension affine codec over the whole table: code_d(x) =
 floor((x - min_d) / range_d * 255 + 0.5) clamped to [0, 255] — 4 bytes →
@@ -14,7 +15,7 @@ Scale shape: the stats pass is a posexplode + groupBy(pos) min/max —
 partial aggregation runs map-side, so the shuffle carries only
 |partitions|·dim rows regardless of table size. Encoding is a pure
 Catalyst projection against literal min/scale arrays (no Python, no
-shuffle). Search reconstructs inside the same GEMM kernel knn_exact uses.
+shuffle).
 """
 
 from __future__ import annotations
@@ -22,10 +23,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from cs598vectordb_spark.config import DEFAULT_K
 
 # guards a zero range on constant dimensions; mirrored in the oracle SQL
 _EPS = 1e-12
@@ -61,13 +60,11 @@ def sq_encode(
     codec: SqCodec,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    extra_cols: list[str] | None = None,
 ) -> DataFrame:
-    """(vec_id, codes ARRAY<INT>[dim], *extra_cols): pure Catalyst
-    projection — the half-up rounding (floor(x + 0.5)) is chosen over
-    round() because both engines evaluate it identically (no
-    banker's-rounding divergence). extra_cols ride along unchanged (e.g.
-    centroid_id for compressed inverted lists)."""
+    """(vec_id, codes ARRAY<INT>[dim]): pure Catalyst projection — the
+    half-up rounding (floor(x + 0.5)) is chosen over round() because
+    both engines evaluate it identically (no banker's-rounding
+    divergence)."""
     dim = len(codec.mins)
     v = F.col(vec_col).cast("array<double>")
     mins, rng = _lit_arr(codec.mins), _lit_arr(codec.ranges)
@@ -87,9 +84,7 @@ def sq_encode(
             ),
         ),
     )
-    return base.select(
-        F.col(id_col), code.alias("codes"), *[F.col(c) for c in (extra_cols or [])]
-    )
+    return base.select(F.col(id_col), code.alias("codes"))
 
 
 def sq_decode_error(
@@ -130,139 +125,4 @@ def sq_decode_error(
         F.round(F.avg("sse"), 6).alias("mse"),
         F.round(F.max("mae"), 6).alias("max_abs_err"),
         F.lit(4.0).alias("compression_x"),
-    )
-
-
-@dataclass
-class IvfSqIndex:
-    """Compressed inverted lists: int8 codes partitioned by centroid —
-    FAISS's IndexIVFScalarQuantizer as a parquet layout. A probe reads
-    nprobe/nlist of the PARTITIONS and 1 byte/dim of the CODES: both
-    pruning levers compose."""
-
-    table: DataFrame  # (vec_id, codes, centroid_id), parquet PARTITIONED BY centroid_id
-    codec: SqCodec
-    centroids: np.ndarray
-    nlist: int
-
-
-def build_ivf_sq(
-    base: DataFrame,
-    path: str,
-    nlist: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> IvfSqIndex:
-    """Coarse-quantize (k-means lists) then scalar-quantize (int8 codes)
-    and materialize PARTITIONED BY centroid_id — one build pass over the
-    base, both quantizers trained the engine's usual bounded way."""
-    from cs598vectordb_spark.operators.index import build_ivf_index
-
-    ivf = build_ivf_index(base, nlist=nlist, id_col=id_col, vec_col=vec_col)
-    codec = train_sq(base, vec_col)
-    enc = sq_encode(ivf.assigned, codec, vec_col, id_col, extra_cols=["centroid_id"])
-    # repartition on the list id first — see materialize_ivf: a direct
-    # partitionBy from the scan-partitioned encoder output writes
-    # ~tasks×nlist tiny files
-    enc.repartition(nlist, "centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(path)
-    spark = base.sparkSession
-    return IvfSqIndex(spark.read.parquet(path), codec, ivf.centroids, nlist)
-
-
-def knn_ivf_sq(
-    index: IvfSqIndex,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe the compressed lists: partition-pruned scan of the probed
-    centroids' int8 codes, batch reconstruction + masked GEMM in one
-    kernel (no joins), local top-k, tiny shuffle — knn_ivf's plan over
-    4×-smaller bytes."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
-
-    spark = queries.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    C = index.centroids
-    d2 = (
-        np.square(Q).sum(1, keepdims=True) - 2.0 * (Q @ C.T) + np.square(C).sum(1)[None, :]
-    )
-    nearest = np.argsort(d2, axis=1)[:, :nprobe]
-    probed = np.zeros((index.nlist, len(q_ids)), dtype=bool)
-    for j, row in enumerate(nearest):
-        probed[row, j] = True
-    probe_set = sorted({int(c) for row in nearest for c in row})
-    bc = spark.sparkContext.broadcast((q_ids, Q, probed, index.codec.mins, index.codec.ranges))
-
-    def kern(batches):
-        bq_ids, bQ, bprobed, mins, rng = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.float64)
-            B = mins[None, :] + codes / 255.0 * rng[None, :]
-            scores = squared_l2_block(B, bQ)
-            scores[~bprobed[pdf["centroid_id"].to_numpy(dtype=np.int64)]] = np.inf
-            out = _topk_from_scores(scores, ids, bq_ids, k, True)
-            if len(out):
-                yield out
-
-    local = (
-        index.table.filter(F.col("centroid_id").isin(probe_set))
-        .select(id_col, "codes", "centroid_id")
-        .mapInPandas(kern, "q_id long, vec_id long, dist double")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
-
-
-def knn_sq(
-    codes: DataFrame,
-    codec: SqCodec,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k over the int8 table: the kernel reconstructs each batch
-    (one broadcast of the 2·dim codec floats) and runs the same GEMM /
-    local-top-k shape as knn_exact — the scan reads 1-byte codes, full
-    floats never leave the codec."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
-
-    spark = codes.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    bc = spark.sparkContext.broadcast((q_ids, Q, codec.mins, codec.ranges))
-
-    def kern(batches):
-        bq_ids, bQ, mins, rng = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            C = np.stack(pdf["codes"].to_numpy()).astype(np.float64)
-            B = mins[None, :] + C / 255.0 * rng[None, :]
-            out = _topk_from_scores(squared_l2_block(B, bQ), ids, bq_ids, k, True)
-            if len(out):
-                yield out
-
-    local = codes.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
     )

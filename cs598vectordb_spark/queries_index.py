@@ -87,53 +87,6 @@ def ivf_materialized_for(spark: SparkSession, sf_dir: str, nlist: int = 16):
     return _warm(spark, ("ivf_materialized", sf_dir, nlist), build)
 
 
-def pq_artifacts_for(spark: SparkSession, sf_dir: str, m: int = 16, ksub: int = 256):
-    """(codebook, persisted encoded table) for the PQ query family."""
-    from cs598vectordb_spark.operators.pq import pq_encode, train_pq
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        cb = train_pq(emb, m=m, ksub=ksub)
-        enc = pq_encode(emb, cb).persist()
-        enc.count()
-        return (cb, enc)
-
-    return _warm(spark, ("pq", sf_dir, m, ksub), build)
-
-
-def sq_artifacts_for(spark: SparkSession, sf_dir: str):
-    """(codec, persisted int8-encoded table) for the SQ8 query family."""
-    from cs598vectordb_spark.operators.sq import sq_encode, train_sq
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        codec = train_sq(emb)
-        enc = sq_encode(emb, codec).persist()
-        enc.count()
-        return (codec, enc)
-
-    return _warm(spark, ("sq8", sf_dir), build)
-
-
-def ivf2_index_for(
-    spark: SparkSession, sf_dir: str, nlist1: int = 8, nlist2: int = 4
-):
-    """Two-level IVF, materialized PARTITIONED BY (l1_id, l2_id)."""
-    import os as _os
-
-    from cs598vectordb_spark.operators.ivf2 import build_ivf2_index, materialize_ivf2
-    from cs598vectordb_spark.queries_sources import _io_dir
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        return materialize_ivf2(
-            build_ivf2_index(emb, nlist1=nlist1, nlist2=nlist2),
-            _os.path.join(_io_dir(sf_dir, "ivf2_index"), "t"),
-        )
-
-    return _warm(spark, ("ivf2", sf_dir, nlist1, nlist2), build)
-
-
 def layered_graph2_for(
     spark: SparkSession, sf_dir: str, nlist1: int = 4, nlist2: int = 4, degree: int = 16
 ):
@@ -149,22 +102,6 @@ def layered_graph2_for(
     return _warm(spark, ("layered_graph2", sf_dir, nlist1, nlist2, degree), build)
 
 
-def ivf_sq_index_for(spark: SparkSession, sf_dir: str, nlist: int = 16):
-    """Compressed-inverted-list index (IVF partitions × SQ8 codes)."""
-    import os as _os
-
-    from cs598vectordb_spark.operators.sq import build_ivf_sq
-    from cs598vectordb_spark.queries_sources import _io_dir
-
-    def build():
-        emb, _ = _setup(spark, sf_dir)
-        return build_ivf_sq(
-            emb, _os.path.join(_io_dir(sf_dir, "ivf_sq8"), "t"), nlist=nlist
-        )
-
-    return _warm(spark, ("ivf_sq8", sf_dir, nlist), build)
-
-
 def warm_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Build every index artifact the headline queries probe, returning
     per-artifact build seconds — bench.py calls this before its timed
@@ -176,11 +113,7 @@ def warm_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     for name, fn in (
         ("ivf_build", lambda: ivf_index_for(spark, sf_dir)),
         ("ivf_materialize", lambda: ivf_materialized_for(spark, sf_dir)),
-        ("pq_train_encode", lambda: pq_artifacts_for(spark, sf_dir)),
-        ("sq8_train_encode", lambda: sq_artifacts_for(spark, sf_dir)),
-        ("ivf_sq8_build", lambda: ivf_sq_index_for(spark, sf_dir)),
         ("ivfpq_build", lambda: ivfpq_index_for(spark, sf_dir)),
-        ("ivf2_build", lambda: ivf2_index_for(spark, sf_dir)),
         ("layered_graph2_build", lambda: layered_graph2_for(spark, sf_dir)),
         # the served headline probe reads these on-disk artifacts; build
         # them here so its timed number is probe-only like the others
@@ -427,63 +360,6 @@ def q_knn_filtered_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("pq_reconstruction")
-def q_pq_reconstruction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ quality dashboard: mean squared reconstruction error + achieved
-    compression (the reference's exact config: m=16 subquantizers × 8 bits,
-    multi_tenant_script.py:95 — 16× on these 64-dim vectors, 32× on
-    SIFT's 128). Deterministic (seeded k-means) but not
-    ANSI-expressible → rows-only."""
-    from cs598vectordb_spark.operators.pq import pq_decode_error
-
-    emb, _ = _setup(spark, sf_dir)
-    cb, _enc = pq_artifacts_for(spark, sf_dir)
-    return pq_decode_error(emb, cb)
-
-
-@register("knn_pq")
-def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/PQ: asymmetric-distance top-k over the m-byte encoded table."""
-    from cs598vectordb_spark.operators.pq import knn_pq
-
-    _, q = _setup(spark, sf_dir)
-    cb, enc = pq_artifacts_for(spark, sf_dir)
-    return knn_pq(enc, cb, q, k=_K).select("q_id", "rank", "vec_id")
-
-
-@register("pq_recall")
-def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of ADC-PQ search vs exact — the compression/recall
-    trade-off the reference plots for IVF-PQ."""
-    from cs598vectordb_spark.operators.pq import knn_pq
-
-    emb, q = _setup(spark, sf_dir)
-    cb, enc = pq_artifacts_for(spark, sf_dir)
-    return recall_at_k(knn_pq(enc, cb, q, _K), knn_exact(emb, q, _K), _K)
-
-
-@register("knn_pq_refined")
-def q_knn_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/PQ+refine: ADC shortlist (5·k) over the compressed table, exact
-    re-rank of only the shortlist — recall 0.98 at sf0.1, the reference's
-    hnswlib territory, while scans stay 16×-compressed."""
-    from cs598vectordb_spark.operators.pq import knn_pq_refined
-
-    emb, q = _setup(spark, sf_dir)
-    cb, enc = pq_artifacts_for(spark, sf_dir)
-    return knn_pq_refined(enc, cb, emb, q, k=_K).select("q_id", "rank", "vec_id")
-
-
-@register("pq_refined_recall")
-def q_pq_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the refined PQ path vs exact."""
-    from cs598vectordb_spark.operators.pq import knn_pq_refined
-
-    emb, q = _setup(spark, sf_dir)
-    cb, enc = pq_artifacts_for(spark, sf_dir)
-    return recall_at_k(knn_pq_refined(enc, cb, emb, q, _K), knn_exact(emb, q, _K), _K)
-
-
 @register("knn_graph_layered2")
 def q_knn_graph_layered2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2/hierarchical layered graph: the layered walk behind ivf2's
@@ -500,100 +376,6 @@ def q_knn_graph_layered2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_graph_layered2(
         idx, q, k=_K, nprobe1=4, nprobe2=12, beam=32, rounds=4, n_entry=12
     ).select("q_id", "rank", "vec_id")
-
-
-@register("knn_ivf_sq8")
-def q_knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/IVF+SQ8: compressed inverted lists — probe reads nprobe/nlist
-    of the partitions AND 1 byte/dim of the codes; reconstruction +
-    masked GEMM in one joinless kernel (FAISS IndexIVFScalarQuantizer's
-    layout as parquet partitioning)."""
-    from cs598vectordb_spark.operators.sq import knn_ivf_sq
-
-    _, q = _setup(spark, sf_dir)
-    idx = ivf_sq_index_for(spark, sf_dir, nlist=16)
-    return knn_ivf_sq(idx, q, k=_K, nprobe=8).select("q_id", "rank", "vec_id")
-
-
-@register("ivf_sq8_recall")
-def q_ivf_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the doubly-quantized probe vs exact — the composed
-    loss of list pruning (IVF) and 8-bit codes (SQ)."""
-    from cs598vectordb_spark.operators.sq import knn_ivf_sq
-
-    emb, q = _setup(spark, sf_dir)
-    idx = ivf_sq_index_for(spark, sf_dir, nlist=16)
-    return recall_at_k(knn_ivf_sq(idx, q, _K, nprobe=8), knn_exact(emb, q, _K), _K)
-
-
-@register("knn_sq8")
-def q_knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/SQ8: top-k over the int8-quantized table — the kernel
-    reconstructs per batch and reuses knn_exact's GEMM/local-top-k shape.
-    Quantized distances → rows-only here; recall is graded by sq8_recall
-    and the codes/error by the sq8_encode/sq8_error oracles."""
-    from cs598vectordb_spark.operators.sq import knn_sq
-
-    _, q = _setup(spark, sf_dir)
-    codec, enc = sq_artifacts_for(spark, sf_dir)
-    return knn_sq(enc, codec, q, k=_K).select("q_id", "rank", "vec_id")
-
-
-@register("sq8_recall")
-def q_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of SQ8 search vs exact — 8-bit quantization barely moves
-    neighbor ranks, so this floors far above the 0.70 bar."""
-    from cs598vectordb_spark.operators.sq import knn_sq
-
-    emb, q = _setup(spark, sf_dir)
-    codec, enc = sq_artifacts_for(spark, sf_dir)
-    return recall_at_k(knn_sq(enc, codec, q, _K), knn_exact(emb, q, _K), _K)
-
-
-@register("knn_ivf2")
-def q_knn_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/two-level IVF (centroid-of-centroids): only the nlist1 coarse
-    layer is driver-resident; sub-centroids live in a distributed table
-    and probes pull just the probed cells' rows — the nlist-scaling path
-    for bases where sqrt(N) lists would swamp the driver (the reference
-    trains its coarse quantizer on a bounded sample for the same reason,
-    multi_tenant_script.py:94-99). Probe = nprobe2 sub-lists of
-    nlist1*nlist2, pruned as parquet PartitionFilters."""
-    from cs598vectordb_spark.operators.ivf2 import knn_ivf2
-
-    _, q = _setup(spark, sf_dir)
-    idx = ivf2_index_for(spark, sf_dir)
-    return knn_ivf2(idx, q, k=_K, nprobe1=4, nprobe2=12).select(
-        "q_id", "rank", "vec_id"
-    )
-
-
-@register("ivf2_recall")
-def q_ivf2_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the hierarchical probe vs exact."""
-    from cs598vectordb_spark.operators.ivf2 import knn_ivf2
-
-    emb, q = _setup(spark, sf_dir)
-    idx = ivf2_index_for(spark, sf_dir)
-    return recall_at_k(
-        knn_ivf2(idx, q, _K, nprobe1=4, nprobe2=12), knn_exact(emb, q, _K), _K
-    )
-
-
-@register("ivf2_autotune")
-def q_ivf2_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T4/hierarchical IVF: (nprobe1, nprobe2) sweep trace; the chosen
-    config is the cheapest clearing 0.9 recall."""
-    from cs598vectordb_spark.operators.ivf2 import autotune_ivf2
-
-    emb, q_full = _setup(spark, sf_dir)
-    q = q_full.limit(20)
-    truth = knn_exact(emb, q, _K)
-    _, trace = autotune_ivf2(ivf2_index_for(spark, sf_dir), q, truth, target_recall=0.9, k=_K)
-    return spark.createDataFrame(
-        [(t["nprobe1"], t["nprobe2"], t["recall"], t["selectivity"]) for t in trace],
-        "nprobe1 int, nprobe2 int, recall double, selectivity double",
-    )
 
 
 def graph2_materialized_for(

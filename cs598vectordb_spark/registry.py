@@ -289,11 +289,6 @@ _ROWS_ONLY_EVIDENCE: dict[str, str] = {
     "knn_ivf_materialized": "tests/test_plans.py::test_ivf_partition_pruning_and_equality",
     "knn_ivf_mllib": "tests/test_index.py::test_ivf_mllib_recall_floor",
     "ivf_autotune": "tests/test_index.py::test_autotune_meets_target",
-    "knn_ivf_sq8": "tests/test_index.py::test_ivf_sq8_pruned_and_recall",
-    "ivf_sq8_recall": "tests/test_index.py::test_ivf_sq8_pruned_and_recall",
-    "knn_ivf2": "tests/test_index.py::test_ivf2_recall_and_full_probe_exact",
-    "ivf2_recall": "tests/test_index.py::test_ivf2_recall_and_full_probe_exact",
-    "ivf2_autotune": "tests/test_index.py::test_ivf2_recall_and_full_probe_exact",
     # distributed kNN join (r15): knn_join (full probe) PROMOTED to an
     # oracle r16 — the partial-probe scale path stays rows-only
     # (approximate by design), recall-floor + pruning pinned
@@ -306,15 +301,7 @@ _ROWS_ONLY_EVIDENCE: dict[str, str] = {
     # numpy-bruteforce pin and the dress-rehearsal DuckDB comparison
     # remain as defense in depth but are no longer the primary
     # evidence.
-    # SQ8
-    "knn_sq8": "tests/test_index.py::test_sq8_roundtrip_and_recall",
-    "sq8_recall": "tests/test_index.py::test_sq8_roundtrip_and_recall",
-    # PQ / IVF-PQ
-    "pq_reconstruction": "tests/test_pq.py::test_more_bits_less_error",
-    "knn_pq": "tests/test_pq.py::test_adc_recall_clears_reference_floor",
-    "pq_recall": "tests/test_pq.py::test_adc_recall_clears_reference_floor",
-    "knn_pq_refined": "tests/test_pq.py::test_refined_recall_beats_plain_adc",
-    "pq_refined_recall": "tests/test_pq.py::test_refined_recall_beats_plain_adc",
+    # IVF-PQ
     "knn_ivfpq": "tests/test_pq.py::test_ivfpq_recall_floors",
     "knn_ivfpq_refined": "tests/test_pq.py::test_ivfpq_recall_floors",
     "ivfpq_autotune": "tests/test_pq.py::test_ivfpq_recall_floors",

@@ -161,27 +161,6 @@ def test_layered_graph_probe_is_single_kernel_stage(spark, sf_dir, emb_q):
     assert "WindowGroupLimit" in probe
 
 
-def test_ivf2_partition_pruning(spark, sf_dir, emb_q, tmp_path):
-    """The hierarchical probe's (l1_id, l2_id) filter must reach the
-    materialized scan as PartitionFilters — unprobed sub-lists unread."""
-    from cs598vectordb_spark.operators.ivf2 import (
-        build_ivf2_index,
-        knn_ivf2,
-        materialize_ivf2,
-    )
-
-    emb, q = emb_q
-    idx = materialize_ivf2(
-        build_ivf2_index(emb, nlist1=8, nlist2=4), str(tmp_path / "ivf2")
-    )
-    plan = plan_of(knn_ivf2(idx, q, DEFAULT_K, nprobe1=2, nprobe2=4))
-    assert "PartitionFilters" in plan
-    import re
-
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
-    assert "l1_id" in pf, pf
-
-
 def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
     """Both sides written bucketed+sorted on the join key: with broadcast
     disabled (the 100 TB case — neither side fits an executor) the

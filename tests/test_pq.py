@@ -1,4 +1,5 @@
-"""Product quantization: encode determinism, ADC search recall, error."""
+"""IVF-PQ: recall floors, probe determinism, the fused refine, and the
+delete/insert/compact layout paths."""
 
 from __future__ import annotations
 
@@ -6,12 +7,6 @@ import pytest
 
 from cs598vectordb_spark.operators.knn import knn_exact
 from cs598vectordb_spark.operators.metrics import recall_at_k
-from cs598vectordb_spark.operators.pq import (
-    knn_pq,
-    pq_decode_error,
-    pq_encode,
-    train_pq,
-)
 from cs598vectordb_spark.sources.tables import load_table, queries_from_embeddings
 
 
@@ -19,48 +14,6 @@ from cs598vectordb_spark.sources.tables import load_table, queries_from_embeddin
 def emb_q(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     return emb, queries_from_embeddings(emb, 30)
-
-
-def test_encode_shape_and_determinism(spark, emb_q):
-    emb, _ = emb_q
-    cb = train_pq(emb, m=8, ksub=16)
-    codes1 = {r["vec_id"]: r["codes"] for r in pq_encode(emb, cb).collect()}
-    codes2 = {r["vec_id"]: r["codes"] for r in pq_encode(emb, cb).collect()}
-    assert codes1 == codes2
-    assert all(len(c) == 8 for c in codes1.values())
-    assert all(0 <= v < 16 for c in codes1.values() for v in c)
-
-
-def test_more_bits_less_error(spark, emb_q):
-    emb, _ = emb_q
-    coarse = pq_decode_error(emb, train_pq(emb, m=8, ksub=8)).first()["mse"]
-    fine = pq_decode_error(emb, train_pq(emb, m=8, ksub=64)).first()["mse"]
-    assert fine < coarse
-
-
-def test_adc_recall_clears_reference_floor(spark, emb_q):
-    """m=16 × 8-bit is the reference's own PQ config
-    (multi_tenant_script.py:95); recall must clear the 0.70 floor the
-    reference accepts for Annoy (BASELINE.md)."""
-    emb, q = emb_q
-    cb = train_pq(emb, m=16, ksub=256)
-    pred = knn_pq(pq_encode(emb, cb), cb, q, k=10)
-    truth = knn_exact(emb, q, k=10)
-    rec = recall_at_k(pred, truth, 10).collect()[0][0]
-    assert rec >= 0.70, rec
-
-
-def test_refined_recall_beats_plain_adc(spark, emb_q):
-    from cs598vectordb_spark.operators.pq import knn_pq_refined
-
-    emb, q = emb_q
-    cb = train_pq(emb, m=16, ksub=256)
-    codes = pq_encode(emb, cb)
-    truth = knn_exact(emb, q, k=10)
-    plain = recall_at_k(knn_pq(codes, cb, q, 10), truth, 10).collect()[0][0]
-    refined = recall_at_k(knn_pq_refined(codes, cb, emb, q, 10), truth, 10).collect()[0][0]
-    assert refined >= plain
-    assert refined >= 0.9, (plain, refined)
 
 
 def test_ivfpq_recall_floors(spark, sf_dir):

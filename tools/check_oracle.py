@@ -71,6 +71,7 @@ def _bare_spark():
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("oracle-check")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .getOrCreate()
     )

@@ -37,8 +37,7 @@ def main() -> int:
         # fall back to every oracled headline query if parsing ever breaks
         names = [
             "knn_exact", "knn_exact_2k", "knn_cosine", "knn_ivf_materialized",
-            "knn_ivf2", "knn_pq_refined", "knn_ivfpq", "knn_sq8", "knn_ivf_sq8",
-            "knn_graph_layered2", "knn_graph2_served", "recall_low_dim",
+            "knn_ivfpq", "knn_graph_layered2", "knn_graph2_served", "recall_low_dim",
             "knn_post_delete", "scan_fvecs",
             "pricing_summary", "shipping_priority", "local_supplier_volume",
             "order_priority_count", "sessionize", "events_hourly",
