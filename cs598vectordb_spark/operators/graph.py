@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import OrderedDict
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -41,9 +42,10 @@ from cs598vectordb_spark.config import DEFAULT_K, SEED
 #
 #   top layer  = the ivf2 two-level pruner: L1 (driver-sized) prunes to
 #                nprobe1 cells, ONLY those cells' L2 sub-centroid rows
-#                are pulled (bounded: nprobe1·nlist2 — never the full L2
-#                matrix), and the nprobe2 nearest (l1, l2) sub-cells are
-#                the probed segments;
+#                are pulled (bounded: nprobe1·nlist2, into a byte-capped
+#                per-index driver cache — never the full L2 matrix of a
+#                grid past the cap), and the nprobe2 nearest (l1, l2)
+#                sub-cells are the probed segments;
 #   base layer = a per-segment kNN subgraph, co-partitioned with its
 #                vectors, walked ENTIRELY inside one Arrow kernel
 #                (best-first beam search in numpy — no per-hop stages).
@@ -335,9 +337,31 @@ def _walk_probed_segments(
 # on any store) and falls back to mtime only where the sidecar is
 # absent (pre-epoch indexes on POSIX paths).
 
-_SEG_CACHE: dict = {}  # (seg_dir, sid) -> (ids, X_src, nbr_pos, sq_x, bytes)
-_SEG_CACHE_LRU: list = []  # keys, least-recent first
-_SEG_CACHE_BYTES = [0]
+
+class _SegmentLru(OrderedDict):
+    """(seg_dir, sid, epoch) -> (ids, X_src, nbr_pos, sq_x, bytes), least
+    recent first, with `nbytes` the sum of the entries' sizes. A worker
+    process runs one task at a time, so it needs no lock."""
+
+    nbytes = 0
+
+    def hit(self, key):
+        entry = self.get(key)
+        if entry is not None:
+            self.move_to_end(key)
+        return entry
+
+    def add(self, key, entry, cap: int) -> None:
+        size = entry[-1]
+        if size > cap:
+            return
+        while self and self.nbytes + size > cap:
+            self.nbytes -= self.popitem(last=False)[1][-1]
+        self[key] = entry
+        self.nbytes += size
+
+
+_SEG_CACHE = _SegmentLru()
 
 _EPOCH_FILE = "_EPOCH"
 
@@ -428,10 +452,8 @@ def _served_segment(
         int(sid),
         epoch if epoch is not None else os.path.getmtime(part),
     )
-    hit = _SEG_CACHE.get(key)
+    hit = _SEG_CACHE.hit(key)
     if hit is not None:
-        _SEG_CACHE_LRU.remove(key)
-        _SEG_CACHE_LRU.append(key)
         return hit
     import pyarrow.parquet as pq
 
@@ -463,14 +485,7 @@ def _served_segment(
         + sum(a.nbytes for a in nbr_pos)
     )
     entry = (ids, X, nbr_pos, sq_x, nbytes)
-    cap = _seg_cache_cap()
-    if nbytes <= cap:
-        while _SEG_CACHE_BYTES[0] + nbytes > cap and _SEG_CACHE_LRU:
-            old = _SEG_CACHE_LRU.pop(0)
-            _SEG_CACHE_BYTES[0] -= _SEG_CACHE.pop(old)[4]
-        _SEG_CACHE[key] = entry
-        _SEG_CACHE_LRU.append(key)
-        _SEG_CACHE_BYTES[0] += nbytes
+    _SEG_CACHE.add(key, entry, _seg_cache_cap())
     return entry
 
 
@@ -488,20 +503,24 @@ def _walk_served_segments(
     vec_col: str,
 ) -> DataFrame:
     """Serving-mode probe tail: the plan's input is the tiny probed
-    (segment_id) list — ONE int row per probed segment — and the walk
-    kernel pulls segment payloads worker-side via `_served_segment`.
-    Same query broadcast, same `_beam_walk_block`, same window merge as
-    `_walk_probed_segments`; only the payload transport differs."""
+    (segment_id) list — ONE int row per probed segment, a local relation
+    split over the default parallelism with NO repartition before the
+    kernel — and the walk kernel pulls segment payloads worker-side via
+    `_served_segment`. Each task walks its segments with the shared
+    `_beam_walk_block`, then emits only its local top-k per query by
+    (dist, vec_id); the same window merge as `_walk_probed_segments`
+    follows. vec_ids are unique across segments, so the global top-k is
+    a subset of the union of the local ones and rows equal the pinned
+    probe's. Plan: one Exchange (hash on q_id), two Spark jobs."""
     import pandas as pd
 
     bc = _pooled_broadcast(spark, (q_ids, Q, probed))
-    sids = sorted(int(s) for s in probed)
-    width = max(1, min(len(sids), 2 * spark.sparkContext.defaultParallelism))
-    sdf = spark.createDataFrame([(s,) for s in sids], "segment_id int")
+    sdf = spark.createDataFrame([(int(s),) for s in sorted(probed)], "segment_id int")
 
     def serve(batches):
         bq_ids, bQ, bprobed = bc.value
         epoch = _read_epoch(seg_dir)  # once per task, not per segment
+        parts_q, parts_id, parts_d = [], [], []
         for pdf in batches:
             for sid in pdf["segment_id"].tolist():
                 qsel = bprobed.get(int(sid))
@@ -524,24 +543,35 @@ def _walk_served_segments(
                     ids, X, nbr_pos, sq_x, bQ, bq_ids, qsel,
                     k, beam, rounds, n_entry,
                 )
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.concatenate(out_q),
-                            "vec_id": np.concatenate(out_id),
-                            "dist": np.concatenate(out_d),
-                        }
-                    )
+                parts_q += out_q
+                parts_id += out_id
+                parts_d += out_d
+        if not parts_q:
+            return
+        cq = np.concatenate(parts_q)
+        cid = np.concatenate(parts_id)
+        cd = np.concatenate(parts_d)
+        o = np.lexsort((cid, cd, cq))
+        cq, cid, cd = cq[o], cid[o], cd[o]
+        keep = np.arange(len(cq)) - np.searchsorted(cq, cq) < k
+        yield pd.DataFrame({"q_id": cq[keep], "vec_id": cid[keep], "dist": cd[keep]})
 
-    local = sdf.repartition(width, "segment_id").mapInPandas(
-        serve, "q_id long, vec_id long, dist double"
-    )
+    local = sdf.mapInPandas(serve, "q_id long, vec_id long, dist double")
     w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     return (
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("q_id", "rank", "vec_id", "dist")
     )
+
+
+# Byte ceiling of one index object's driver cache of L2 rows (see
+# LayeredGraph2Index.l2_rows). 32 MB holds the whole L2 layer of the
+# default grid up to ~30M rows (10M: 100x100 sub-centroids at dim 128 is
+# ~10 MB); past it, cells not yet cached are collected per probe, so the
+# full L2 matrix of a 100M grid (318x318, ~100 MB) never reaches the
+# driver.
+_L2_DRIVER_CACHE_BYTES = 32 << 20
 
 
 class LayeredGraph2Index:
@@ -564,6 +594,56 @@ class LayeredGraph2Index:
         self.nlist2 = nlist2
         self.degree = degree
         self.serve_dir = serve_dir
+        # l1_id -> (keys, C2) of its L2 rows; filled lazily by l2_rows.
+        # No staleness key: l2_table never changes for one object
+        # (delete/insert pass it through into a new object, and a rebuild
+        # in place is only seen through a re-open, which is a new object)
+        self._l2_cells: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._l2_bytes = 0
+        self._l2_lock = threading.Lock()
+
+    def l2_rows(self, cells: list[int]) -> tuple[np.ndarray, np.ndarray]:
+        """(keys, C2) of the L2 rows of the sorted L1 `cells`: keys are
+        l1_id·nlist2 + l2_id ascending, C2 the float64 sub-centroids.
+        Cells not yet in the driver cache come from l2_table in ONE
+        bounded collect (≤ len(cells)·nlist2 rows) and are cached while
+        the cache stays under _L2_DRIVER_CACHE_BYTES; a warm probe reads
+        no L2 rows at all."""
+        with self._l2_lock:
+            got = {c: self._l2_cells[c] for c in cells if c in self._l2_cells}
+        missing = [c for c in cells if c not in got]
+        if missing:
+            rows = (
+                self.l2_table.filter(F.col("l1_id").isin(missing))
+                .select("l1_id", "l2_id", "centroid")
+                .collect()
+            )
+            dim = self.l1_centroids.shape[1]
+            per_cell: dict[int, list] = {c: [] for c in missing}
+            for r in rows:
+                per_cell[int(r["l1_id"])].append(r)
+            for c, rs in per_cell.items():
+                rs.sort(key=lambda r: r["l2_id"])
+                keys = np.array(
+                    [c * self.nlist2 + r["l2_id"] for r in rs], dtype=np.int64
+                )
+                C2 = np.array(
+                    [r["centroid"] for r in rs], dtype=np.float64
+                ).reshape(len(rs), dim)
+                got[c] = (keys, C2)
+            with self._l2_lock:
+                for c in missing:
+                    size = got[c][0].nbytes + got[c][1].nbytes
+                    if (
+                        c not in self._l2_cells
+                        and self._l2_bytes + size <= _L2_DRIVER_CACHE_BYTES
+                    ):
+                        self._l2_cells[c] = got[c]
+                        self._l2_bytes += size
+        return (
+            np.concatenate([got[c][0] for c in cells]),
+            np.concatenate([got[c][1] for c in cells]),
+        )
 
     def close(self) -> None:
         """Release the persisted segment table. Maintenance ops
@@ -685,7 +765,7 @@ def build_layered_graph2(
 
 def knn_graph_layered2(
     index: LayeredGraph2Index,
-    queries: DataFrame,
+    queries,
     k: int = DEFAULT_K,
     nprobe1: int = 2,
     nprobe2: int = 6,
@@ -695,60 +775,44 @@ def knn_graph_layered2(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(q_id, rank, vec_id, dist): hierarchical graph probe. L1 scored on
-    the driver (nlist1 GEMM over the driver-sized coarse layer), the
-    probed cells' L2 rows pulled from the DISTRIBUTED L2 table (bounded
-    collect: nprobe1·nlist2 rows — the full centroid matrix never
-    reaches the driver), the best nprobe2 sub-cells per query walked by
-    the shared segment kernel, one window merge."""
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
+    """(q_id, rank, vec_id, dist): hierarchical graph probe. `queries` is
+    a Spark or pandas (q_id, <vec_col>) frame; a pandas one is used as
+    is, with no Spark job. L1 scored on the driver (nlist1 GEMM over the
+    driver-sized coarse layer), the probed cells' L2 rows read from the
+    index's byte-capped driver cache (`l2_rows`: one bounded collect for
+    cells not yet cached — the full centroid matrix of a large grid
+    never reaches the driver), the best nprobe2 sub-cells per query
+    walked by the shared segment kernel, one window merge."""
+    if isinstance(queries, DataFrame):
+        queries = queries.select("q_id", vec_col).toPandas()
+    q_ids = queries["q_id"].to_numpy(dtype=np.int64)
+    Q = np.ascontiguousarray(np.stack(queries[vec_col].to_numpy()), dtype=np.float64)
     nq = len(q_ids)
+    sq_q = np.square(Q).sum(1, keepdims=True)
     C1 = index.l1_centroids
-    d1 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C1.T)
-        + np.square(C1).sum(1)[None, :]
-    )
+    d1 = sq_q - 2.0 * (Q @ C1.T) + np.square(C1).sum(1)[None, :]
     np1 = min(nprobe1, index.nlist1)
     cells = np.argsort(d1, axis=1)[:, :np1]
-    cell_set = sorted({int(c) for row in cells for c in row})
-    l2 = (
-        index.l2_table.filter(F.col("l1_id").isin(cell_set))
-        .select("l1_id", "l2_id", "centroid")
-        .collect()
-    )
-    keys = np.array(
-        [r["l1_id"] * index.nlist2 + r["l2_id"] for r in l2], dtype=np.int64
-    )
-    C2 = np.ascontiguousarray(
-        np.stack([np.asarray(r["centroid"]) for r in l2]), dtype=np.float64
-    )
-    d2 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C2.T)
-        + np.square(C2).sum(1)[None, :]
-    )
-    cell_ok = np.zeros((nq, len(l2)), dtype=bool)
-    row_cell = keys // index.nlist2
-    for j in range(nq):
-        cell_ok[j] = np.isin(row_cell, cells[j])
-    d2[~cell_ok] = np.inf
-    np2 = min(nprobe2, len(l2))
-    order = np.argsort(d2, axis=1)[:, :np2]
-    probed: dict[int, list[int]] = {}
-    for j in range(nq):
-        for key in keys[order[j]][np.isfinite(d2[j, order[j]])]:
-            probed.setdefault(int(key), []).append(j)
-    probed_np = {
-        key: np.asarray(js, dtype=np.int64) for key, js in probed.items()
-    }
+    keys, C2 = index.l2_rows(np.unique(cells).tolist())
+    d2 = sq_q - 2.0 * (Q @ C2.T) + np.square(C2).sum(1)[None, :]
+    # a query takes only sub-cells of its own probed L1 cells
+    own = np.zeros((nq, index.nlist1), dtype=bool)
+    own[np.arange(nq)[:, None], cells] = True
+    d2[~own[:, keys // index.nlist2]] = np.inf
+    np2 = min(nprobe2, len(keys))
+    order = np.argsort(d2, axis=1, kind="stable")[:, :np2]
+    ok = np.isfinite(np.take_along_axis(d2, order, axis=1))
+    # segment id -> ascending indices into Q of the queries probing it
+    sel_key = keys[order][ok]
+    sel_q = np.broadcast_to(np.arange(nq)[:, None], order.shape)[ok]
+    by = np.lexsort((sel_q, sel_key))
+    sids, first = np.unique(sel_key[by], return_index=True)
+    probed = dict(zip(sids.tolist(), np.split(sel_q[by], first[1:])))
     if index.serve_dir is not None:
         return _walk_served_segments(
             index.segments.sparkSession,
             index.serve_dir,
-            probed_np,
+            probed,
             q_ids,
             Q,
             k,
@@ -760,7 +824,7 @@ def knn_graph_layered2(
         )
     return _walk_probed_segments(
         index.segments,
-        probed_np,
+        probed,
         q_ids,
         Q,
         k,
@@ -1281,8 +1345,9 @@ def materialize_layered2(
     faiss.write_index/read_index; Milvus persists per-segment indexes,
     /root/reference/dynamic_script_milvus.py:76-82). Three artifacts:
     segments PARTITIONED BY segment_id, the DISTRIBUTED L2 centroid
-    table (never driver-collected — the property that lets segment
-    count exceed any driver-sized top layer), and a driver-sized L1
+    table (never collected whole — probes pull only probed cells into a
+    byte-capped driver cache, the property that lets segment count
+    exceed any driver-sized top layer), and a driver-sized L1
     sidecar (nlist1 rows by design). `pinned` picks the re-open mode
     (see open_layered2) — pass False when the caller wants the
     cold-serving relation, so the write path never shuffles/persists a
@@ -1349,10 +1414,10 @@ def open_layered2(
         int(rows[0]["nlist2"]),
         int(rows[0]["degree"]),
     )
-    # NOT persisted on purpose: an A/B at 1M measured the per-probe L2
-    # parquet re-scan (nlist1·nlist2 rows, page-cached) as indistin-
-    # guishable from a pinned copy (2.10 vs 2.16 s med-3 same-session),
-    # so the open stays side-effect-free
+    # NOT persisted: probes read L2 rows through the index object's
+    # byte-capped driver cache (LayeredGraph2Index.l2_rows), which scans
+    # this relation only for cells it has not cached yet, so the open
+    # stays side-effect-free
     l2 = spark.read.parquet(os.path.join(path, "l2"))
     segs = spark.read.parquet(os.path.join(path, "segments"))
     serve_dir = os.path.join(path, "segments") if served else None

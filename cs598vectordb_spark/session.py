@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "cs598vectordb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -47,6 +49,11 @@ def get_spark(app_name: str = "cs598vectordb_spark", cpus: int | None = None) ->
         # exact kNN uses an explicit crossJoin(broadcast(queries)); keep the
         # guard rails on for everything else.
         .config("spark.sql.crossJoin.enabled", "true")
+        # Python workers unpickle package kernels by module path, so they
+        # need the package's parent directory on their path whatever
+        # directory the driver script was started from (Spark merges this
+        # ahead of the worker's inherited PYTHONPATH)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -562,6 +562,158 @@ def test_served_skips_missing_segment_dir(spark, sf_dir, tmp_path):
     fresh.segments.unpersist()
 
 
+def _jobs_run(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn ran), counted under job group
+    `group` once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_graph2_served_probe_is_two_jobs(spark, sf_dir, tmp_path):
+    """The served probe feeds the walk kernel its probed segment ids as
+    a local relation: its executed plan has exactly ONE Exchange, hash-
+    partitioned on q_id (the window merge), with no segment_id
+    repartition and no scan of the segments parquet, and a warm probe
+    over a pandas query frame runs at most 2 Spark jobs (the merge's
+    shuffle-map job and its result job). A pandas query frame returns
+    the rows of the Spark frame it was collected from, on both the
+    served and the pinned index."""
+    from cs598vectordb_spark.operators.graph import (
+        knn_graph_layered2,
+        materialize_layered2,
+        open_layered2,
+    )
+    from cs598vectordb_spark.queries_index import layered_graph2_for
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = queries_from_embeddings(emb, NQ)
+    qpdf = q.select("q_id", "embedding").toPandas()
+    path = str(tmp_path / "g2jobs")
+    pinned = materialize_layered2(layered_graph2_for(spark, sf_dir, nlist1=8, nlist2=8), path)
+    served = open_layered2(spark, path, served=True)
+    kw = dict(k=K, nprobe1=2, nprobe2=6, beam=32)
+
+    plan = knn_graph_layered2(served, q, **kw)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(q_id" in plan, plan
+    assert "hashpartitioning(segment_id" not in plan, plan
+    assert "segments" not in plan, plan
+
+    def rows(index, queries):
+        return knn_graph_layered2(index, queries, **kw).orderBy("q_id", "rank").collect()
+
+    for index in (served, pinned):
+        assert rows(index, qpdf) == rows(index, q)
+    assert rows(served, qpdf) == rows(pinned, qpdf)
+
+    got, jobs = _jobs_run(
+        spark, "graph2-served-warm", lambda: knn_graph_layered2(served, qpdf, **kw).collect()
+    )
+    assert 0 < jobs <= 2, jobs
+    assert len(got) == NQ * K
+    pinned.segments.unpersist()
+
+
+def test_graph2_l2_driver_cache(spark, sf_dir, tmp_path, monkeypatch):
+    """The probed cells' L2 rows are cached on the index object: the
+    first probe collects them, a second probe of the same object issues
+    no L2 scan (the route of a pandas query frame then runs no Spark job
+    at all). With the cache's byte ceiling at 0 nothing is cached, every
+    probe collects its L2 rows, and the rows equal the cached run."""
+    from cs598vectordb_spark.operators import graph
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qpdf = queries_from_embeddings(emb, NQ).select("q_id", "embedding").toPandas()
+    path = str(tmp_path / "g2l2")
+    graph.materialize_layered2(
+        graph.build_layered_graph2(emb, 4, 4, degree=16), path, pinned=False
+    ).segments.unpersist()
+    kw = dict(k=K, nprobe1=2, nprobe2=6, beam=32)
+
+    def route(index, group):
+        return _jobs_run(spark, group, lambda: graph.knn_graph_layered2(index, qpdf, **kw))
+
+    served = graph.open_layered2(spark, path, served=True)
+    first, jobs1 = route(served, "graph2-l2-first")
+    assert jobs1 >= 1 and served._l2_cells
+    second, jobs2 = route(served, "graph2-l2-second")
+    assert jobs2 == 0, "a warm probe must not scan the L2 table"
+    cached = second.orderBy("q_id", "rank").collect()
+    assert first.orderBy("q_id", "rank").collect() == cached
+
+    monkeypatch.setattr(graph, "_L2_DRIVER_CACHE_BYTES", 0)
+    uncached = graph.open_layered2(spark, path, served=True)
+    for i in range(2):
+        out, jobs = route(uncached, f"graph2-l2-uncached-{i}")
+        assert jobs >= 1 and not uncached._l2_cells
+        assert out.orderBy("q_id", "rank").collect() == cached
+
+
+def test_graph2_l2_driver_cache_concurrent_fill(spark, monkeypatch):
+    """Concurrent probes (batcher leaders) fill one index object's L2
+    cache from many threads: every call returns its cells' rows, and the
+    cache's byte count equals the sum of its entries and stays under the
+    ceiling (a lost update on the counter breaks the equality)."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    from cs598vectordb_spark.operators import graph
+
+    nlist1, nlist2, dim = 8, 4, 4
+    rows = [
+        (c, j, [float(c * 100 + j * 10 + d) for d in range(dim)])
+        for c in range(nlist1)
+        for j in range(nlist2)
+        if (c + j) % 5  # uneven cells, as k-means leaves them
+    ]
+    l2 = spark.createDataFrame(rows, "l1_id int, l2_id int, centroid array<double>")
+    idx = graph.LayeredGraph2Index(None, np.zeros((nlist1, dim)), l2, nlist1, nlist2, 16)
+    cell_bytes = nlist2 * 8 * (1 + dim)
+    monkeypatch.setattr(graph, "_L2_DRIVER_CACHE_BYTES", 3 * cell_bytes)
+    want = {
+        c: np.array([c * nlist2 + j for cc, j, _ in rows if cc == c], dtype=np.int64)
+        for c in range(nlist1)
+    }
+    errors = []
+
+    def worker(seed: int) -> None:
+        rng = np.random.default_rng(seed)
+        for _ in range(4):
+            cells = sorted(rng.choice(nlist1, size=3, replace=False).tolist())
+            keys, C2 = idx.l2_rows(cells)
+            exp = np.concatenate([want[c] for c in cells])
+            ok = np.array_equal(keys, exp) and np.array_equal(
+                C2[:, 0], (keys // nlist2) * 100.0 + (keys % nlist2) * 10.0
+            )
+            if not ok:
+                errors.append((cells, keys))
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads), "an l2_rows call hung"
+    assert not errors, errors[:3]
+    assert idx._l2_cells
+    assert idx._l2_bytes == sum(k.nbytes + c.nbytes for k, c in idx._l2_cells.values())
+    assert idx._l2_bytes <= 3 * cell_bytes
+
+
 def test_graph2_filtered_ann(spark, sf_dir):
     """Filtered ANN (post-filter with expansion) on the hierarchical
     index: every result satisfies the predicate, per-query results never
