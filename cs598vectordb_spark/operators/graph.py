@@ -489,6 +489,24 @@ def _served_segment(
     return entry
 
 
+def _balanced_groups(probed: dict[int, np.ndarray], n: int) -> list[list[int]]:
+    """Split the probed segment ids into at most `n` groups of near-equal
+    walk work: segments in descending order of query count, each onto
+    the group with the fewest queries so far (ties to the lower group,
+    then the lower segment id, so a probe's split is deterministic). The
+    query count is the work estimate: the driver does not know segment
+    sizes, and a walk's fixed per-query cost dominates its per-row cost
+    at the default grid's ~1k-row segments."""
+    n = max(1, min(n, len(probed)))
+    load = [0] * n
+    groups: list[list[int]] = [[] for _ in range(n)]
+    for sid in sorted(probed, key=lambda s: (-len(probed[s]), s)):
+        g = load.index(min(load))
+        groups[g].append(int(sid))
+        load[g] += len(probed[sid])
+    return [sorted(g) for g in groups]
+
+
 def _walk_served_segments(
     spark,
     seg_dir: str,
@@ -502,27 +520,35 @@ def _walk_served_segments(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Serving-mode probe tail: the plan's input is the tiny probed
-    (segment_id) list — ONE int row per probed segment, a local relation
-    split over the default parallelism with NO repartition before the
-    kernel — and the walk kernel pulls segment payloads worker-side via
-    `_served_segment`. Each task walks its segments with the shared
-    `_beam_walk_block`, then emits only its local top-k per query by
-    (dist, vec_id); the same window merge as `_walk_probed_segments`
-    follows. vec_ids are unique across segments, so the global top-k is
-    a subset of the union of the local ones and rows equal the pinned
-    probe's. Plan: one Exchange (hash on q_id), two Spark jobs."""
+    """Serving-mode probe tail: the plan's input is a tiny local relation
+    with ONE row per task, the probed segment ids that task walks, and
+    NO repartition before the kernel; the walk kernel pulls segment
+    payloads worker-side via `_served_segment`. The ids are split into
+    default-parallelism groups of near-equal query counts
+    (`_balanced_groups`): how queries fall into L1 cells depends on the
+    data, and the heavier of two contiguous segment-id ranges (whole L1
+    cells) carried up to 1.3x an even share of the walk on clustered
+    10k bases, so a probe waited on it. Each task walks its segments
+    with the shared `_beam_walk_block`, then emits only its local top-k
+    per query by (dist, vec_id); the same window merge as
+    `_walk_probed_segments` follows. vec_ids are unique across segments,
+    so the global top-k is a subset of the union of the local ones and
+    rows equal the pinned probe's, whatever the split. Plan: one
+    Exchange (hash on q_id), two Spark jobs."""
     import pandas as pd
 
     bc = _pooled_broadcast(spark, (q_ids, Q, probed))
-    sdf = spark.createDataFrame([(int(s),) for s in sorted(probed)], "segment_id int")
+    groups = _balanced_groups(probed, spark.sparkContext.defaultParallelism)
+    # a local list is parallelized into default-parallelism slices, so
+    # each group row is one task
+    sdf = spark.createDataFrame([(g,) for g in groups], "segment_ids array<int>")
 
     def serve(batches):
         bq_ids, bQ, bprobed = bc.value
         epoch = _read_epoch(seg_dir)  # once per task, not per segment
         parts_q, parts_id, parts_d = [], [], []
         for pdf in batches:
-            for sid in pdf["segment_id"].tolist():
+            for sid in [int(s) for g in pdf["segment_ids"] for s in g]:
                 qsel = bprobed.get(int(sid))
                 if qsel is None or len(qsel) == 0:
                     continue

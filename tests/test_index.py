@@ -714,6 +714,39 @@ def test_graph2_l2_driver_cache_concurrent_fill(spark, monkeypatch):
     assert idx._l2_bytes <= 3 * cell_bytes
 
 
+def test_graph2_served_walk_groups_are_balanced():
+    """The served walk's task split: every probed segment id lands in
+    exactly one group, there are at most n groups (one per segment when
+    n exceeds the segment count), the heaviest and lightest groups differ
+    by at most one segment's queries, and the split is deterministic.
+    A probe whose segment-id halves carry 1,200 and 400 queries splits
+    800 / 800."""
+    import numpy as np
+
+    from cs598vectordb_spark.operators.graph import _balanced_groups
+
+    rng = np.random.default_rng(7)
+    for n in (1, 2, 3, 8):
+        for _ in range(20):
+            n_seg = int(rng.integers(1, 40))
+            sids = rng.choice(1000, size=n_seg, replace=False)
+            probed = {
+                int(s): np.arange(int(rng.integers(1, 200))) for s in sids
+            }
+            groups = _balanced_groups(probed, n)
+            assert len(groups) == min(n, n_seg)
+            flat = [s for g in groups for s in g]
+            assert sorted(flat) == sorted(probed)
+            assert all(g == sorted(g) for g in groups)
+            loads = [sum(len(probed[s]) for s in g) for g in groups]
+            assert max(loads) - min(loads) <= max(len(v) for v in probed.values())
+            assert _balanced_groups(dict(reversed(list(probed.items()))), n) == groups
+
+    probed = {s: np.arange(q) for s, q in enumerate([300, 300, 300, 300, 100, 100, 100, 100])}
+    loads = [sum(len(probed[s]) for s in g) for g in _balanced_groups(probed, 2)]
+    assert loads == [800, 800]
+
+
 def test_graph2_filtered_ann(spark, sf_dir):
     """Filtered ANN (post-filter with expansion) on the hierarchical
     index: every result satisfies the predicate, per-query results never
