@@ -18,6 +18,8 @@ import os
 import sys
 import time
 
+import benchlib
+
 # The driver records only the LAST ~2000 chars of stdout; a JSON line
 # longer than that loses its head — including "value" — and the round's
 # BENCH record goes parsed:null (happened r2/r3 with per-query cold/rows
@@ -90,39 +92,6 @@ def render_bench_line(
             "the demote list; do NOT print an overflowing line."
         )
     return line
-
-
-def interleaved_rotations(thunks: dict, rounds: int = 3) -> dict:
-    """Interleaved per-state SAMPLES: warm every state, then probe the
-    states back-to-back per round so all samples share the same load
-    excursions. Returns {state: [wall per rotation]}. Sequential
-    per-state blocks minutes apart read post/pre anywhere from 0.86×
-    to 1.77× across r14 runs on identical code — drift, not layout."""
-    for t in thunks.values():
-        t()  # warm
-    w: dict[str, list[float]] = {k: [] for k in thunks}
-    for _ in range(rounds):
-        for k, t in thunks.items():
-            t0 = time.time()
-            t()
-            w[k].append(max(time.time() - t0, 1e-9))
-    return w
-
-
-def over_pre_ratio(w: dict, state: str, pre: str = "pre") -> dict:
-    """Post/pre ratio as PER-ROTATION pairs (each ratio's two walls
-    share one load excursion), summarized as median + range across the
-    rotations — a single rotation's draw swung the r14 record
-    0.83–1.32 on identical code (VERDICT r14 "what's wrong" #1), so
-    the round record carries the spread, not one draw."""
-    import statistics
-
-    rs = sorted(a / max(b, 1e-9) for a, b in zip(w[state], w[pre]))
-    return {
-        "median": round(statistics.median(rs), 3),
-        "range": [round(rs[0], 3), round(rs[-1], 3)],
-        "rotations": len(rs),
-    }
 
 
 def qps_scaling_sweep(knn_fn, emb, query_frames: list, k: int = 10) -> dict:
@@ -274,7 +243,7 @@ def _wordbank_corpus(
     asking the trainer for 2,000 merges there silently early-stops.
     The word bank is `vocab` seeded pseudo-words (4–12 lowercase
     letters from xxhash64 — pure codegen, no RNG, same discipline as
-    _large_base) drawn per document position with a cubed-uniform skew
+    benchlib.large_base) drawn per document position with a cubed-uniform skew
     (Zipf-ish head, so merges are earned by frequency, not uniform).
     documents.parquet is the train split; documents_big.parquet is the
     ×replicas encode-throughput split (~170 MB at the defaults —
@@ -330,121 +299,6 @@ def _wordbank_corpus(
     return out
 
 
-def base_partitions(n: int, rows_per_partition: int = 250_000) -> int:
-    """Partitions ∝ rows for the synthetic vector bases (~250k rows ≈
-    130 MB of float32[128] each): a fixed 32 put 640 MB into each task
-    of the exact kernel's map-side top-k aggregation at 20M rows and
-    OOM'd — the literal partition-sizing mistake the spec's
-    maxPartitionBytes guidance warns about, applied at write time so
-    every downstream scan inherits the right granularity."""
-    return max(32, n // rows_per_partition)
-
-
-def _large_base(
-    spark, n: int = 100_000, dim: int = 128, centers: int = 256
-) -> str:
-    """One-off larger synthetic vector base (seeded xxhash64 components,
-    pure codegen, no RNG) materialized under /tmp — the SIFT1M-shape
-    validation point (VERDICT r10 item 7): the fixture certifies the
-    exact kernel's amortization design at 2,000 vectors; this records
-    one exact and one IVF-PQ point at 50× the base rows and 2× the
-    dimensionality so the QPS curve's shape is shown to hold beyond
-    the fixture, without entering the headline suite.
-
-    Construction is a CLUSTERED mixture (256 seeded centers in
-    [-1,1]^d, per-vector noise ±0.25/dim), not uniform noise: uniform
-    high-d data is the ANN-pathological case (concentrated pairwise
-    distances, no structure for a coarse quantizer to find — measured
-    IVF-PQ recall 0.14 there), while real embedding corpora are
-    clustered, which is the regime an IVF family is FOR. The center
-    spread / noise ratio keeps clusters separated but overlapping
-    enough that recall is earned, not free (measured 0.82 at nprobe
-    8/256)."""
-    from pyspark.sql import functions as F
-
-    out = f"/tmp/cs598_spark_io/large_base_c{centers}_{n}x{dim}"
-    marker = os.path.join(out, "_LB_OK")
-    path = os.path.join(out, "embeddings.parquet")
-    if not os.path.exists(marker):
-        cid = F.pmod(F.xxhash64(F.col("id"), F.lit("c")), F.lit(centers))
-        base = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: (
-                    (
-                        F.pmod(F.xxhash64(cid, i, F.lit("ctr")), F.lit(10000))
-                        / 10000.0
-                        - 0.5
-                    )
-                    * 2.0
-                    + (
-                        F.pmod(F.xxhash64(F.col("id"), i, F.lit("n")), F.lit(10000))
-                        / 10000.0
-                        - 0.5
-                    )
-                    * 0.5
-                ).cast("float"),
-            ).alias("embedding"),
-        )
-        base.repartition(base_partitions(n)).write.mode(
-            "overwrite"
-        ).parquet(path)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return path
-
-
-def _cached_ivfpq(spark, lb, root: str, nlist: int, m: int, ksub: int,
-                  train_sample: int, meta: dict) -> object:
-    """Build-or-open a keep_vectors IVF-PQ index over `lb`, cached under
-    `root` (list-partitioned codes+vectors parquet + an npz sidecar for
-    the driver-sized centroids/codebooks). Build seconds land in `meta`
-    only on the run that actually builds."""
-    import numpy as np
-
-    from cs598vectordb_spark.operators.ivfpq import IvfPqIndex, PqCodebooks, build_ivfpq
-
-    os.makedirs(root, exist_ok=True)
-    npz_path = os.path.join(root, "ivfpq_meta.npz")
-    codes_path = os.path.join(root, "codes")
-    if os.path.exists(npz_path):
-        z = np.load(npz_path)
-        if "build_seconds" in z:  # cached opens still report the cost
-            meta["ivfpq_build_seconds"] = float(z["build_seconds"])
-            meta["ivfpq_built_this_run"] = False
-        return IvfPqIndex(
-            spark.read.parquet(codes_path),
-            z["C"],
-            PqCodebooks(z["books"], int(z["m"]), int(z["ksub"])),
-            int(z["nlist"]),
-            codes_path,
-        )
-    t0 = time.time()
-    idx = build_ivfpq(
-        lb, nlist=nlist, m=m, ksub=ksub, train_sample=train_sample,
-        path=codes_path, keep_vectors=True,
-    )
-    meta["ivfpq_build_seconds"] = round(time.time() - t0, 1)
-    meta["ivfpq_built_this_run"] = True
-    np.savez(
-        npz_path, C=idx.centroids, books=idx.cb.codebooks,
-        m=idx.cb.m, ksub=idx.cb.ksub, nlist=idx.nlist,
-        build_seconds=meta["ivfpq_build_seconds"],
-    )
-    return idx
-
-
-def _med3(thunk) -> float:
-    """Median of three timed executions — the headline noise policy."""
-    walls = []
-    for _ in range(3):
-        t0 = time.time()
-        thunk()
-        walls.append(max(time.time() - t0, 1e-9))
-    return sorted(walls)[1]
-
-
 def _settle(spark, seconds: float = 5.0) -> None:
     """GC + pause barrier before a throughput-sensitive measurement:
     sheds residual JVM-heap/scheduler pressure left by a heavy
@@ -456,66 +310,6 @@ def _settle(spark, seconds: float = 5.0) -> None:
     except Exception:
         pass
     time.sleep(seconds)
-
-
-def _host_calibration() -> dict:
-    """Fixed-work BLAS probe (3×: 1024³ dgemm, median GFLOPS) + a
-    memory-BANDWIDTH probe (3×: 256 MB ndarray copy, median GB/s) +
-    load averages — the record's own host-speed adjudicator (VERDICT
-    r15 item 2: the r15 10k-QPS record fell below the hnswlib bar with
-    per-query drift uniform across untouched files; a calibration
-    number lets a future reader separate host drift from a code
-    regression without cross-round archaeology). The bandwidth probe
-    exists because the r17 session showed the failure mode the dgemm
-    probe is blind to: cache-resident GEMM read a healthy 228–250
-    GFLOPS while every BANDWIDTH-bound path (the big distance-matrix
-    blocks) ran ~2–4× slow — a noisy-neighbor memory-bus session.
-    Quiet-host reference on this box: ~180–260 GFLOPS, ~17 GB/s copy
-    (measured r17)."""
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.random((1024, 1024))
-    b = rng.random((1024, 1024))
-    a @ b  # warm the BLAS thread pool
-    walls = []
-    for _ in range(3):
-        t0 = time.time()
-        a @ b
-        walls.append(max(time.time() - t0, 1e-9))
-    big = rng.random(32 * 1024 * 1024)  # 256 MB of float64
-    np.copyto(np.empty_like(big), big)  # fault the pages once
-    bwalls = []
-    dst = np.empty_like(big)
-    for _ in range(3):
-        t0 = time.time()
-        np.copyto(dst, big)
-        bwalls.append(max(time.time() - t0, 1e-9))
-    return {
-        "gemm_gflops": round(2 * 1024**3 / sorted(walls)[1] / 1e9, 1),
-        # read+write of 256 MB per pass → 0.5 GB of bus traffic
-        "mem_gbps": round(0.5 / sorted(bwalls)[1], 1),
-        "load": [round(x, 2) for x in os.getloadavg()],
-    }
-
-
-# Contended-window thresholds for _calibration_contended, set at ~2/3
-# of this host's quiet-window readings (~180–260 GFLOPS, ~17 GB/s —
-# measured r17): below either, throughput numbers are measuring the
-# neighbor's bus traffic, not the engine. The r17 contended window
-# depressed bandwidth-bound paths 2–4× (BENCH_r17's 74.7-vs-158.7
-# exact-QPS contradiction), far past these floors.
-GEMM_GFLOPS_CONTENDED_FLOOR = 120.0
-MEM_GBPS_CONTENDED_FLOOR = 11.0
-
-
-def _calibration_contended(cal: dict) -> bool:
-    """True when a _host_calibration reading says the window is too
-    contended to trust a throughput measurement taken beside it."""
-    return (
-        cal["gemm_gflops"] < GEMM_GFLOPS_CONTENDED_FLOOR
-        or cal["mem_gbps"] < MEM_GBPS_CONTENDED_FLOOR
-    )
 
 
 def headline_cal_summary(gate: dict) -> dict:
@@ -625,6 +419,55 @@ def _bm25_cap_signal_retention(zc, k: int = 50) -> dict:
     }
 
 
+# The headline suite in timed order: every pass of main() runs these
+# queries, and tools/dump_plans.py dumps their plans by default.
+HEADLINE = (
+    # vector surface
+    "knn_exact",
+    # large-batch exact kNN: 2000 queries amortize fixed job overhead
+    # (~3,200 QPS at sf0.1 — within 1.5x of BASELINE.md FAISS-HNSW
+    # while exact); headline so the number is in the driver record
+    "knn_exact_2k",
+    "knn_cosine",
+    "knn_ivf_materialized",
+    "knn_ivfpq",
+    # layered2 is the graph path of record: each probe walks its
+    # segments inside one Arrow kernel.
+    "knn_graph_layered2",
+    # the r13 worker-served mode (probes pull cached decoded
+    # segments worker-side instead of shipping the payload per
+    # batch — the 1M crossover path; see large_base_1m detail)
+    "knn_graph2_served",
+    "recall_low_dim",
+    "knn_post_delete",
+    # io surface
+    "scan_fvecs",
+    # relational surface
+    "pricing_summary",
+    "shipping_priority",
+    "local_supplier_volume",
+    "order_priority_count",
+    "sessionize",
+    "events_hourly",
+    "asof_attribution",
+    "salted_user_stats",
+    # LLM pipeline surface
+    "dedup_exact",
+    "minhash_lsh_dedup",
+    "dedup_clusters",
+    "jaccard_topk",
+    "quality_scores",
+    "token_counts",
+    "decontamination",
+    "pack_sequences",
+    "stratified_sample",
+    "curate_corpus",
+    "media_features",
+    # streaming surface
+    "stream_events_hourly",
+)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -637,52 +480,6 @@ def main() -> int:
 
     spark = get_spark("bench")
     qs = entrymod.queries()
-
-    headline = [
-        # vector surface
-        "knn_exact",
-        # large-batch exact kNN: 2000 queries amortize fixed job overhead
-        # (~3,200 QPS at sf0.1 — within 1.5x of BASELINE.md FAISS-HNSW
-        # while exact); headline so the number is in the driver record
-        "knn_exact_2k",
-        "knn_cosine",
-        "knn_ivf_materialized",
-        "knn_ivfpq",
-        # layered2 is the graph path of record: each probe walks its
-        # segments inside one Arrow kernel.
-        "knn_graph_layered2",
-        # the r13 worker-served mode (probes pull cached decoded
-        # segments worker-side instead of shipping the payload per
-        # batch — the 1M crossover path; see large_base_1m detail)
-        "knn_graph2_served",
-        "recall_low_dim",
-        "knn_post_delete",
-        # io surface
-        "scan_fvecs",
-        # relational surface
-        "pricing_summary",
-        "shipping_priority",
-        "local_supplier_volume",
-        "order_priority_count",
-        "sessionize",
-        "events_hourly",
-        "asof_attribution",
-        "salted_user_stats",
-        # LLM pipeline surface
-        "dedup_exact",
-        "minhash_lsh_dedup",
-        "dedup_clusters",
-        "jaccard_topk",
-        "quality_scores",
-        "token_counts",
-        "decontamination",
-        "pack_sequences",
-        "stratified_sample",
-        "curate_corpus",
-        "media_features",
-        # streaming surface
-        "stream_events_hourly",
-    ]
 
     # JVM + Python-worker warmup so query 1 doesn't absorb session startup
     # (the first mapInPandas otherwise pays ~2s forking 32 Arrow workers).
@@ -732,7 +529,7 @@ def main() -> int:
     for n in (5000, 10000):
         if n > emb_n:  # else the self-query loop above already covers n
             frames.append(_synthetic_query_frame(spark, sf_dir, emb, emb_n, n))
-    cal_before_sweep = _host_calibration()
+    cal_before_sweep = benchlib.host_calibration()
     qps_scaling = qps_scaling_sweep(knn_exact, emb, frames)
     # Load-gated second draw of the reference-batch point (VERDICT r15
     # item 2: the r15 10k record fell below the hnswlib 5,718 bar on a
@@ -744,7 +541,7 @@ def main() -> int:
     big_key = max(qps_scaling, key=int)
     big_frame = next(f for f in frames if int(f.count()) == int(big_key))
     _settle(spark)
-    cal_retry = _host_calibration()
+    cal_retry = benchlib.host_calibration()
     second_draw = qps_scaling_sweep(knn_exact, emb, [big_frame])[big_key]
     qps_sweep_gate = {
         "batch": int(big_key),
@@ -819,7 +616,7 @@ def main() -> int:
 
     def _headline_passes(targets: list[dict[str, float]]) -> None:
         for pass_timings in targets:
-            for name in headline:
+            for name in HEADLINE:
                 t0 = time.time()
                 qs[name](spark, sf_dir).count()
                 pass_timings[name] = round(time.time() - t0, 3)
@@ -830,18 +627,18 @@ def main() -> int:
     # 0.60 — from a window whose own 1M gate tripped at 79 GFLOPS; the
     # 36-query suite that PERF compares round-over-round had no
     # adjudicator of its own). Same policy as the 1M block: bracket
-    # with _host_calibration, and when either reading is contended,
+    # with benchlib.host_calibration, and when either reading is contended,
     # settle + re-draw the steady passes once and commit the per-query
     # MIN of the two 3-pass medians (wall seconds: lower = less
     # contended; the 1M block's max-of-draws is the same one-sided rule
     # on a QPS axis). Both draws + all calibration readings land in the
     # detail record; the printed line carries start/end GFLOPS +
     # mem_gbps + the gated flag so the round record adjudicates itself.
-    cal_headline_start = _host_calibration()
+    cal_headline_start = benchlib.host_calibration()
     cold: dict[str, float] = {}
     steady: list[dict[str, float]] = [{} for _ in range(n_steady)]
     _headline_passes([cold, *steady])
-    cal_headline_end = _host_calibration()
+    cal_headline_end = benchlib.host_calibration()
 
     def median(vals: list[float]) -> float:
         s = sorted(vals)
@@ -851,18 +648,18 @@ def main() -> int:
     headline_gate = {
         "calibration_start": cal_headline_start,
         "calibration_end": cal_headline_end,
-        "gated": _calibration_contended(cal_headline_start)
-        or _calibration_contended(cal_headline_end),
+        "gated": benchlib.calibration_contended(cal_headline_start)
+        or benchlib.calibration_contended(cal_headline_end),
         "committed": "min_of_draw_medians_per_query",
     }
-    timings = {n: median([p[n] for p in steady]) for n in headline}
+    timings = {n: median([p[n] for p in steady]) for n in HEADLINE}
     if headline_gate["gated"]:
         _settle(spark)
-        headline_gate["calibration_retry"] = _host_calibration()
+        headline_gate["calibration_retry"] = benchlib.host_calibration()
         steady2: list[dict[str, float]] = [{} for _ in range(n_steady)]
         _headline_passes(steady2)
-        headline_gate["calibration_retry_end"] = _host_calibration()
-        timings_draw2 = {n: median([p[n] for p in steady2]) for n in headline}
+        headline_gate["calibration_retry_end"] = benchlib.host_calibration()
+        timings_draw2 = {n: median([p[n] for p in steady2]) for n in HEADLINE}
         headline_gate["draw1_medians"] = dict(timings)
         headline_gate["draw2_medians"] = timings_draw2
         headline_gate["steady_passes_draw2"] = steady2
@@ -1340,22 +1137,22 @@ def main() -> int:
     from cs598vectordb_spark.operators.metrics import recall_at_k
 
     lb_meta: dict = {}
-    lb = spark.read.parquet(_large_base(spark))
+    lb = spark.read.parquet(benchlib.large_base(spark))
     lb_n = lb.count()
     lbq = lb.filter(F.col("vec_id") < 1000).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
     lb_exact = knn_exact(lb, lbq, 10).persist()
     lb_exact.count()  # warm (broadcast build + scan cache heat)
-    lb_exact_sec = _med3(lambda: knn_exact(lb, lbq, 10).count())
+    lb_exact_sec = benchlib.med3(lambda: knn_exact(lb, lbq, 10).count())
     # nlist 256 ≈ the base's own cluster count (and ~sqrt(n), the
     # standard sizing); m=16 codes with the reference's 8-bit sub-codec
-    lb_idx = _cached_ivfpq(
+    lb_idx = benchlib.cached_ivfpq(
         spark, lb, "/tmp/cs598_spark_io/lb_ivfpq_100k",
         nlist=256, m=16, ksub=256, train_sample=20_000, meta=lb_meta,
     )
     knn_ivfpq_refined(lb_idx, lb, lbq, k=10, nprobe=8, mult=10).count()  # warm
-    lb_probe_sec = _med3(
+    lb_probe_sec = benchlib.med3(
         lambda: knn_ivfpq_refined(lb_idx, lb, lbq, k=10, nprobe=8, mult=10).count()
     )
     lb_recall = recall_at_k(
@@ -1423,9 +1220,9 @@ def main() -> int:
     lb1m_root = "/tmp/cs598_spark_io/large_base_1m"
     lb1m_meta: dict = {}
     lb1m = spark.read.parquet(
-        _large_base(spark, n=1_000_000, dim=128, centers=1024)
+        benchlib.large_base(spark, n=1_000_000, dim=128, centers=1024)
     )
-    lb1m_idx = _cached_ivfpq(
+    lb1m_idx = benchlib.cached_ivfpq(
         spark, lb1m, os.path.join(lb1m_root, "ivfpq_k256"),
         nlist=1024, m=16, ksub=256, train_sample=50_000, meta=lb1m_meta,
     )
@@ -1462,15 +1259,15 @@ def main() -> int:
     # same round's detail snapshot read 158.7 on identical artifacts —
     # a phantom 3× regression the parsed record could not adjudicate).
     # Same remedy the 10k sweep point got in r16: bracket the block
-    # with _host_calibration (incl. the mem_gbps probe the dgemm number
+    # with benchlib.host_calibration (incl. the mem_gbps probe the dgemm number
     # is blind to), and when EITHER bracket reads contended, settle and
     # re-draw every headline point, committing max-of-draws with both
     # draws + all calibrations recorded. The brackets ride in the
     # printed line's large_1m entry so the record adjudicates itself.
-    cal_lb1m_start = _host_calibration()
+    cal_lb1m_start = benchlib.host_calibration()
     ex1m = knn_exact(lb1m, lbq1m, 10).persist()
     ex1m.count()  # warm
-    ex1m_sec = _med3(lambda: knn_exact(lb1m, lbq1m, 10).count())
+    ex1m_sec = benchlib.med3(lambda: knn_exact(lb1m, lbq1m, 10).count())
 
     def _fused1m(nprobe=8, mult=10, idx=None):
         return knn_ivfpq_refined(
@@ -1487,7 +1284,7 @@ def main() -> int:
     probes_1m = {}
     for pname, mk in (("ivfpq_refined_fused", 10), ("ivfpq_refined_fused_hi", 20)):
         _fused1m(mult=mk).count()  # warm
-        sec = _med3(lambda mk=mk: _fused1m(mult=mk).count())
+        sec = benchlib.med3(lambda mk=mk: _fused1m(mult=mk).count())
         rec = recall_at_k(_fused1m(mult=mk), ex1m, 10).collect()[0]["recall"]
         probes_1m[pname] = {
             "nprobe": 8, "mult": mk,
@@ -1499,7 +1296,7 @@ def main() -> int:
         t0 = time.time()
         _g2probe(g2idx).count()  # warm (served: workers fill their caches)
         cold_sec = time.time() - t0
-        sec = _med3(lambda g2idx=g2idx: _g2probe(g2idx).count())
+        sec = benchlib.med3(lambda g2idx=g2idx: _g2probe(g2idx).count())
         rec = recall_at_k(_g2probe(g2idx), ex1m, 10).collect()[0]["recall"]
         probes_1m[pname] = {
             "nprobe1": 6, "nprobe2": 10, "beam": 32,
@@ -1513,16 +1310,16 @@ def main() -> int:
             # pruned parquet read, not a second copy of the r12 tax
             probes_1m[pname]["cold_seconds"] = round(cold_sec, 3)
 
-    cal_lb1m_end = _host_calibration()
+    cal_lb1m_end = benchlib.host_calibration()
     lb1m_gate: dict = {
         "calibration_start": cal_lb1m_start,
         "calibration_end": cal_lb1m_end,
         "floors": {
-            "gemm_gflops": GEMM_GFLOPS_CONTENDED_FLOOR,
-            "mem_gbps": MEM_GBPS_CONTENDED_FLOOR,
+            "gemm_gflops": benchlib.GEMM_GFLOPS_CONTENDED_FLOOR,
+            "mem_gbps": benchlib.MEM_GBPS_CONTENDED_FLOOR,
         },
-        "gated": _calibration_contended(cal_lb1m_start)
-        or _calibration_contended(cal_lb1m_end),
+        "gated": benchlib.calibration_contended(cal_lb1m_start)
+        or benchlib.calibration_contended(cal_lb1m_end),
         "committed": "max_of_draws",
     }
     if lb1m_gate["gated"]:
@@ -1532,10 +1329,10 @@ def main() -> int:
         # from draw 1 — load cannot change what rows come back. ~60 s,
         # paid only in a contended window.
         _settle(spark)
-        lb1m_gate["calibration_retry"] = _host_calibration()
+        lb1m_gate["calibration_retry"] = benchlib.host_calibration()
         draw1 = {"exact_seconds": round(ex1m_sec, 3)}
         draw2: dict = {}
-        ex1m_sec2 = _med3(lambda: knn_exact(lb1m, lbq1m, 10).count())
+        ex1m_sec2 = benchlib.med3(lambda: knn_exact(lb1m, lbq1m, 10).count())
         draw2["exact_seconds"] = round(ex1m_sec2, 3)
         ex1m_sec = min(ex1m_sec, ex1m_sec2)
         redraws = {
@@ -1546,7 +1343,7 @@ def main() -> int:
         }
         for pname, thunk in redraws.items():
             draw1[f"{pname}_seconds"] = probes_1m[pname]["seconds"]
-            sec2 = _med3(thunk)
+            sec2 = benchlib.med3(thunk)
             draw2[f"{pname}_seconds"] = round(sec2, 3)
             if sec2 < probes_1m[pname]["seconds"]:
                 probes_1m[pname]["seconds"] = round(sec2, 3)
@@ -1780,16 +1577,16 @@ def main() -> int:
     )
     comp_maint_s = time.time() - t0
 
-    # INTERLEAVED measurement (r14, the tools/dynamic_ab.py discipline
-    # promoted into the record): the four index states coexist
-    # (parquet-backed tombstone/delta/compacted relations over the same
-    # artifacts), so the probes rotate pre→during→post→compacted per
-    # round and every state's samples share the same host-load
-    # excursions. Sequential per-state med3 blocks minutes apart read
-    # post/pre anywhere from 0.86× to 1.77× across r14 runs on
-    # identical code — drift, not layout; the interleave reads
-    # 0.85–0.99× reproducibly.
-    dyn_w = interleaved_rotations({
+    # INTERLEAVED measurement (r14, the off-bench interleaved A/B that
+    # SCALING.md §3 records, promoted into the record): the four index
+    # states coexist (parquet-backed tombstone/delta/compacted
+    # relations over the same artifacts), so the probes rotate
+    # pre→during→post→compacted per round and every state's samples
+    # share the same host-load excursions. Sequential per-state med3
+    # blocks minutes apart read post/pre anywhere from 0.86× to 1.77×
+    # across r14 runs on identical code — drift, not layout; the
+    # interleave reads 0.85–0.99× reproducibly.
+    dyn_w = benchlib.interleaved_rotations({
         "pre": lambda: _fused1m(idx=lb1m_idx).count(),
         "during": lambda: _fused1m(idx=idx_del).count(),
         "post": lambda: _fused1m(idx=idx_ins).count(),
@@ -1823,15 +1620,15 @@ def main() -> int:
         "during": {"seconds": round(del_sec, 3),
                    "qps": round(1000 / del_sec, 1),
                    "recall_vs_exact": del_rec,
-                   "over_pre": over_pre_ratio(dyn_w, "during")},
+                   "over_pre": benchlib.over_pre_ratio(dyn_w, "during")},
         "post": {"seconds": round(ins_sec, 3),
                  "qps": round(1000 / ins_sec, 1),
                  "recall_vs_exact": ins_rec,
-                 "over_pre": over_pre_ratio(dyn_w, "post")},
+                 "over_pre": benchlib.over_pre_ratio(dyn_w, "post")},
         "post_compacted": {"seconds": round(comp_sec, 3),
                            "qps": round(1000 / comp_sec, 1),
                            "recall_vs_exact": comp_rec,
-                           "over_pre": over_pre_ratio(dyn_w, "post_compacted")},
+                           "over_pre": benchlib.over_pre_ratio(dyn_w, "post_compacted")},
     }
 
     # LSM ENDURANCE (r15, VERDICT r14 item 6): what an UNBOUNDED delta
@@ -1869,7 +1666,7 @@ def main() -> int:
         t0 = time.time()
         lsm_idx = insert_into_ivfpq(lsm_idx, slice_g)
         gen_maint_s = time.time() - t0
-        w_pair = interleaved_rotations(
+        w_pair = benchlib.interleaved_rotations(
             {"pre": lambda: _fused1m(idx=lb1m_idx).count(),
              "gen": lambda i=lsm_idx: _fused1m(idx=i).count()},
             rounds=1,
@@ -1890,7 +1687,7 @@ def main() -> int:
     t0 = time.time()
     lsm_idx, lsm_fired = auto_compact_ivfpq(lsm_idx, max_generations=n_slices)
     lsm_compact_s = time.time() - t0
-    w_pair = interleaved_rotations(
+    w_pair = benchlib.interleaved_rotations(
         {"pre": lambda: _fused1m(idx=lb1m_idx).count(),
          "folded": lambda: _fused1m(idx=lsm_idx).count()},
         rounds=1,
@@ -1938,7 +1735,7 @@ def main() -> int:
     # pairwise interleave vs the PRISTINE served index (the during and
     # post phases can't coexist — post overwrites the dynamic path — so
     # each phase rotates against pre; ratios are within-rotation)
-    rot_del = interleaved_rotations({
+    rot_del = benchlib.interleaved_rotations({
         "pre": lambda: _g2probe(lb1m_g2s).count(),
         "during": lambda: _g2probe(srv_del).count(),
     })
@@ -1956,14 +1753,14 @@ def main() -> int:
     # settle barrier before the post rotation (VERDICT r15 item 4): the
     # rotation used to start seconds after the 250k-insert repair and
     # full rematerialize, under residual JVM-heap/page-cache pressure
-    # where the settled dynamic_ab adjudication reads 0.8–1.1 but the
-    # in-bench draw read up to 1.53 on identical artifacts. One GC +
-    # pause plus a warm pass on EACH side brings the in-bench draw into
-    # the settled regime.
+    # where the settled interleaved A/B (SCALING.md §3) reads 0.8–1.1
+    # but the in-bench draw read up to 1.53 on identical artifacts. One
+    # GC + pause plus a warm pass on EACH side brings the in-bench draw
+    # into the settled regime.
     _settle(spark, 8.0)
     _g2probe(lb1m_g2s).count()
     _g2probe(srv_post).count()
-    rot_post = interleaved_rotations({
+    rot_post = benchlib.interleaved_rotations({
         "pre": lambda: _g2probe(lb1m_g2s).count(),
         "post": lambda: _g2probe(srv_post).count(),
     })
@@ -2003,11 +1800,11 @@ def main() -> int:
         "during": {"seconds": round(g2_del_sec, 3),
                    "qps": round(1000 / g2_del_sec, 1),
                    "recall_vs_exact": g2_del_rec,
-                   "over_pre_interleaved": over_pre_ratio(rot_del, "during")},
+                   "over_pre_interleaved": benchlib.over_pre_ratio(rot_del, "during")},
         "post": {"seconds": round(g2_post_sec, 3),
                  "qps": round(1000 / g2_post_sec, 1),
                  "recall_vs_exact": g2_post_rec,
-                 "over_pre_interleaved": over_pre_ratio(rot_post, "post")},
+                 "over_pre_interleaved": benchlib.over_pre_ratio(rot_post, "post")},
         "post_matches_pinned": bool(srv_rows == pin_rows),
     }
 

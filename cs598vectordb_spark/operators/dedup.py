@@ -91,7 +91,7 @@ def _vectorized_rolling(shingles: list[str], mod: int) -> np.ndarray:
 
 # Rows per kernel yield: the kernel re-slices whatever Arrow batch size
 # the session delivers (default maxRecordsPerBatch=10000) into chunks
-# this big. Measured r19 (tools/ab_r19_shingle.py, 153 MB replica,
+# this big. Measured r19 (ab_r19_shingle.json, 153 MB replica,
 # interleaved, 9 rotations): yielding full 10k-row batches ran the pass
 # at 13.7 s median with 5-33 s walls (the nested hashes output makes
 # per-yield object-column -> Arrow conversion and JVM-side buffering

@@ -14,6 +14,7 @@ import json
 import pytest
 
 import bench
+import benchlib
 
 
 def _worst_case_out() -> dict:
@@ -141,19 +142,19 @@ def test_calibration_contended_thresholds():
     GEMM probe is blind to — a depressed memory-bandwidth reading
     must."""
     quiet = {"gemm_gflops": 220.0, "mem_gbps": 16.8, "load": [1.0, 2.0, 3.0]}
-    assert not bench._calibration_contended(quiet)
+    assert not benchlib.calibration_contended(quiet)
     slow_gemm = dict(quiet, gemm_gflops=80.0)
-    assert bench._calibration_contended(slow_gemm)
+    assert benchlib.calibration_contended(slow_gemm)
     # healthy cache-resident GEMM, starved bus: the r17 window's shape
     bus_contended = dict(quiet, mem_gbps=6.0)
-    assert bench._calibration_contended(bus_contended)
+    assert benchlib.calibration_contended(bus_contended)
     # floors are strict bounds, not approximations
     at_floor = dict(
         quiet,
-        gemm_gflops=bench.GEMM_GFLOPS_CONTENDED_FLOOR,
-        mem_gbps=bench.MEM_GBPS_CONTENDED_FLOOR,
+        gemm_gflops=benchlib.GEMM_GFLOPS_CONTENDED_FLOOR,
+        mem_gbps=benchlib.MEM_GBPS_CONTENDED_FLOOR,
     )
-    assert not bench._calibration_contended(at_floor)
+    assert not benchlib.calibration_contended(at_floor)
 
 
 def test_headline_cal_summary_shape():
@@ -250,7 +251,7 @@ def test_over_pre_ratio_is_paired_per_rotation():
         "pre": [1.0, 2.0, 1.0, 4.0, 1.0],
         "post": [1.1, 1.8, 1.3, 4.4, 0.9],
     }
-    got = bench.over_pre_ratio(w, "post")
+    got = benchlib.over_pre_ratio(w, "post")
     # pairwise ratios: 1.1, 0.9, 1.3, 1.1, 0.9 -> median 1.1
     assert got["median"] == 1.1
     assert got["range"] == [0.9, 1.3]
@@ -269,7 +270,7 @@ def test_interleaved_rotations_returns_samples_per_state():
             calls[k] += 1
         return t
 
-    w = bench.interleaved_rotations({"a": mk("a"), "b": mk("b")}, rounds=4)
+    w = benchlib.interleaved_rotations({"a": mk("a"), "b": mk("b")}, rounds=4)
     assert sorted(w) == ["a", "b"]
     assert len(w["a"]) == len(w["b"]) == 4
     assert calls == {"a": 5, "b": 5}  # warm + 4 rotations
@@ -281,13 +282,44 @@ def test_base_partition_rule_scales_with_rows():
     20M OOM class, commit-fixed r14): ~250k rows per partition with a
     32-partition floor, so per-task input stays ~130 MB of
     float32[128] at every N instead of growing linearly."""
-    assert bench.base_partitions(100_000) == 32  # floor
-    assert bench.base_partitions(1_000_000) == 32
-    assert bench.base_partitions(10_000_000) == 40
-    assert bench.base_partitions(20_000_000) == 80
+    assert benchlib.base_partitions(100_000) == 32  # floor
+    assert benchlib.base_partitions(1_000_000) == 32
+    assert benchlib.base_partitions(10_000_000) == 40
+    assert benchlib.base_partitions(20_000_000) == 80
     # per-partition rows stay bounded as N grows
     for n in (8_000_001, 20_000_000, 100_000_000):
-        assert n / bench.base_partitions(n) <= 250_000 + 125_000
+        assert n / benchlib.base_partitions(n) <= 250_000 + 125_000
+
+
+def test_tools_read_only_public_measurement_names():
+    """bench.py and every tools/ script read only public names of
+    `bench` and `benchlib`, and each name exists there. No test runs
+    the XL tools, so this parse is what catches a rename that would
+    break one."""
+    import ast
+    import glob
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mods = {"bench": bench, "benchlib": benchlib}
+    reads = []  # (file, module, name)
+    for path in [os.path.join(repo, "bench.py"), *glob.glob(f"{repo}/tools/*.py")]:
+        with open(path) as fh:
+            nodes = list(ast.walk(ast.parse(fh.read(), path)))
+        local = {}  # name bound in this file -> measurement module
+        for n in nodes:
+            if isinstance(n, ast.Import):
+                local.update((a.asname or a.name, a.name) for a in n.names if a.name in mods)
+            elif isinstance(n, ast.ImportFrom) and n.module in mods:
+                reads += [(path, n.module, a.name) for a in n.names]
+        reads += [
+            (path, local[n.value.id], n.attr)
+            for n in nodes
+            if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+            and n.value.id in local
+        ]
+    bad = [r for r in reads if r[2].startswith("_") or not hasattr(mods[r[1]], r[2])]
+    assert reads and not bad, bad
 
 
 def test_bench_smoke_final_line_is_json():

@@ -1445,6 +1445,44 @@ def test_banded_packed_key_matches_string_key(spark, sf_dir):
     assert not any(a in shorts or b in shorts for a, b in packed)
 
 
+def test_empty_signature_is_all_null_and_never_banded(spark):
+    """On one seeded generated frame — NULL, "", whitespace-only (incl.
+    Unicode spaces), one- and two-token, non-ASCII and ordinary texts —
+    every minhash signature is all-NULL or NULL-free, `mh_0 IS NULL`
+    holds exactly for docs with fewer than 3 tokens, and `_banded`
+    emits no row for those docs and every band for the rest, in both
+    key forms (packed at rows=2, string at rows=4)."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(19)
+    words = ["spark", "index", "a", "to", "naïve", "straße", "日本語", "İstanbul", "🙂"]
+    spaces = [" ", "  ", "\t", "\n", "\u3000", "\xa0", "\u2003"]
+
+    def text(kind):
+        if kind < 2:  # NULL, ""
+            return [None, ""][kind]
+        # whitespace-only, 1 and 2 tokens, ordinary, non-ASCII only
+        n = [0, 1, 2, rng.randint(3, 12), rng.randint(1, 6)][kind - 2]
+        toks = rng.choices(words[4:] if kind == 6 else words, k=n)
+        return rng.choice(spaces) + "".join(t + rng.choice(spaces) for t in toks)
+
+    rows = [(i, text(i % 7)) for i in range(350)]
+    empty = {i for i, t in rows if len((t or "").lower().split()) < 3}
+    assert 0 < len(empty) < len(rows)
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(docs, 16)
+    got = {r.doc_id: [r[f"mh_{i}"] for i in range(16)] for r in sigs.collect()}
+    assert set(got) == {i for i, _ in rows}
+    for did, mh in got.items():
+        assert sum(v is None for v in mh) in (0, 16), (did, mh)
+        assert (mh[0] is None) == (did in empty), (did, rows[did][1])
+    for bands, per_band in ((8, 2), (4, 4)):
+        n = Counter(r.doc_id for r in dedup._banded(sigs, bands, per_band).collect())
+        assert n == {i: bands for i in got if i not in empty}
+
+
 def test_curate_corpus_matches_join_composition(spark, sf_dir):
     """curate_corpus's r18 inline-projection plan (2 scans, 1 semi-join)
     must reproduce the old 4-scan join composition row for row."""

@@ -33,21 +33,7 @@ def main() -> int:
     if not names:
         import bench
 
-        src = open(os.path.join(os.path.dirname(bench.__file__), "bench.py")).read()
-        # fall back to every oracled headline query if parsing ever breaks
-        names = [
-            "knn_exact", "knn_exact_2k", "knn_cosine", "knn_ivf_materialized",
-            "knn_ivfpq", "knn_graph_layered2", "knn_graph2_served", "recall_low_dim",
-            "knn_post_delete", "scan_fvecs",
-            "pricing_summary", "shipping_priority", "local_supplier_volume",
-            "order_priority_count", "sessionize", "events_hourly",
-            "asof_attribution", "salted_user_stats", "dedup_exact",
-            "minhash_lsh_dedup", "dedup_clusters", "jaccard_topk",
-            "quality_scores", "token_counts", "decontamination",
-            "pack_sequences", "stratified_sample", "curate_corpus",
-            "media_features", "stream_events_hourly",
-        ]
-        del src
+        names = bench.HEADLINE
 
     # index probes need the warm registry, same as the bench
     from cs598vectordb_spark.queries_index import warm_indexes

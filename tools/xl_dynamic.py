@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
+import benchlib
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators.graph import (
@@ -54,11 +54,11 @@ out = {
     "load_start": [round(x, 2) for x in os.getloadavg()],
     # fixed-work BLAS probe: makes the scale claim load-auditable the
     # same way the bench record is (VERDICT r16 item 8)
-    "calibration_start": bench._host_calibration(),
+    "calibration_start": benchlib.host_calibration(),
 }
 
 centers = max(256, N // 2000)
-lb = spark.read.parquet(bench._large_base(spark, n=N, dim=128, centers=centers))
+lb = spark.read.parquet(benchlib.large_base(spark, n=N, dim=128, centers=centers))
 lbq = lb.filter(F.col("vec_id") < 1000).select(
     F.col("vec_id").alias("q_id"), "embedding"
 )
@@ -103,7 +103,7 @@ out["delete_and_materialize_s"] = round(time.time() - t0, 1)
 
 srv_del = open_layered2(spark, dyn_path, served=True)
 probe(srv_del).count()  # cold
-rot_del = bench.interleaved_rotations(
+rot_del = benchlib.interleaved_rotations(
     {"pre": lambda: probe(srv_pre).count(),
      "during": lambda: probe(srv_del).count()},
     rounds=3,
@@ -116,7 +116,7 @@ out["during"] = {
     "recall_vs_exact": recall_at_k(probe(srv_del), truth_del, 10).collect()[
         0
     ]["recall"],
-    "over_pre_interleaved": bench.over_pre_ratio(rot_del, "during"),
+    "over_pre_interleaved": benchlib.over_pre_ratio(rot_del, "during"),
 }
 truth_del.unpersist()
 
@@ -128,7 +128,7 @@ g2_del.segments.unpersist()
 
 srv_post = open_layered2(spark, dyn_path, served=True)
 probe(srv_post).count()  # cold (epoch invalidated every worker entry)
-rot_post = bench.interleaved_rotations(
+rot_post = benchlib.interleaved_rotations(
     {"pre": lambda: probe(srv_pre).count(),
      "post": lambda: probe(srv_post).count()},
     rounds=3,
@@ -144,7 +144,7 @@ out["post"] = {
     "recall_vs_exact": recall_at_k(probe(srv_post), ex, 10).collect()[0][
         "recall"
     ],
-    "over_pre_interleaved": bench.over_pre_ratio(rot_post, "post"),
+    "over_pre_interleaved": benchlib.over_pre_ratio(rot_post, "post"),
 }
 
 pinned_post = open_layered2(spark, dyn_path, pinned=True)
@@ -160,7 +160,7 @@ g2_ins.segments.unpersist()
 idx_pin.segments.unpersist()
 
 out["load_end"] = [round(x, 2) for x in os.getloadavg()]
-out["calibration_end"] = bench._host_calibration()
+out["calibration_end"] = benchlib.host_calibration()
 dest = f"/tmp/xl{MM}m_dynamic.json"
 with open(dest, "w") as fh:
     json.dump(out, fh, indent=1)

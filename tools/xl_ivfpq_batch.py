@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
+import benchlib
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators.ivfpq import knn_ivfpq_refined
@@ -48,14 +48,14 @@ rec = {
     "probe": {"k": K, "nprobe": NPROBE, "mult": MULT},
     "passes": PASSES,
     "load_start": [round(x, 2) for x in os.getloadavg()],
-    "calibration_start": bench._host_calibration(),
+    "calibration_start": benchlib.host_calibration(),
 }
 
 lb1m_root = "/tmp/cs598_spark_io/large_base_1m"
 lb1m = spark.read.parquet(
-    bench._large_base(spark, n=1_000_000, dim=128, centers=1024)
+    benchlib.large_base(spark, n=1_000_000, dim=128, centers=1024)
 ).select("vec_id", "embedding")
-idx = bench._cached_ivfpq(
+idx = benchlib.cached_ivfpq(
     spark, lb1m, os.path.join(lb1m_root, "ivfpq_k256"),
     nlist=1024, m=16, ksub=256, train_sample=50_000, meta={},
 )
@@ -112,7 +112,7 @@ rec["ceiling"] = (
     "none_within_sweep" if best == widest else "knee_at_" + best
 )
 rec["load_end"] = [round(x, 2) for x in os.getloadavg()]
-rec["calibration_end"] = bench._host_calibration()
+rec["calibration_end"] = benchlib.host_calibration()
 
 path = "/tmp/ivfpq_batch_knee.json"
 with open(path, "w") as fh:

@@ -30,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
+import benchlib
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators.knn import knn_exact
@@ -63,12 +63,12 @@ rec = {
     "load_start": [round(x, 2) for x in os.getloadavg()],
     # fixed-work BLAS probe: makes the scale claim load-auditable the
     # same way the bench record is (VERDICT r16 item 8)
-    "calibration_start": bench._host_calibration(),
+    "calibration_start": benchlib.host_calibration(),
     "recall_truth": "top-k of the k+1 exact probe minus self-pairs (r16 fix)",
 }
 
 lb = spark.read.parquet(
-    bench._large_base(spark, n=N, dim=128, centers=centers)
+    benchlib.large_base(spark, n=N, dim=128, centers=centers)
 ).select("vec_id", "embedding")
 q = lb.filter(F.col("vec_id") < NQ).select(
     F.col("vec_id").alias("q_id"), "embedding"
@@ -141,7 +141,7 @@ rec["speedup_vs_exact"] = round(
     rec["join_qps"] / max(rec["exact_sampled_qps"], 1e-9), 1
 )
 rec["load_end"] = [round(x, 2) for x in os.getloadavg()]
-rec["calibration_end"] = bench._host_calibration()
+rec["calibration_end"] = benchlib.host_calibration()
 
 idx.assigned.unpersist()
 path = f"/tmp/kj_{N // 1_000_000}m_q{NQ // 1_000_000}m.json"

@@ -36,7 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
+import benchlib
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators.graph import (
@@ -70,7 +70,7 @@ out = {
 
 t0 = time.time()
 centers = max(256, N // 2000)
-lb = spark.read.parquet(bench._large_base(spark, n=N, dim=128, centers=centers))
+lb = spark.read.parquet(benchlib.large_base(spark, n=N, dim=128, centers=centers))
 out["base_gen_s"] = round(time.time() - t0, 1)
 
 lbq = lb.filter(F.col("vec_id") < 1000).select(
@@ -78,7 +78,7 @@ lbq = lb.filter(F.col("vec_id") < 1000).select(
 )
 ex = knn_exact(lb, lbq, 10).persist()
 ex.count()
-out["exact_s"] = round(bench._med3(lambda: knn_exact(lb, lbq, 10).count()), 3)
+out["exact_s"] = round(benchlib.med3(lambda: knn_exact(lb, lbq, 10).count()), 3)
 out["exact_qps"] = round(1000 / out["exact_s"], 1)
 
 # per-grid: build (cached across runs), cold + warm served probe at the
@@ -102,7 +102,7 @@ for n1, n2 in GRIDS:
     knn_graph_layered2(srv, lbq, **kw).count()  # cold (cache fill)
     grid_out["served_cold_s"] = round(time.time() - t0, 3)
     grid_out["served_s"] = round(
-        bench._med3(lambda: knn_graph_layered2(srv, lbq, **kw).count()), 3
+        benchlib.med3(lambda: knn_graph_layered2(srv, lbq, **kw).count()), 3
     )
     grid_out["served_recall"] = recall_at_k(
         knn_graph_layered2(srv, lbq, **kw), ex, 10

@@ -43,7 +43,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
+import benchlib
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators.knn import knn_exact
@@ -64,6 +64,9 @@ SHARDS = int(os.environ.get("CS598_SD_SHARDS", "16"))
 # index build, 1/SLICES of the train stream; rows/s is computed from
 # the rows actually processed, so it is comparable across limits)
 SLICE_LIMIT = int(os.environ.get("CS598_SD_SLICE_LIMIT", str(SLICES)))
+if SLICE_LIMIT < 1:
+    sys.exit(f"CS598_SD_SLICE_LIMIT must be >= 1, got {SLICE_LIMIT}: "
+             "with no slice run there is no join to time")
 
 spark = get_spark("xl-semdecon")
 n_total = N_TRAIN + N_EVAL
@@ -73,11 +76,11 @@ rec = {
     "train_slices": SLICES, "query_shards": SHARDS,
     "probe": "full (nprobe = nlist) => exact nearest-eval",
     "load_start": [round(x, 2) for x in os.getloadavg()],
-    "calibration_start": bench._host_calibration(),
+    "calibration_start": benchlib.host_calibration(),
 }
 
 base = spark.read.parquet(
-    bench._large_base(spark, n=n_total, dim=128, centers=centers)
+    benchlib.large_base(spark, n=n_total, dim=128, centers=centers)
 ).select("vec_id", "embedding")
 eval_set = base.filter(F.col("vec_id") < N_EVAL)
 train = base.filter(F.col("vec_id") >= N_EVAL).select(
@@ -120,9 +123,9 @@ for sl in range(min(SLICES, SLICE_LIMIT)):
 rec["out_rows"] = out_rows
 rec["slices_run"] = min(SLICES, SLICE_LIMIT)
 rec["join_s"] = round(join_s, 1)
-# out_rows == train rows processed (k=1 -> one row each), so this is
-# identical to N_TRAIN/join_s on a full run and stays honest under
-# SLICE_LIMIT
+# k=1 emits at most one row per train row (none when no eval vector
+# is in reach), so out_rows <= train rows processed and this is the
+# rate of rows emitted; it stays comparable across SLICE_LIMIT
 rec["train_rows_per_s"] = round(out_rows / join_s, 1)
 rec["sink_write_s"] = round(sink_s, 1)
 
@@ -155,7 +158,7 @@ got = {
 }
 rec["nearest_eval_match_500"] = round(len(got & truth) / max(len(truth), 1), 4)
 rec["load_end"] = [round(x, 2) for x in os.getloadavg()]
-rec["calibration_end"] = bench._host_calibration()
+rec["calibration_end"] = benchlib.host_calibration()
 
 idx.assigned.unpersist()
 eval_set.unpersist()

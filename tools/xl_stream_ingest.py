@@ -32,7 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
+import benchlib
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators.ivfpq import (
@@ -61,11 +61,11 @@ rec = {
     "load_start": [round(x, 2) for x in os.getloadavg()],
     # fixed-work BLAS probe: makes the scale claim load-auditable the
     # same way the bench record is (VERDICT r16 item 8)
-    "calibration_start": bench._host_calibration(),
+    "calibration_start": benchlib.host_calibration(),
 }
 
 lb = spark.read.parquet(
-    bench._large_base(spark, n=n_total, dim=128, centers=centers)
+    benchlib.large_base(spark, n=n_total, dim=128, centers=centers)
 ).select("vec_id", "embedding")
 seed_rows = lb.filter(F.col("vec_id") < N_SEED)
 arrivals = lb.filter(F.col("vec_id") >= N_SEED)
@@ -186,7 +186,7 @@ rec["final_self_hit"] = {
     "probe_s": round(time.time() - t0, 1),
 }
 rec["load_end"] = [round(x, 2) for x in os.getloadavg()]
-rec["calibration_end"] = bench._host_calibration()
+rec["calibration_end"] = benchlib.host_calibration()
 
 width = N_ARR // N_BATCHES
 path = f"/tmp/stream_ingest_{N_SEED // 1_000_000}m_w{width}.json"
