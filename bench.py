@@ -468,6 +468,22 @@ HEADLINE = (
 )
 
 
+def session_echo(spark) -> dict:
+    """The session a bench line was measured on: master, default
+    parallelism, the `SPARK_GRAFT_CPUS` the run saw (None when unset)
+    and the Python worker daemon module, so a line can be judged
+    without reading the code."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        "python_daemon_module": sc.getConf().get(
+            "spark.python.daemon.module", "pyspark.daemon"
+        ),
+    }
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -1945,6 +1961,7 @@ def main() -> int:
         "queries": timings,
         "sf": float(sf),
         "extra": {
+            **session_echo(spark),
             "knn_exact_qps": qps("knn_exact"),
             # batch-size QPS extras (2k from self-queries; 5k/10k from
             # the seeded synthetic set at the reference's own batch
@@ -2097,7 +2114,7 @@ def _smoke_main() -> int:
         "unit": "sec",
         "queries": timings,
         "sf": 0.001,
-        "extra": {"smoke": True},
+        "extra": {"smoke": True, **session_echo(spark)},
     }
     line = render_bench_line(out, {})
     _emit_and_exit(spark, line)

@@ -54,7 +54,13 @@ def term_counts(
     over a tokenized array column — the kernel replacement for
     `explode(arr) → groupBy(keys…, token).count()` (bit-identical row
     set; a row's tokens are counted wholly inside its own batch, so the
-    emitted counts are final, not partial)."""
+    emitted counts are final, not partial).
+
+    Precondition: `key_cols` are unique per input row. Rows that share
+    a key are not merged: each input row emits its own (keys…, term,
+    count) rows, so a (keys…, term) pair can repeat, and only the sum
+    of its counts equals the explode form's count (pinned by
+    tests/test_properties.py::test_term_kernels_match_explode_groupby)."""
     schema = f"{_key_ddl(base, key_cols)}, {term_col} string, {count_col} long"
 
     def kern(batches):
@@ -95,7 +101,12 @@ def feature_counts(
     Bigram text is `binary_join_element_wise(tok[j], tok[j+1], ' ')`
     over the flattened token buffer, masked to within-row pairs —
     byte-identical to the JVM `concat_ws(' ', …)` transform it
-    replaces, without constructing the per-token lambda machinery."""
+    replaces, without constructing the per-token lambda machinery.
+
+    Precondition: `key_cols` are unique per input row, as for
+    `term_counts`. Rows that share a key are not merged: each input row
+    emits its own (keys…, feat, count) rows, and only the per-(keys…,
+    feat) sums equal the explode form's counts."""
     schema = f"{_key_ddl(base, key_cols)}, {feat_col} string, {count_col} long"
 
     def kern(batches):

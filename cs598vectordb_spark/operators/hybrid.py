@@ -66,6 +66,15 @@ def bm25_scores(
     Ties break by doc_id ascending after the score is rounded to 6 dp,
     so rank order cannot flip on a last-ulp summation difference.
 
+    The tf rows' `localCheckpoint(eager=True)` runs its job when this
+    function is called, before the returned frame is used. Its blocks
+    stay in executor storage (memory, spilling to disk) until the
+    driver garbage-collects the checkpointed plan (ContextCleaner) or
+    the application ends, so drop the returned frame once consumed. A
+    local checkpoint keeps no lineage: if an executor holding its
+    blocks is lost, a later action on the returned frame fails instead
+    of recomputing them. That trades fault tolerance for one kernel pass.
+
     Rows-only (float scoring; ANSI-expressible in principle — the SQL
     twin is a token-join CTE — promotable when an oracle slot frees);
     value-level pin vs an independent pure-Python BM25 in

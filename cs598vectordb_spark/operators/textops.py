@@ -995,6 +995,14 @@ def dsir_logweights(
     outright: the weighted sum is linear in the counts, so feat-level
     rows give identical n_feats/_lw). Nothing is per-row Python
     beyond the one Arrow kernel.
+    The kernel output's `localCheckpoint(eager=True)` runs its job when
+    this function is called, before the returned frame is used. Its blocks
+    stay in executor storage (memory, spilling to disk) until the
+    driver garbage-collects the checkpointed plan (ContextCleaner) or
+    the application ends, so drop the returned frame once consumed. A
+    local checkpoint keeps no lineage: if an executor holding its
+    blocks is lost, a later action on the returned frame fails instead
+    of recomputing them. That trades fault tolerance for one kernel pass.
     Oracle: sidecar-backed (dsir_bucket_map export bridges the
     xxhash64 buckets, registry.oracle_sql_for re-bakes per SF);
     closed-form values pinned in
@@ -1311,6 +1319,14 @@ def lm_surprisal(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     the per-doc agg's input rows arrive contiguous per doc, so its
     partial aggregate collapses to ~one row per doc before the
     exchange. Empty docs keep a zero row via the left join.
+    The kernel output's `localCheckpoint(eager=True)` runs its job when
+    this function is called, before the returned frame is used. Its blocks
+    stay in executor storage (memory, spilling to disk) until the
+    driver garbage-collects the checkpointed plan (ContextCleaner) or
+    the application ends, so drop the returned frame once consumed. A
+    local checkpoint keeps no lineage: if an executor holding its
+    blocks is lost, a later action on the returned frame fails instead
+    of recomputing them. That trades fault tolerance for one kernel pass.
     ORACLE PROMOTED r12 (the r11 queue, funded by the token_counts
     retirement) — the full formula recomputed by DuckDB in
     queries_text.py. Measured rate ~19 MB/s at the kernel-bound 153 MB

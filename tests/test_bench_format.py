@@ -1,4 +1,5 @@
-"""bench.py output-contract tests (no Spark needed).
+"""bench.py output-contract tests (Spark only for the session echo and
+the smoke subprocess).
 
 The driver captures only the LAST ~2000 chars of bench.py's stdout;
 BENCH_r07.json went parsed:null because "extra" grew past the buffer.
@@ -322,6 +323,11 @@ def test_tools_read_only_public_measurement_names():
     assert reads and not bad, bad
 
 
+SESSION_ECHO_KEYS = (
+    "master", "default_parallelism", "spark_graft_cpus", "python_daemon_module",
+)
+
+
 def test_bench_smoke_final_line_is_json():
     """Subprocess-level pin of the emission ordering (BENCH_r16 went
     parsed:null when a StateStore teardown WARN landed after the JSON
@@ -352,3 +358,21 @@ def test_bench_smoke_final_line_is_json():
     assert rec["unit"] == "sec"
     assert rec["queries"] and rec["value"] > 0
     assert rec["extra"]["smoke"] is True
+    assert set(SESSION_ECHO_KEYS) <= set(rec["extra"])
+
+
+def test_session_echo_describes_the_session(spark, monkeypatch):
+    """The bench line echoes the session it was measured on: master,
+    default parallelism, the SPARK_GRAFT_CPUS value and the worker
+    daemon module."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    echo = bench.session_echo(spark)
+    assert tuple(echo) == SESSION_ECHO_KEYS
+    sc = spark.sparkContext
+    assert echo["master"] == sc.master
+    assert echo["default_parallelism"] == sc.defaultParallelism
+    assert echo["spark_graft_cpus"] == "3"
+    assert echo["python_daemon_module"] == "cs598vectordb_spark._pydaemon"
+    json.dumps(echo)  # rides in the printed line
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert bench.session_echo(spark)["spark_graft_cpus"] is None

@@ -527,3 +527,64 @@ def test_knn_join_full_probe_matches_bruteforce_property(vecs, nlist):
             for r, o in enumerate(order)
         )
     assert got == sorted(want)
+
+
+_ws_run = st.text(alphabet=" \t\n\u00a0\u2003\u3000", min_size=1, max_size=3)
+_word = st.text(alphabet="abXYéßİ日本\U0001f642", min_size=1, max_size=4)
+_doc_text = st.one_of(
+    st.none(),
+    st.just(""),
+    _ws_run,
+    st.lists(st.tuples(_word, _ws_run), max_size=6).map(
+        lambda parts: "".join(w + s for w, s in parts)
+    ),
+)
+
+
+@given(
+    st.lists(st.tuples(st.integers(0, 4), _doc_text), min_size=1, max_size=12),
+    st.booleans(),
+)
+@settings(max_examples=10, deadline=None)
+def test_term_kernels_match_explode_groupby(spark, rows, unique_keys):
+    """term_counts / feature_counts against explode + groupBy on
+    generated NULL, empty, whitespace-only and non-ASCII text. On unique
+    keys the rows are equal. On duplicate keys the kernels do not merge:
+    each input row emits its own (key, term, count) rows, and the
+    per-(key, term) sums equal the explode form."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from cs598vectordb_spark.functions.text import normalize_ws, tokens
+    from cs598vectordb_spark.functions.tokenstream import feature_counts, term_counts
+    from cs598vectordb_spark.operators.textops import _dsir_feats_expr
+
+    if unique_keys:
+        rows = list({k: (k, t) for k, t in rows}.values())
+    base = (
+        spark.createDataFrame(rows, "doc_id long, text string")
+        .coalesce(2)
+        .select("doc_id", tokens(normalize_ws("text")).alias("_ws"))
+    )
+    wide = base.select("doc_id", "_ws", _dsir_feats_expr().alias("_f"))
+    collected = wide.collect()
+    for kernel, arr in ((term_counts, "_ws"), (feature_counts, "_f")):
+        got = sorted(tuple(r) for r in kernel(base, ["doc_id"], "_ws").collect())
+        explode = sorted(
+            tuple(r)
+            for r in wide.select("doc_id", F.explode(arr).alias("t"))
+            .groupBy("doc_id", "t")
+            .agg(F.count(F.lit(1)))
+            .collect()
+        )
+        per_input_row = sorted(
+            (r.doc_id, t, c) for r in collected for t, c in Counter(r[arr] or []).items()
+        )
+        assert got == per_input_row
+        sums = Counter()
+        for k, t, c in got:
+            sums[(k, t)] += c
+        assert sorted((k, t, c) for (k, t), c in sums.items()) == explode
+        if unique_keys:
+            assert got == explode
