@@ -3,6 +3,8 @@ DuckDB gate can't see (SimHash), plus pipeline sanity."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.operators import dedup, textops
@@ -1382,6 +1384,39 @@ def test_exact_substring_queued_oracle(spark, sf_dir):
 # replaced (OPTIMIZATION_r18.md).
 
 
+def _banded_string(sigs, bands, rows, id_col="doc_id"):
+    """`_banded`'s string-key form (concat_ws of the band's values), under
+    the shared contract that empty-signature rows are dropped first."""
+    sigs = sigs.filter(F.col("mh_0").isNotNull())
+    band_cols = []
+    for b in range(bands):
+        sig = F.concat_ws(
+            "-",
+            *[F.col(f"mh_{b * rows + r}").cast("string") for r in range(rows)],
+        )
+        band_cols.append(F.struct(F.lit(b).alias("band"), sig.alias("sig")))
+    return sigs.select(
+        F.col(id_col), F.explode(F.array(*band_cols)).alias("bs")
+    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+
+
+def _band_pairs(banded):
+    """The candidate-pair set of a (doc_id, band, sig) table."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return {
+        (r.doc_a, r.doc_b)
+        for r in a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.sig") == F.col("b.sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+        .collect()
+    }
+
+
 def test_banded_packed_key_matches_string_key(spark, sf_dir):
     """_banded's int64-packed band signature (r18) must bucket exactly
     like the concat_ws string key it replaced: same candidate-pair set
@@ -1401,48 +1436,44 @@ def test_banded_packed_key_matches_string_key(spark, sf_dir):
         allowMissingColumns=True,
     )
     sigs = dedup.minhash_signatures(docs, 16).cache()
-
-    def banded_string(sigs, bands, rows, id_col="doc_id"):
-        # the pre-r18 string form, under the shared r19 contract that
-        # empty-signature rows are dropped before banding
-        sigs = sigs.filter(F.col("mh_0").isNotNull())
-        band_cols = []
-        for b in range(bands):
-            sig = F.concat_ws(
-                "-",
-                *[F.col(f"mh_{b * rows + r}").cast("string") for r in range(rows)],
-            )
-            band_cols.append(F.struct(F.lit(b).alias("band"), sig.alias("sig")))
-        return sigs.select(
-            F.col(id_col), F.explode(F.array(*band_cols)).alias("bs")
-        ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
-    def pairs(banded):
-        a, b = banded.alias("a"), banded.alias("b")
-        return {
-            (r.doc_a, r.doc_b)
-            for r in a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .distinct()
-            .collect()
-        }
-
     try:
-        packed = pairs(dedup._banded(sigs, 8, 2))
-        stringy = pairs(banded_string(sigs, 8, 2))
+        packed = _band_pairs(dedup._banded(sigs, 8, 2))
+        stringy = _band_pairs(_banded_string(sigs, 8, 2))
     finally:
         sigs.unpersist()
     assert packed == stringy and len(packed) > 0
     # empty-signature docs form no pairs in either key form
     shorts = {2_000_001, 2_000_002, 2_000_003, 2_000_004}
     assert not any(a in shorts or b in shorts for a, b in packed)
+
+
+_sig_row = st.one_of(
+    st.none(),  # an empty shingle set: every mh_i NULL
+    st.lists(st.integers(0, 3), min_size=8, max_size=8),
+    st.lists(
+        st.integers(dedup.MINHASH_PRIME - 3, dedup.MINHASH_PRIME - 1),
+        min_size=8,
+        max_size=8,
+    ),
+)
+
+
+@given(st.lists(_sig_row, min_size=1, max_size=30), st.sampled_from([(4, 2), (8, 1)]))
+@settings(max_examples=8, deadline=None)
+def test_banded_packed_key_matches_string_key_generated(spark, rows, shape):
+    """`_banded`'s packed int64 keys against the string keys on generated
+    signatures: all-NULL rows, and values from a few-value alphabet at
+    both ends of [0, MINHASH_PRIME), so bands repeat within and across
+    documents. The candidate-pair sets are equal."""
+    bands, per_band = shape
+    cols = ", ".join(f"mh_{i} long" for i in range(8))
+    sigs = spark.createDataFrame(
+        [(i, *(r if r is not None else [None] * 8)) for i, r in enumerate(rows)],
+        f"doc_id long, {cols}",
+    )
+    packed = _band_pairs(dedup._banded(sigs, bands, per_band))
+    assert packed == _band_pairs(_banded_string(sigs, bands, per_band))
+    assert not any(rows[a] is None or rows[b] is None for a, b in packed)
 
 
 def test_empty_signature_is_all_null_and_never_banded(spark):
@@ -1745,3 +1776,44 @@ def test_shingle_chunking_row_identity(spark, monkeypatch):
         for r in dedup.shingle_hashes(docs).collect()
     }
     assert chunked == unchunked and len(chunked) == 3000
+
+
+_shingle_ws = st.sampled_from([" ", "  ", "\t", "\n", "\u3000", "\xa0"])
+_shingle_word = st.sampled_from(["spark", "Spark", "a", "naïve", "straße", "日本語", "İstanbul", "🙂"])
+_shingle_text = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(_shingle_ws, min_size=1, max_size=3).map("".join),  # whitespace only
+    st.lists(st.tuples(_shingle_word, _shingle_ws), max_size=10).map(
+        lambda parts: "".join(w + s for w, s in parts)
+    ),
+)
+
+
+@given(st.lists(_shingle_text, min_size=1, max_size=25), st.sampled_from([1, 3, 7]))
+@settings(max_examples=10, deadline=None)
+def test_shingle_hashes_match_rolling_hash_reference(spark, texts, chunk):
+    """shingle_hashes against a pure-Python left-to-right rolling hash
+    (acc = (acc·31 + codepoint) mod ROLLING_MOD per 3-gram shingle, in
+    first-occurrence order) on generated NULL, empty, whitespace-only,
+    non-ASCII and repeated-token text. SHINGLE_CHUNK_ROWS is shrunk so
+    one task's rows straddle chunk boundaries, and repeated shingles
+    hit the task-wide memo in later chunks."""
+    import pytest
+
+    def reference(text):
+        toks = (text or "").lower().split()
+        grams = dict.fromkeys(" ".join(toks[i : i + 3]) for i in range(len(toks) - 2))
+        out = []
+        for g in grams:
+            acc = 0
+            for ch in g:
+                acc = (acc * 31 + ord(ch)) % dedup.ROLLING_MOD
+            out.append(acc)
+        return out
+
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string").coalesce(1)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SHINGLE_CHUNK_ROWS", chunk)
+        got = {r["doc_id"]: r["hashes"] for r in dedup.shingle_hashes(docs).collect()}
+    assert got == {i: reference(t) for i, t in enumerate(texts)}

@@ -588,3 +588,124 @@ def test_term_kernels_match_explode_groupby(spark, rows, unique_keys):
         assert sorted((k, t, c) for (k, t), c in sums.items()) == explode
         if unique_keys:
             assert got == explode
+
+
+# ------------------------------------------------- batched beam walk
+
+
+def _per_query_walk(ids, X, nbr_pos, sq_x, bQ, bq_ids, qsel, k, beam, rounds, n_entry):
+    """The per-query beam walk the batched `_beam_walk_block` replaced,
+    kept verbatim as the differential reference. `nbr_pos` is a list of
+    per-row position arrays with dangling edges already dropped."""
+    c = len(ids)
+    entries = np.unique(np.linspace(0, c - 1, min(n_entry, c)).astype(np.int64))
+    out_q, out_id, out_d = [], [], []
+    for j in qsel:
+        q = bQ[j]
+        sq_q = float(q @ q)
+        dist = np.full(c, np.inf)
+        cand = entries
+        dist[cand] = np.maximum(sq_x[cand] - 2.0 * (X[cand] @ q) + sq_q, 0.0)
+        for _ in range(rounds):
+            scored = np.flatnonzero(np.isfinite(dist))
+            b_eff = min(beam, len(scored))
+            top = scored[np.argpartition(dist[scored], b_eff - 1)[:b_eff]]
+            new = np.unique(np.concatenate([nbr_pos[p] for p in top]))
+            new = new[~np.isfinite(dist[new])]
+            if len(new) == 0:
+                break
+            dist[new] = np.maximum(sq_x[new] - 2.0 * (X[new] @ q) + sq_q, 0.0)
+        scored = np.flatnonzero(np.isfinite(dist))
+        k_eff = min(k, len(scored))
+        top = scored[np.argpartition(dist[scored], k_eff - 1)[:k_eff]]
+        order = np.lexsort((ids[top], dist[top]))
+        top = top[order]
+        out_q.append(np.full(len(top), bq_ids[j], dtype=np.int64))
+        out_id.append(ids[top])
+        out_d.append(dist[top])
+    return out_q, out_id, out_d
+
+
+@given(
+    st.integers(1, 300),  # segment rows c
+    st.integers(1, 6),  # dim
+    st.integers(0, 12),  # max neighbour-list length
+    st.floats(0.0, 0.5),  # share of duplicate rows
+    st.integers(1, 40),  # queries in the block
+    st.integers(1, 12),  # k
+    st.integers(1, 40),  # beam
+    st.integers(0, 6),  # rounds
+    st.integers(1, 20),  # n_entry
+    st.integers(1, 40),  # queries per chunk
+    st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=150, deadline=None)
+def test_batched_beam_walk_matches_per_query_walk(
+    c, dim, degree, dup_share, nq, k, beam, rounds, n_entry, chunk, seed
+):
+    """The batched walk against the per-query walk on generated
+    segments: c from 1 to 300 (also below k, beam and n_entry), empty and
+    NULL neighbour lists, dangling edges (ids not in the segment), and
+    duplicate vectors, which tie exactly. WALK_CHUNK_CELLS is shrunk so
+    the query block straddles chunks, and the chunked rows must equal
+    the one-chunk rows bit for bit. Ids are equal per query except
+    among rows whose exact distances tie within 1e-9 relative;
+    distances are allclose at rtol 1e-12.
+
+    A duplicate row copies its source row's neighbour list too: which
+    of two tied rows a beam keeps is argpartition's choice in both
+    walks, and with equal lists the choice cannot change what the walk
+    visits next."""
+    import pytest
+
+    from cs598vectordb_spark.operators import graph
+
+    rng = np.random.default_rng(seed)
+    ids = np.sort(rng.choice(10 * c + 10, size=c, replace=False)).astype(np.int64)
+    X = rng.standard_normal((c, dim))
+    lists = [
+        None if rng.random() < 0.1 else rng.choice(10 * c + 10, size=rng.integers(0, degree + 1))
+        for _ in range(c)
+    ]
+    for r in np.flatnonzero(rng.random(c) < dup_share):
+        src = int(rng.integers(0, c))
+        X[r], lists[r] = X[src], lists[src]
+    sq_x = np.square(X).sum(axis=1)
+    n_total = nq + 3
+    bQ = rng.standard_normal((n_total, dim))
+    bq_ids = 1000 + 7 * np.arange(n_total, dtype=np.int64)
+    qsel = np.sort(rng.choice(n_total, size=nq, replace=False))
+
+    def positions(n):  # the old Arrow-path decode: dangling ids dropped
+        if n is None:
+            return np.empty(0, dtype=np.int64)
+        p = np.minimum(np.searchsorted(ids, n), c - 1)
+        return p[ids[p] == n]
+
+    ref_q, ref_id, ref_d = _per_query_walk(
+        ids, X, [positions(n) for n in lists], sq_x, bQ, bq_ids, qsel,
+        k, beam, rounds, n_entry,
+    )
+    counts = [0 if n is None else len(n) for n in lists]
+    offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
+    flat = np.concatenate([n for n in lists if n is not None] + [np.empty(0, np.int64)])
+    nbr = graph._adjacency_positions(ids, flat, offsets)
+    args = (ids, X, nbr, sq_x, bQ, bq_ids, qsel, k, beam, rounds, n_entry)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "WALK_CHUNK_CELLS", chunk * c + int(rng.integers(0, c)))
+        got_q, got_id, got_d = graph._beam_walk_block(*args)
+    # a query's rows do not depend on the other queries in its chunk
+    for want, have in zip((got_q, got_id, got_d), graph._beam_walk_block(*args)):
+        assert np.array_equal(want, have)
+
+    pos_of = {int(v): i for i, v in enumerate(ids)}
+    assert np.all(np.diff(got_q) >= 0)
+    for j, rq, rid, rd in zip(qsel, ref_q, ref_id, ref_d):
+        m = got_q == bq_ids[j]
+        gid, gd = got_id[m], got_d[m]
+        assert len(gid) == len(rid) and len(set(gid.tolist())) == len(gid)
+        assert np.allclose(gd, rd, rtol=1e-12)
+        exact = lambda v: float(np.square(X[pos_of[int(v)]] - bQ[j]).sum())
+        for a, b in zip(rid, gid):
+            if a != b:
+                assert np.isclose(exact(a), exact(b), rtol=1e-9, atol=0), (j, a, b)
