@@ -62,7 +62,7 @@ def bm25_scores(
     all-stopwords by construction (31-word vocabulary, 30 words in
     >50% of docs — a cap would erase it); a real 100 TB corpus runs
     with the cap on (0.5 drops ~dozens of stopwords, the Zipf head).
-    N and avgdl are two scalar aggregates (driver-sized by nature).
+    N and avgdl come from one two-column scalar aggregate (one collect).
     Ties break by doc_id ascending after the score is rounded to 6 dp,
     so rank order cannot flip on a last-ulp summation difference.
 
@@ -81,7 +81,13 @@ def bm25_scores(
     tests/test_hybrid.py::test_bm25_matches_pure_python."""
     from cs598vectordb_spark.functions.tokenstream import term_counts
 
-    n_docs = docs.count()
+    # N and avgdl in ONE scalar-aggregate job: count(1) is docs.count(),
+    # and avg runs over the same per-doc dl expression the join uses
+    stats = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.avg(token_count(normalize_ws(F.col(text_col)))).alias("avgdl"),
+    ).collect()[0]
+    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
     # ONE Arrow term-count kernel pass replaces explode + the
     # per-occurrence (doc, token) aggregation (r19; row identity with
     # the explode form pinned in tests/test_dedup_text.py::
@@ -104,7 +110,6 @@ def bm25_scores(
         F.col(id_col).alias("doc_id"),
         token_count(normalize_ws(F.col(text_col))).alias("dl"),
     )
-    avgdl = float(dl.agg(F.avg("dl")).collect()[0][0])
 
     qt = queries.select(
         "q_id",

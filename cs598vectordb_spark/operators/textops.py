@@ -1261,14 +1261,40 @@ def tfidf_keywords(docs: DataFrame, topk: int = 3) -> DataFrame:
     flip on a last-ulp ln() difference between engines; the smoothed
     tf·ln((N+1)/(df+1)) score rides along as a rounded value column.
 
-    Plan: explode → two partial-aggregated shuffles (term frequency on
-    (doc, token), document frequency on token) → join on token → one
-    per-doc window. Vocabulary-keyed shuffles are uniform; nothing is
-    per-row Python."""
-    toks = docs.select("doc_id", F.explode(tokens(normalize_ws(F.col("text")))).alias("token"))
-    tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    Plan: the (doc, token) term frequencies come from ONE
+    functions/tokenstream.term_counts mapInArrow pass — a document lives
+    wholly inside its row, so the kernel's counts are final: no Generate
+    node and no per-occurrence aggregation. The kernel output is
+    localCheckpoint'd, so the document-frequency rollup (its partial
+    aggregate collapses to vocabulary size map-side) and the tf side of
+    the join on token read the same materialized rows. The explode form
+    scanned, tokenized and exploded the corpus TWICE: ReuseExchange
+    cannot share the df branch's differently-pruned aggregate with the
+    tf exchange (the problem lm_surprisal's r19 rewrite fixed). Then one
+    per-doc window. N is one count() job, because NULL-text documents
+    count in N but emit no tf rows. Vocabulary-keyed shuffles are
+    uniform; nothing is per-row pandas. Row identity with the explode
+    form is the kernel's (pinned in
+    tests/test_properties.py::test_term_kernels_match_explode_groupby)
+    and rests on term_counts' precondition: doc_id is unique per row.
+
+    The tf rows' `localCheckpoint(eager=True)` runs its job when this
+    function is called, before the returned frame is used. Its blocks
+    stay in executor storage (memory, spilling to disk) until the
+    driver garbage-collects the checkpointed plan (ContextCleaner) or
+    the application ends, so drop the returned frame once consumed. A
+    local checkpoint keeps no lineage: if an executor holding its
+    blocks is lost, a later action on the returned frame fails instead
+    of recomputing them. That trades fault tolerance for one kernel pass."""
+    from cs598vectordb_spark.functions.tokenstream import term_counts
+
     n_docs = docs.count()
+    tf = term_counts(
+        docs.select("doc_id", tokens(normalize_ws(F.col("text"))).alias("_ws")),
+        ["doc_id"],
+        "_ws",
+    ).localCheckpoint(eager=True)
+    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tf").desc(), F.col("df").asc(), F.col("token").asc()
     )

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cs598vectordb_spark.config import DEFAULT_N_QUERIES, TABLES
 
@@ -61,19 +62,90 @@ def _align_session(spark: SparkSession) -> None:
             pass
 
 
+# Inferred parquet schemas kept on the driver, one entry per absolute
+# table path: (signature, schema). See load_table. An entry is stored
+# whole, so two threads racing on one table at worst both infer it.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+# The confs that change what schema Spark infers from the same footers:
+# the two _RUNTIME_CONFS toggles, and three a caller's session may set.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _table_signature(spark: SparkSession, path: str) -> tuple | None:
+    """(files, conf values) identifying what an inferred schema of
+    `path` depends on: the (relative name, inode, mtime_ns, size) of
+    every file under it, sorted, and the _SCHEMA_CONFS values. None for
+    a path this process cannot stat (not local, missing, or changing
+    while it is walked)."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            files = [(".", st.st_ino, st.st_mtime_ns, st.st_size)]
+        elif os.path.isdir(path):
+            files = []
+            for d, _, names in os.walk(path):
+                for f in names:
+                    full = os.path.join(d, f)
+                    st = os.stat(full)
+                    files.append(
+                        (os.path.relpath(full, path), st.st_ino, st.st_mtime_ns, st.st_size)
+                    )
+            files.sort()
+        else:
+            return None
+    except OSError:  # a file vanished mid-walk: read uncached
+        return None
+    return tuple(files), tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path), reusing the schema inferred for the same
+    table files under the same confs, so the read runs no footer-
+    inference job."""
+    key = os.path.abspath(path)
+    sig = _table_signature(spark, key)
+    hit = _SCHEMAS.get(key)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if sig is not None:
+        _SCHEMAS[key] = (sig, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One parquet table. Column pruning + predicate pushdown reach the
     scan because we return the raw relation and let callers select/filter
-    declaratively (verify: .explain shows ReadSchema/PushedFilters)."""
+    declaratively (verify: .explain shows ReadSchema/PushedFilters).
+
+    Schema cache: the schema Spark infers for a table is kept on the
+    driver (module-level, one entry per absolute path), and a later call
+    reads with `spark.read.schema(cached)`, which skips the 1-task
+    footer-inference job. The entry is keyed by the absolute path plus a
+    signature of (relative name, inode, mtime_ns, size) for every file
+    of the table and the values of the schema-affecting confs
+    (_SCHEMA_CONFS: nanosAsLong and inferTimestampNTZ, which
+    _align_session sets, plus binaryAsString, int96AsTimestamp and
+    mergeSchema). Each call re-stats the files, so a
+    table rewritten in place, files added or removed, or a conf change
+    all miss the cache: the schema is inferred again and replaces the
+    entry. Paths this process cannot stat (non-local) are never cached."""
     _align_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     except Exception:
         # retry once with the nanos conf forced (e.g. a session that
         # rejected the soft set above, or raced a concurrent unset)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     # events.ts has shipped as TIMESTAMP(NANOS), timestamp[us]-no-tz, and
     # plain TIMESTAMP across fixture generations — normalize to TIMESTAMP.
     if name == "events":

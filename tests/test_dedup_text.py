@@ -11,6 +11,31 @@ from cs598vectordb_spark.operators import dedup, textops
 from cs598vectordb_spark.sources.tables import load_table
 
 
+def py_sig(text: str | None, k: int = 16) -> list[int | None]:
+    """Pure-Python MinHash signature reference: lower + whitespace
+    split, first-occurrence-distinct 3-gram shingles, Horner base-31
+    rolling hash mod 1e9+7, then min over (a·h+b) mod 2^31−1 per
+    minhash_params pair; all-None when the shingle set is empty."""
+    from cs598vectordb_spark.functions.text import MINHASH_PRIME, ROLLING_MOD
+
+    params = dedup.minhash_params(k)
+    toks = (text or "").lower().split()
+    grams = (
+        list(dict.fromkeys(" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)))
+        if len(toks) >= 3
+        else []
+    )
+    hs = []
+    for g in grams:
+        acc = 0
+        for ch in g:
+            acc = (acc * 31 + ord(ch)) % ROLLING_MOD
+        hs.append(acc)
+    if not hs:
+        return [None] * len(params)
+    return [min((h * a + b) % MINHASH_PRIME for h in hs) for a, b in params]
+
+
 def _docs_with_dups(spark):
     """4 docs: 0 and 1 are exact duplicates (modulo whitespace/case);
     2 is a one-word edit of 0 (near-dup); 3 is unrelated."""
@@ -1213,27 +1238,6 @@ def test_minhash_signatures_value_exact(spark, sf_dir):
     3-gram shingles, Horner base-31 rolling hash mod 1e9+7, affine
     (a·h+b) mod 2^31−1 minhash — on the constructed duplicate set AND
     the first 20 fixture documents."""
-    from cs598vectordb_spark.functions.text import MINHASH_PRIME, ROLLING_MOD
-
-    params = dedup.minhash_params(16)
-
-    def py_sig(text: str) -> list[int | None]:
-        toks = (text or "").lower().split()
-        grams = (
-            list(dict.fromkeys(" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)))
-            if len(toks) >= 3
-            else []
-        )
-        hs = []
-        for g in grams:
-            acc = 0
-            for ch in g:
-                acc = (acc * 31 + ord(ch)) % ROLLING_MOD
-            hs.append(acc)
-        if not hs:
-            return [None] * len(params)
-        return [min((h * a + b) % MINHASH_PRIME for h in hs) for a, b in params]
-
     for docs in (
         _docs_with_dups(spark),
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20),

@@ -541,6 +541,71 @@ _doc_text = st.one_of(
 )
 
 
+_repeated_text = st.tuples(st.lists(_word, min_size=1, max_size=3), st.integers(2, 4)).map(
+    lambda wr: " ".join(wr[0] * wr[1])  # the same shingles over and over
+)
+_hash_list = st.one_of(
+    st.none(),
+    st.lists(st.one_of(st.none(), st.integers(0, 1_000_000_006)), max_size=5),
+)
+
+
+@given(
+    st.lists(st.one_of(_doc_text, _repeated_text), min_size=1, max_size=30),
+    st.lists(_hash_list, min_size=1, max_size=12),
+    st.integers(1, 3),
+    st.sampled_from([2, 3, 5]),
+    st.sampled_from([3, 4, 7]),
+)
+@settings(max_examples=8, deadline=None)
+def test_minhash_kernel_matches_python_reference(spark, texts, hash_lists, parts, chunk, batch):
+    """minhash_signatures' Arrow kernel against the pure-Python py_sig
+    reference on generated NULL, empty, whitespace-only, short,
+    non-ASCII and repeated-shingle documents, spread over `parts`
+    partitions, with Arrow batches of `batch` rows straddling
+    SHINGLE_CHUNK_ROWS = `chunk`: every mh_i equals the reference, and
+    `mh_0 IS NULL` holds exactly for the docs with an empty shingle set.
+    On raw (id, hashes) input the kernel skips NULL elements and gives
+    all-NULL for a NULL or all-NULL array."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from cs598vectordb_spark.functions.text import MINHASH_PRIME
+    from cs598vectordb_spark.operators import dedup
+    from tests.test_dedup_text import py_sig
+
+    params = dedup.minhash_params(16)
+    mh = [f"mh_{i}" for i in range(16)]
+
+    def frame(rows, ddl):
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), ddl)
+
+    docs = frame(list(enumerate(texts)), "doc_id long, text string")
+    hashed = frame(list(enumerate(hash_lists)), "doc_id long, hashes array<bigint>")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(batch))
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "SHINGLE_CHUNK_ROWS", chunk)
+            sigs = dedup.minhash_signatures(docs, 16)
+            got = {r["doc_id"]: [r[c] for c in mh] for r in sigs.collect()}
+            null0 = {r["doc_id"] for r in sigs.filter(F.col("mh_0").isNull()).collect()}
+        raw = {
+            r["doc_id"]: [r[c] for c in mh]
+            for r in dedup.minhash_signatures(None, 16, hashed=hashed).collect()
+        }
+    finally:
+        spark.conf.set(conf, prev)
+
+    assert got == {i: py_sig(t) for i, t in enumerate(texts)}
+    assert null0 == {i for i, t in enumerate(texts) if len((t or "").lower().split()) < 3}
+    for i, hs in enumerate(hash_lists):
+        vals = [h for h in hs or [] if h is not None]
+        want = [min((h * a + b) % MINHASH_PRIME for h in vals) for a, b in params] if vals else [None] * 16
+        assert raw[i] == want, (i, hs)
+
+
 @given(
     st.lists(st.tuples(st.integers(0, 4), _doc_text), min_size=1, max_size=12),
     st.booleans(),

@@ -149,6 +149,53 @@ def test_events_ts_always_timestamp(spark):
         assert dict(ev.dtypes)["ts"] == "timestamp", (sf, ev.dtypes)
 
 
+def test_load_table_schema_cache_matches_fresh_read(spark, sf_dir):
+    """At sf0.01, for every table: once load_table has inferred a
+    table's schema, a second load_table runs 0 Spark jobs (no footer-
+    inference job) and returns the same schema and the same sorted rows
+    as a fresh spark.read.parquet (events through normalize_ts, so
+    events.ts stays TIMESTAMP on the cached path). The cold call must
+    run a job, or the zero would prove nothing."""
+    from cs598vectordb_spark.config import TABLES
+    from cs598vectordb_spark.sources import tables
+    from cs598vectordb_spark.sources.tables import normalize_ts
+    from tests.test_index import _jobs_run
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for name in TABLES:
+        path = os.path.join(sf, f"{name}.parquet")
+        tables._SCHEMAS.pop(os.path.abspath(path), None)
+        _, cold = _jobs_run(spark, f"schema-cold-{name}", lambda: load_table(spark, sf, name))
+        df, warm = _jobs_run(spark, f"schema-warm-{name}", lambda: load_table(spark, sf, name))
+        assert cold >= 1 and warm == 0, (name, cold, warm)
+        fresh = spark.read.parquet(path)
+        if name == "events":
+            fresh = normalize_ts(fresh, "ts")
+            assert dict(df.dtypes)["ts"] == "timestamp", df.dtypes
+        assert df.schema == fresh.schema, name
+        assert sorted(map(repr, df.collect())) == sorted(map(repr, fresh.collect())), name
+
+
+def test_load_table_schema_cache_sees_rewrite(spark, sf_dir, tmp_path):
+    """A table rewritten in place with an added column misses the schema
+    cache (its file's mtime/size changed), so the next load_table reads
+    the new column."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dst = tmp_path / "region.parquet"
+    shutil.copyfile(os.path.join(sf_dir, "region.parquet"), dst)
+    first = load_table(spark, str(tmp_path), "region")
+    assert load_table(spark, str(tmp_path), "region").columns == first.columns
+    t = pq.read_table(dst)
+    pq.write_table(t.append_column("extra", pa.array(range(t.num_rows), pa.int64())), dst)
+    again = load_table(spark, str(tmp_path), "region")
+    assert again.columns == [*first.columns, "extra"]
+    assert sorted(r["extra"] for r in again.collect()) == list(range(t.num_rows))
+
+
 def test_normalize_ts_handles_all_encodings(spark):
     """normalize_ts is the single choke point for event-time dtype: bigint
     nanos -> TIMESTAMP, TIMESTAMP_NTZ -> TIMESTAMP (value-identical under
