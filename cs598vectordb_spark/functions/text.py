@@ -84,13 +84,6 @@ def alpha_ratio(text: Column | str) -> Column:
     return n_alpha.cast("double") / F.greatest(F.length(c), F.lit(1)).cast("double")
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or LANG_MARKERS["en"]
-    t = tokens(normalize_ws(text))
-    hits = F.size(F.filter(t, lambda x: x.isin(sw)))
-    return hits.cast("double") / F.greatest(F.size(t), F.lit(1)).cast("double")
-
-
 def lang_score(text: Column | str, lang: str) -> Column:
     """Marker-word hit count for one language (n-gram-free heuristic
     language ID: argmax over languages of marker hits)."""

@@ -50,11 +50,12 @@ from cs598vectordb_spark.config import DEFAULT_K, SEED
 #                vectors, walked ENTIRELY inside one Arrow kernel
 #                (best-first beam search in numpy — no per-hop stages).
 #
-# Probe plan: filter(probed segments) → applyInPandas walk → one global
-# top-k window. The segment table is persisted repartition()ed on
-# segment_id, so the groupBy before the kernel needs NO exchange
-# (asserted in tests/test_plans.py); the only shuffle carries
-# ≤ nprobe2·|Q|·k candidate rows. Segment count scales as nlist1·nlist2
+# Probe plan (pinned/cold): filter(probed segments) → applyInPandas walk
+# → one global top-k window; the served mode instead merges its tasks'
+# top-k rows on the driver. The segment table is persisted
+# repartition()ed on segment_id, so the groupBy before the kernel needs
+# NO exchange (asserted in tests/test_plans.py); the only shuffle
+# carries ≤ nprobe2·|Q|·k candidate rows. Segment count scales as nlist1·nlist2
 # with driver memory holding only nlist1 centroids + the probed L2 rows;
 # at 100 TB each segment is a few million vectors whose subgraph a single
 # executor walks in memory — the DiskANN/SPANN sharding story.
@@ -329,6 +330,21 @@ def _beam_walk_block(
     return np.concatenate(out_q), np.concatenate(out_id), np.concatenate(out_d)
 
 
+def _topk_merge(
+    q: np.ndarray, vec_id: np.ndarray, dist: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Each query's k nearest candidate rows: (q_id, rank, vec_id, dist)
+    sorted by (q_id, dist, vec_id), rank 1..k within a query — the
+    `row_number() over (partition by q_id order by dist, vec_id) <= k`
+    cut in numpy. The served walk's task tail and its driver merge both
+    call it."""
+    o = np.lexsort((vec_id, dist, q))
+    q, vec_id, dist = q[o], vec_id[o], dist[o]
+    rank = np.arange(len(q)) - np.searchsorted(q, q)
+    keep = rank < k
+    return q[keep], (rank[keep] + 1).astype(np.int32), vec_id[keep], dist[keep]
+
+
 def _walk_probed_segments(
     segments: DataFrame,
     probed: dict[int, np.ndarray],
@@ -598,22 +614,26 @@ def _walk_served_segments(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Serving-mode probe tail: the plan's input is a tiny local relation
-    with ONE row per task, the probed segment ids that task walks, and
-    NO repartition before the kernel; the walk kernel pulls segment
-    payloads worker-side via `_served_segment`. The ids are split into
-    default-parallelism groups of near-equal query counts
-    (`_balanced_groups`): how queries fall into L1 cells depends on the
-    data, and the heavier of two contiguous segment-id ranges (whole L1
-    cells) carried up to 1.3x an even share of the walk on clustered
-    10k bases, so a probe waited on it. Each task walks its segments
-    with the shared `_beam_walk_block`, then emits only its local top-k
-    per query by (dist, vec_id); the same window merge as
-    `_walk_probed_segments` follows. vec_ids are unique across segments,
-    so the global top-k is a subset of the union of the local ones and
-    rows equal the pinned probe's, whatever the split. Plan: one
-    Exchange (hash on q_id), two Spark jobs."""
+    """Serving-mode probe tail, ONE Spark job: the walk job's input is a
+    tiny local relation with ONE row per task, the probed segment ids
+    that task walks, and NO repartition before the kernel; the walk
+    kernel pulls segment payloads worker-side via `_served_segment`.
+    The ids are split into default-parallelism groups of near-equal
+    query counts (`_balanced_groups`): how queries fall into L1 cells
+    depends on the data, and the heavier of two contiguous segment-id
+    ranges (whole L1 cells) carried up to 1.3x an even share of the
+    walk on clustered 10k bases, so a probe waited on it. Each task
+    walks its segments with the shared `_beam_walk_block` and emits only
+    its local top-k per query (`_topk_merge`). The driver collects those
+    rows as Arrow, at most min(parallelism, probed segments)·nq·k of
+    them, and cuts them to k per query with the same `_topk_merge`.
+    vec_ids are unique across segments, so the global top-k is a subset
+    of the union of the local ones and rows equal the pinned probe's,
+    whatever the split. The rows come back as a local relation (a
+    LocalTableScan under spark.sql.execution.arrow.localRelationThreshold):
+    reading it runs no further job."""
     import pandas as pd
+    import pyarrow as pa
 
     bc = _pooled_broadcast(spark, (q_ids, Q, probed))
     groups = _balanced_groups(probed, spark.sparkContext.defaultParallelism)
@@ -652,20 +672,20 @@ def _walk_served_segments(
                 parts_d.append(out_d)
         if not parts_q:
             return
-        cq = np.concatenate(parts_q)
-        cid = np.concatenate(parts_id)
-        cd = np.concatenate(parts_d)
-        o = np.lexsort((cid, cd, cq))
-        cq, cid, cd = cq[o], cid[o], cd[o]
-        keep = np.arange(len(cq)) - np.searchsorted(cq, cq) < k
-        yield pd.DataFrame({"q_id": cq[keep], "vec_id": cid[keep], "dist": cd[keep]})
+        cq, _, cid, cd = _topk_merge(
+            np.concatenate(parts_q), np.concatenate(parts_id), np.concatenate(parts_d), k
+        )
+        yield pd.DataFrame({"q_id": cq, "vec_id": cid, "dist": cd})
 
     local = sdf.mapInPandas(serve, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
+    # a walk that yields no batch still collects one empty, typed batch
+    cand = pa.Table.from_batches(local._collect_as_arrow(empty_list_if_zero_records=False))
+    mq, rank, mid, md = _topk_merge(
+        *(cand.column(c).to_numpy() for c in ("q_id", "vec_id", "dist")), k
+    )
+    return spark.createDataFrame(
+        pd.DataFrame({"q_id": mq, "rank": rank, "vec_id": mid, "dist": md}),
+        "q_id long, rank int, vec_id long, dist double",
     )
 
 
@@ -886,7 +906,10 @@ def knn_graph_layered2(
     index's byte-capped driver cache (`l2_rows`: one bounded collect for
     cells not yet cached — the full centroid matrix of a large grid
     never reaches the driver), the best nprobe2 sub-cells per query
-    walked by the shared segment kernel, one window merge."""
+    walked by the shared segment kernel. The pinned and cold modes merge
+    with one window; the served mode runs its one walk job at call time,
+    merges on the driver and returns a local relation
+    (`_walk_served_segments`)."""
     if isinstance(queries, DataFrame):
         queries = queries.select("q_id", vec_col).toPandas()
     q_ids = queries["q_id"].to_numpy(dtype=np.int64)
@@ -1505,7 +1528,10 @@ def open_layered2(
       pyarrow-read + LRU-cache their segments' decoded arrays straight
       from this path (see the serving-mode comment above
       `_served_segment`). The high-QPS repeated-batch mode: steady
-      state ships zero payload per batch. Results are identical across
+      state ships zero payload per batch, and a probe is one Spark job,
+      run when `knn_graph_layered2` is called: the tasks' local top-k
+      rows are merged on the driver and returned as a local relation,
+      with no Exchange and no window. Results are identical across
       all three modes (same kernel, same rows — pinned in
       tests/test_index.py)."""
     meta = spark.read.parquet(os.path.join(path, "l1"))

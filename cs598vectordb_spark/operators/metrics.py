@@ -10,9 +10,6 @@ the set intersection, executed hash-partitioned on q_id.
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,37 +41,6 @@ def per_query_recall(pred: DataFrame, truth: DataFrame, k: int = DEFAULT_K) -> D
     )
 
 
-@dataclass
-class BatchMetrics:
-    """One measured query batch — the reference's per-interval log row
-    (qps dynamic_script_faiss.py:37, latency :38, recall :39)."""
-
-    n_queries: int
-    elapsed_s: float
-    recall: float
-
-    @property
-    def qps(self) -> float:
-        return self.n_queries / self.elapsed_s if self.elapsed_s > 0 else 0.0
-
-    @property
-    def latency_ms(self) -> float:
-        return self.elapsed_s * 1000.0
-
-
-def measure_batch(knn_df: DataFrame, truth: DataFrame | None, n_queries: int, k: int = DEFAULT_K) -> BatchMetrics:
-    """Run one batch (action = count) under the wall clock, score recall
-    against truth if given. Mirrors the reference's timed search loop
-    (dynamic_script_faiss.py:59-64)."""
-    t0 = time.time()
-    knn_df.count()
-    elapsed = time.time() - t0
-    rec = 1.0
-    if truth is not None:
-        rec = recall_at_k(knn_df, truth, k).collect()[0][0]
-    return BatchMetrics(n_queries=n_queries, elapsed_s=elapsed, recall=rec)
-
-
 def summary_last5(metrics: DataFrame) -> DataFrame:
     """A4: mean of the last 5 intervals per (backend, update_pct, metric)
     — the reference's summary rule (dynamic_script_faiss.py:120-122)."""
@@ -95,22 +61,6 @@ def tenant_summary(metrics: DataFrame) -> DataFrame:
         F.round(F.avg("qps"), ORACLE_ROUND).alias("avg_qps"),
         F.round(F.sum("qps"), ORACLE_ROUND).alias("total_qps"),
         F.round(F.avg("recall"), ORACLE_ROUND).alias("avg_recall"),
-    )
-
-
-def first5_series(metrics: DataFrame) -> DataFrame:
-    """A6: first 5 intervals per (backend, update_pct) as an ordered CSV
-    series (plots.py:27-44 regex-slices the same thing from text logs)."""
-    w = Window.partitionBy("backend", "update_pct").orderBy(F.col("interval").asc())
-    first5 = metrics.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= 5)
-    return first5.groupBy("backend", "update_pct").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("interval", "qps"))),
-                lambda s: F.round(s["qps"], 2).cast("string"),
-            ),
-            ",",
-        ).alias("qps_series")
     )
 
 

@@ -5,12 +5,13 @@ The r14 1M multi-tenant sweep measured the problem this module solves:
 N ∈ {10..50} concurrent clients probing 200-query batches against one
 shared worker-served graph saturate at ~200-285 aggregate QPS while a
 single 1,000-query batch serves 536 QPS — per-probe FIXED driver work
-(probe selection, the probe's Spark jobs, the final merge window)
+(probe selection, the probe's Spark jobs, the final merge)
 dominates at small batch sizes, so concurrency multiplies overhead
-instead of throughput. A served layered2 probe runs two Spark jobs:
-the merge window's shuffle-map job and its result job. Model-serving
-systems solve exactly this with dynamic batching (merge requests that arrive within a short window, execute
-once, split the results); the same idea is Spark-native here because
+instead of throughput. A served layered2 probe runs one Spark job, the
+segment walk; its tasks' top-k rows are merged on the driver.
+Model-serving systems solve exactly this with dynamic batching (merge
+requests that arrive within a short window, execute once, split the
+results); the same idea is Spark-native here because
 the engine's probes are already BATCH operators whose per-query cost
 falls with batch size (bench extra.knn_exact_qps_scaling measures that
 curve every run for the exact kernel; the graph probe shares the

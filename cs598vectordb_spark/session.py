@@ -20,6 +20,31 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def driver_memory_for(host_bytes: int | None) -> str:
+    """The default `spark.driver.memory` for a host with `host_bytes` of
+    physical memory: half of it, at least 512 MB and at most 16 GB, in
+    whole megabytes. In local mode the driver JVM is also the executor,
+    and its heap can grow past physical memory before a collection runs,
+    so the default stays well below the host's memory and leaves the rest
+    to the Python workers. An unknown size keeps the 16 GB ceiling."""
+    if not host_bytes or host_bytes <= 0:
+        return "16384m"
+    return f"{min(16384, max(512, host_bytes // (2 << 20)))}m"
+
+
+def driver_memory() -> str:
+    """`SPARK_DRIVER_MEM` if set, else `driver_memory_for` this host's
+    physical memory (page size × physical pages)."""
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        host = None
+    return driver_memory_for(host)
+
+
 def get_spark(app_name: str = "cs598vectordb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(os.cpu_count() or 8, 32)
@@ -46,7 +71,8 @@ def get_spark(app_name: str = "cs598vectordb_spark", cpus: int | None = None) ->
         # timezone-free values either way.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # local mode runs tasks in the driver JVM: see driver_memory_for
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # exact kNN uses an explicit crossJoin(broadcast(queries)); keep the
         # guard rails on for everything else.

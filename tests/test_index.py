@@ -562,6 +562,41 @@ def test_served_skips_missing_segment_dir(spark, sf_dir, tmp_path):
     fresh.segments.unpersist()
 
 
+def test_served_probe_with_every_segment_dir_missing_is_empty(spark, sf_dir, tmp_path):
+    """When no probed segment has a partition directory, the served walk
+    job yields no batch at all; the driver merge must still return an
+    empty frame with the probe's 4-column schema, not raise."""
+    import shutil
+
+    from cs598vectordb_spark.operators.graph import (
+        build_layered_graph2,
+        knn_graph_layered2,
+        materialize_layered2,
+        open_layered2,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qpdf = queries_from_embeddings(emb, 5).select("q_id", "embedding").toPandas()
+    path = str(tmp_path / "gallmiss")
+    idx = build_layered_graph2(emb, nlist1=2, nlist2=2, degree=16)
+    materialize_layered2(idx, path, pinned=False)
+    idx.close()
+    # opened first: the open infers the segments relation's schema, and
+    # the served probe never reads that relation
+    served = open_layered2(spark, path, served=True)
+    seg_root = os.path.join(path, "segments")
+    gone = [d for d in os.listdir(seg_root) if d.startswith("segment_id=")]
+    assert gone
+    for d in gone:
+        shutil.rmtree(os.path.join(seg_root, d))
+
+    out = knn_graph_layered2(served, qpdf, k=K, nprobe1=2, nprobe2=4, beam=24)
+    assert out.schema.simpleString() == (
+        "struct<q_id:bigint,rank:int,vec_id:bigint,dist:double>"
+    )
+    assert out.collect() == []
+
+
 def _jobs_run(spark, group: str, fn):
     """(fn(), number of Spark jobs fn ran), counted under job group
     `group` once the listener bus has delivered every event."""
@@ -576,15 +611,15 @@ def _jobs_run(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_graph2_served_probe_is_two_jobs(spark, sf_dir, tmp_path):
+def test_graph2_served_probe_is_one_job(spark, sf_dir, tmp_path):
     """The served probe feeds the walk kernel its probed segment ids as
-    a local relation: its executed plan has exactly ONE Exchange, hash-
-    partitioned on q_id (the window merge), with no segment_id
-    repartition and no scan of the segments parquet, and a warm probe
-    over a pandas query frame runs at most 2 Spark jobs (the merge's
-    shuffle-map job and its result job). A pandas query frame returns
-    the rows of the Spark frame it was collected from, on both the
-    served and the pinned index."""
+    a local relation, merges the tasks' top-k rows on the driver and
+    returns them as a local relation: the returned frame's executed plan
+    is a LocalTableScan with no Exchange and no scan of the segments
+    parquet, and a warm probe over a pandas query frame, collected, runs
+    exactly 1 Spark job (the walk). A pandas query frame returns the
+    rows of the Spark frame it was collected from, on both the served
+    and the pinned index."""
     from cs598vectordb_spark.operators.graph import (
         knn_graph_layered2,
         materialize_layered2,
@@ -601,9 +636,8 @@ def test_graph2_served_probe_is_two_jobs(spark, sf_dir, tmp_path):
     kw = dict(k=K, nprobe1=2, nprobe2=6, beam=32)
 
     plan = knn_graph_layered2(served, q, **kw)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert "hashpartitioning(q_id" in plan, plan
-    assert "hashpartitioning(segment_id" not in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "LocalTableScan" in plan, plan
     assert "segments" not in plan, plan
 
     def rows(index, queries):
@@ -616,7 +650,7 @@ def test_graph2_served_probe_is_two_jobs(spark, sf_dir, tmp_path):
     got, jobs = _jobs_run(
         spark, "graph2-served-warm", lambda: knn_graph_layered2(served, qpdf, **kw).collect()
     )
-    assert 0 < jobs <= 2, jobs
+    assert jobs == 1, jobs
     assert len(got) == NQ * K
     pinned.segments.unpersist()
 
@@ -626,7 +660,11 @@ def test_graph2_l2_driver_cache(spark, sf_dir, tmp_path, monkeypatch):
     first probe collects them, a second probe of the same object issues
     no L2 scan (the route of a pandas query frame then runs no Spark job
     at all). With the cache's byte ceiling at 0 nothing is cached, every
-    probe collects its L2 rows, and the rows equal the cached run."""
+    probe collects its L2 rows, and the rows equal the cached run. The
+    index is opened cold (pinned=False), whose probe frame is lazy, so
+    the jobs counted are the route's alone; a served probe would also
+    run its walk job inside the call. The route is the same code in
+    every mode."""
     from cs598vectordb_spark.operators import graph
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -640,16 +678,16 @@ def test_graph2_l2_driver_cache(spark, sf_dir, tmp_path, monkeypatch):
     def route(index, group):
         return _jobs_run(spark, group, lambda: graph.knn_graph_layered2(index, qpdf, **kw))
 
-    served = graph.open_layered2(spark, path, served=True)
-    first, jobs1 = route(served, "graph2-l2-first")
-    assert jobs1 >= 1 and served._l2_cells
-    second, jobs2 = route(served, "graph2-l2-second")
+    cold = graph.open_layered2(spark, path, pinned=False)
+    first, jobs1 = route(cold, "graph2-l2-first")
+    assert jobs1 >= 1 and cold._l2_cells
+    second, jobs2 = route(cold, "graph2-l2-second")
     assert jobs2 == 0, "a warm probe must not scan the L2 table"
     cached = second.orderBy("q_id", "rank").collect()
     assert first.orderBy("q_id", "rank").collect() == cached
 
     monkeypatch.setattr(graph, "_L2_DRIVER_CACHE_BYTES", 0)
-    uncached = graph.open_layered2(spark, path, served=True)
+    uncached = graph.open_layered2(spark, path, pinned=False)
     for i in range(2):
         out, jobs = route(uncached, f"graph2-l2-uncached-{i}")
         assert jobs >= 1 and not uncached._l2_cells

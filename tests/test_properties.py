@@ -7,7 +7,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
-from hypothesis import assume, given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from cs598vectordb_spark.operators.asof import asof_join
@@ -774,3 +774,46 @@ def test_batched_beam_walk_matches_per_query_walk(
         for a, b in zip(rid, gid):
             if a != b:
                 assert np.isclose(exact(a), exact(b), rtol=1e-9, atol=0), (j, a, b)
+
+
+_candidate = st.tuples(
+    st.sampled_from([0, 1, 2, 7, 1 << 40, (1 << 40) + 3]),  # q_id, batcher slots too
+    st.integers(0, 40),  # vec_id
+    st.one_of(st.sampled_from([0.0, 0.5, 2.25]), st.floats(0.0, 10.0)),  # exact ties
+)
+
+
+@given(st.lists(_candidate, max_size=60), st.one_of(st.just(1), st.integers(1, 8)))
+@example(rows=[], k=3)
+@example(rows=[(0, 5, 0.0), (0, 2, 0.0), (0, 9, 0.0), (1, 4, 0.5)], k=1)
+@example(rows=[(3, 1, 1.0), (3, 2, 0.0), (4, 7, 0.0)], k=5)
+@settings(max_examples=20, deadline=None)
+def test_topk_merge_matches_row_number_window(spark, rows, k):
+    """The served probe's numpy top-k cut (`_topk_merge`, run in each
+    walk task and again on the driver) against the window it replaces,
+    `row_number() over (partition by q_id order by dist, vec_id) <= k`,
+    on generated candidate sets: exact distance ties (0.0 among them),
+    queries with fewer than k candidates, k = 1 and empty input. The
+    (q_id, rank, vec_id, dist) rows are equal, and the helper returns
+    them sorted by (q_id, rank)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from cs598vectordb_spark.operators.graph import _topk_merge
+
+    q = np.array([r[0] for r in rows], dtype=np.int64)
+    vid = np.array([r[1] for r in rows], dtype=np.int64)
+    dist = np.array([r[2] for r in rows], dtype=np.float64)
+    mq, rank, mid, md = _topk_merge(q, vid, dist, k)
+    got = list(zip(mq.tolist(), rank.tolist(), mid.tolist(), md.tolist()))
+    assert got == sorted(got, key=lambda r: (r[0], r[1]))
+
+    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
+    want = (
+        spark.createDataFrame(rows, "q_id long, vec_id long, dist double")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "vec_id", "dist")
+        .collect()
+    )
+    assert sorted(got) == sorted(tuple(r) for r in want)

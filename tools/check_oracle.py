@@ -66,13 +66,15 @@ def _bare_spark():
         return get_spark("oracle-check")
     from pyspark.sql import SparkSession
 
+    from cs598vectordb_spark.session import driver_memory
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("oracle-check")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
