@@ -3,15 +3,27 @@ FAISS IndexHNSWFlat, dynamic_script_faiss.py:53-57), re-expressed for
 Spark instead of as a pointer-chasing in-memory graph.
 
 Spark cannot mutate a shared graph during traversal, so the index is
-segmented: a two-level k-means coarse layer (operators/ivf2) prunes each
-query to a few segments, and every segment holds an exact (or
-spill-partitioned) kNN subgraph that one Arrow kernel walks best-first
-in numpy.
+segmented: a two-level k-means coarse layer prunes each query to a few
+segments, and every segment holds an exact (or spill-partitioned) kNN
+subgraph that one Arrow kernel walks best-first in numpy.
 
 * ``build_layered_graph2`` / ``knn_graph_layered2`` — the segmented
   graph; segment count scales as nlist1·nlist2 past any driver-sized
   top layer. Served by worker-cached segments
   (``open_layered2(served=True)``) on the read path of record.
+
+The coarse layer is hierarchical because a flat quantizer scores every
+query against ALL nlist centroids on the driver — fine at thousands,
+impossible when a 100 TB base wants nlist ~ sqrt(N) ~ 10^5-10^6 lists
+(FAISS's two-level coarse quantizers; the reference trains its coarse
+quantizer on a bounded sample, multi_tenant_script.py:94-99):
+
+* L1: a driver-sized layer of nlist1 centroids, k-means on a bounded
+  sample (the flat IVF trainer).
+* L2: nlist2 sub-centroids per L1 cell, trained inside the one Python
+  pass over each cell that also builds its segments' graphs; the L2
+  table holds each sub-cell's exact mean and stays distributed — a
+  probe pulls only its probed cells' rows (≤ nprobe1·nlist2).
 
 Determinism: segment builds are seeded k-means plus exact edges with
 id tie-breaks — identical graphs and results across runs; recall
@@ -40,7 +52,7 @@ from cs598vectordb_spark.config import DEFAULT_K, SEED
 # (/root/reference/dynamic_script_milvus.py:76-82 HNSW index on a
 # sharded collection). Spark rendering:
 #
-#   top layer  = the ivf2 two-level pruner: L1 (driver-sized) prunes to
+#   top layer  = the two-level coarse pruner: L1 (driver-sized) prunes to
 #                nprobe1 cells, ONLY those cells' L2 sub-centroid rows
 #                are pulled (bounded: nprobe1·nlist2, into a byte-capped
 #                per-index driver cache — never the full L2 matrix of a
@@ -59,6 +71,14 @@ from cs598vectordb_spark.config import DEFAULT_K, SEED
 # with driver memory holding only nlist1 centroids + the probed L2 rows;
 # at 100 TB each segment is a few million vectors whose subgraph a single
 # executor walks in memory — the DiskANN/SPANN sharding story.
+#
+# Build plan: ONE applyInPandas per L1 cell (the cell's L2 k-means, its
+# L2 assignment and every sub-cell's subgraph) → repartition on
+# segment_id → persist; the L2 means come from the persisted segments
+# with no exchange, and one count fills both caches. materialize writes
+# the two tables (2 jobs) plus a driver-written L1 sidecar; the open
+# reads parquet footers, not data (0 jobs). Job budgets pinned in
+# tests/test_index.py.
 
 
 def _local_knn_graph(
@@ -229,7 +249,7 @@ def _beam_walk_block(
     """Best-first beam walk of ONE decoded segment for a block of
     queries — the numpy kernel shared by the Arrow-payload probe
     (`_walk_probed_segments`) and the worker-served probe
-    (`_walk_served_segments`), so the two serving modes are identical
+    (`_served_walk`), so the two serving modes are identical
     by construction. Returns flat (q_id, vec_id, dist) arrays holding
     each query's top-k, query by query in qsel order and each query's
     rows by (dist, vec_id). Deterministic:
@@ -601,7 +621,7 @@ def _balanced_groups(probed: dict[int, np.ndarray], n: int) -> list[list[int]]:
     return [sorted(g) for g in groups]
 
 
-def _walk_served_segments(
+def _served_walk(
     spark,
     seg_dir: str,
     probed: dict[int, np.ndarray],
@@ -614,32 +634,29 @@ def _walk_served_segments(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Serving-mode probe tail, ONE Spark job: the walk job's input is a
-    tiny local relation with ONE row per task, the probed segment ids
-    that task walks, and NO repartition before the kernel; the walk
-    kernel pulls segment payloads worker-side via `_served_segment`.
-    The ids are split into default-parallelism groups of near-equal
-    query counts (`_balanced_groups`): how queries fall into L1 cells
-    depends on the data, and the heavier of two contiguous segment-id
-    ranges (whole L1 cells) carried up to 1.3x an even share of the
-    walk on clustered 10k bases, so a probe waited on it. Each task
-    walks its segments with the shared `_beam_walk_block` and emits only
-    its local top-k per query (`_topk_merge`). The driver collects those
-    rows as Arrow, at most min(parallelism, probed segments)·nq·k of
-    them, and cuts them to k per query with the same `_topk_merge`.
-    vec_ids are unique across segments, so the global top-k is a subset
-    of the union of the local ones and rows equal the pinned probe's,
-    whatever the split. The rows come back as a local relation (a
-    LocalTableScan under spark.sql.execution.arrow.localRelationThreshold):
-    reading it runs no further job."""
+    """The served probe's walk job, unrun: (q_id, vec_id, dist) rows,
+    each task's local top-k per query. Its input is a pandas frame with
+    ONE row per task, the probed segment ids that task walks, which
+    Spark turns into a local relation (LocalTableScan, split into one
+    partition per row while there are at most default-parallelism rows),
+    so the job needs no repartition and no Python RDD: a list input
+    would be a pickled `Scan ExistingRDD`, whose first use in a session
+    costs over a second. The walk kernel pulls segment payloads
+    worker-side via `_served_segment`. The ids are split into
+    default-parallelism groups of near-equal query counts
+    (`_balanced_groups`): how queries fall into L1 cells depends on the
+    data, and the heavier of two contiguous segment-id ranges (whole L1
+    cells) carried up to 1.3x an even share of the walk on clustered 10k
+    bases, so a probe waited on it. Each task walks its segments with
+    the shared `_beam_walk_block` and emits only its local top-k per
+    query (`_topk_merge`)."""
     import pandas as pd
-    import pyarrow as pa
 
     bc = _pooled_broadcast(spark, (q_ids, Q, probed))
     groups = _balanced_groups(probed, spark.sparkContext.defaultParallelism)
-    # a local list is parallelized into default-parallelism slices, so
-    # each group row is one task
-    sdf = spark.createDataFrame([(g,) for g in groups], "segment_ids array<int>")
+    sdf = spark.createDataFrame(
+        pd.DataFrame({"segment_ids": groups}), "segment_ids array<int>"
+    )
 
     def serve(batches):
         bq_ids, bQ, bprobed = bc.value
@@ -677,9 +694,24 @@ def _walk_served_segments(
         )
         yield pd.DataFrame({"q_id": cq, "vec_id": cid, "dist": cd})
 
-    local = sdf.mapInPandas(serve, "q_id long, vec_id long, dist double")
+    return sdf.mapInPandas(serve, "q_id long, vec_id long, dist double")
+
+
+def _collect_served_topk(spark, walk: DataFrame, k: int) -> DataFrame:
+    """Serving-mode probe tail, ONE Spark job: runs the `_served_walk`
+    job, collects its rows as Arrow, at most min(parallelism, probed
+    segments)·nq·k of them, and cuts them to k per query with the same
+    `_topk_merge` the tasks ran. vec_ids are unique across segments, so
+    the global top-k is a subset of the union of the local ones and rows
+    equal the pinned probe's, whatever the split. The rows come back as
+    a local relation (a LocalTableScan under
+    spark.sql.execution.arrow.localRelationThreshold): reading it runs
+    no further job."""
+    import pandas as pd
+    import pyarrow as pa
+
     # a walk that yields no batch still collects one empty, typed batch
-    cand = pa.Table.from_batches(local._collect_as_arrow(empty_list_if_zero_records=False))
+    cand = pa.Table.from_batches(walk._collect_as_arrow(empty_list_if_zero_records=False))
     mq, rank, mid, md = _topk_merge(
         *(cand.column(c).to_numpy() for c in ("q_id", "vec_id", "dist")), k
     )
@@ -699,7 +731,7 @@ _L2_DRIVER_CACHE_BYTES = 32 << 20
 
 
 class LayeredGraph2Index:
-    """Per-(l1,l2)-segment kNN subgraphs over the ivf2 coarse layer."""
+    """Per-(l1,l2)-segment kNN subgraphs over the two-level coarse layer."""
 
     def __init__(
         self,
@@ -803,6 +835,13 @@ def default_grid2(n: int, target_segment_rows: int = 1024) -> tuple[int, int]:
     return side, side
 
 
+# L1 k-means sample (rows, first by id) and the per-cell L2 k-means
+# sample (rows, first by id within the cell): bounded training sets, the
+# reference's own sampled coarse quantizer (multi_tenant_script.py:94-99)
+_L1_TRAIN_SAMPLE = 10_000
+_L2_CELL_SAMPLE = 4_000
+
+
 def build_layered_graph2(
     base: DataFrame,
     nlist1: int | None = 4,
@@ -813,11 +852,30 @@ def build_layered_graph2(
     vec_col: str = "embedding",
     seed: int = SEED,
 ) -> LayeredGraph2Index:
-    """ivf2 assignment (L2 sub-centroids trained per-cell, never
-    driver-collected at build — operators/ivf2.py), then one
-    applyInPandas pass builds each (l1,l2) sub-cell's kNN subgraph, and
-    the segment table persists hash-partitioned on the composite
-    segment id so probes reach the walk kernel exchange-free.
+    """Two-level coarse layer plus one kNN subgraph per (l1, l2)
+    sub-cell, in one Python pass per L1 cell.
+
+    * L1: nlist1 centroids, k-means on a bounded sample collected to the
+      driver (`build_ivf_index`), and every row assigned to its nearest
+      one by a broadcast Arrow kernel.
+    * One applyInPandas grouped by L1 cell then, per cell, sorts the rows
+      by id, trains the cell's nlist2 sub-centroids on its first
+      _L2_CELL_SAMPLE rows, assigns each row its l2_id, and builds each
+      sub-cell's kNN graph with the same kernels over the same id-sorted
+      rows a pass grouped by segment would see (`_local_knn_graph`, or
+      `_local_partitioned_graph` past exact_segment_rows). The segment
+      table is that pass repartition()ed on segment_id = l1_id·nlist2 +
+      l2_id and persisted, so probes reach the walk kernel exchange-free.
+    * The L2 table, one row per non-empty sub-cell, holds each
+      sub-cell's exact float64 mean (`_l2_means`), aggregated from the
+      persisted segments with no exchange; the full L2 matrix never
+      reaches the driver. It is persisted on its own, so unpersisting
+      `segments` frees the whole segment table and the L2 table stays
+      valid for indexes derived by delete/insert.
+
+    One action, the L2 table's count, fills both caches. The Spark jobs
+    are the L1 sample's and that count's (AQE runs each shuffle stage as
+    its own job): 7 at most, pinned in tests/test_index.py.
 
     Pass ``nlist1=None``/``nlist2=None`` to size the coarse layer by
     the default_grid2 rule (segments ∝ n, ~1k rows per segment) — the
@@ -836,15 +894,12 @@ def build_layered_graph2(
         StructType,
     )
 
-    from cs598vectordb_spark.operators.ivf2 import build_ivf2_index
+    from cs598vectordb_spark.operators.index import _kmeans_fit, build_ivf_index
 
-    ivf2 = build_ivf2_index(
-        base, nlist1=nlist1, nlist2=nlist2, id_col=id_col, vec_col=vec_col, seed=seed
+    l1 = build_ivf_index(
+        base, nlist=nlist1, train_sample=_L1_TRAIN_SAMPLE,
+        id_col=id_col, vec_col=vec_col, seed=seed,
     )
-    n_segments = nlist1 * nlist2
-    keyed = ivf2.assigned.withColumn(
-        "segment_id", (F.col("l1_id") * nlist2 + F.col("l2_id")).cast("int")
-    ).select("segment_id", id_col, vec_col)
     vec_type = base.schema[vec_col].dataType
     out_schema = StructType(
         [
@@ -855,35 +910,77 @@ def build_layered_graph2(
         ]
     )
 
-    def seg_graph(pdf: pd.DataFrame) -> pd.DataFrame:
+    def cell_pass(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         X = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
-        if len(ids) <= 1:
-            nbrs = [np.array([], dtype=np.int64)] * len(ids)
-        elif len(ids) <= exact_segment_rows:
-            nbrs, _ = _local_knn_graph(X, ids, degree)
-        else:
-            nbrs, _ = _local_partitioned_graph(X, ids, degree)
-        return pd.DataFrame(
-            {
-                "segment_id": pdf["segment_id"],
-                id_col: ids,
-                vec_col: pdf[vec_col],
-                "nbr_ids": nbrs,
-            }
+        C = _kmeans_fit(X[:_L2_CELL_SAMPLE], min(nlist2, len(ids)), seed)
+        d2 = (
+            np.square(X).sum(1, keepdims=True)
+            - 2.0 * (X @ C.T)
+            + np.square(C).sum(1)[None, :]
         )
+        l2_id = d2.argmin(axis=1)
+        first = int(pdf["centroid_id"].iloc[0]) * nlist2
+        vecs = pdf[vec_col].to_numpy()
+        parts = []
+        for j in np.unique(l2_id):
+            rows = np.flatnonzero(l2_id == j)  # ascending: id order
+            sub = ids[rows]
+            if len(rows) <= 1:
+                nbrs = [np.array([], dtype=np.int64)] * len(rows)
+            elif len(rows) <= exact_segment_rows:
+                nbrs, _ = _local_knn_graph(X[rows], sub, degree)
+            else:
+                nbrs, _ = _local_partitioned_graph(X[rows], sub, degree)
+            parts.append(
+                pd.DataFrame(
+                    {
+                        "segment_id": np.full(len(rows), first + j, dtype=np.int32),
+                        id_col: sub,
+                        vec_col: vecs[rows],
+                        "nbr_ids": nbrs,
+                    }
+                )
+            )
+        return pd.concat(parts, ignore_index=True)
 
     segments = (
-        keyed.groupBy("segment_id")
-        .applyInPandas(seg_graph, out_schema)
-        .repartition(n_segments, "segment_id")
+        # cells hash into partitions, and a partition is one task: with
+        # as many partitions as cells, 4 cells hash to a 3/1 split and 14
+        # cells to at most 3 in one task; with 4x as many partitions, no
+        # partition holds more than 2 cells on grids of 4 to 100 cells
+        l1.assigned.repartition(4 * nlist1, "centroid_id")
+        .groupBy("centroid_id")
+        .applyInPandas(cell_pass, out_schema)
+        .repartition(nlist1 * nlist2, "segment_id")
         .persist()
     )
-    segments.count()
-    ivf2.assigned.unpersist()  # the graph segments supersede the raw assignment
-    return LayeredGraph2Index(
-        segments, ivf2.l1_centroids, ivf2.l2_table, nlist1, nlist2, degree
+    l2_table = _l2_means(segments, nlist2, vec_col).persist()
+    l2_table.count()
+    return LayeredGraph2Index(segments, l1.centroids, l2_table, nlist1, nlist2, degree)
+
+
+def _l2_means(segments: DataFrame, nlist2: int, vec_col: str) -> DataFrame:
+    """(l1_id, l2_id, centroid): each non-empty segment's exact mean
+    vector, Spark's float64 `avg` per vector position. Every grouping
+    key starts with segment_id, on which the segment table is
+    hash-partitioned, so the aggregation needs NO exchange. It runs in
+    the JVM: a Python pass over the segment table's nlist1·nlist2
+    partitions paid a Python task's fixed cost per partition, 4.3 s
+    against 2.4 s for this form at a 200k base (196 partitions,
+    local[4] on a 4-vCPU host)."""
+    return (
+        segments.select("segment_id", F.posexplode(vec_col).alias("pos", "v"))
+        .groupBy("segment_id", "pos")
+        .agg(F.avg("v").alias("m"))
+        .groupBy("segment_id")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
+        .select(
+            (F.col("segment_id") / nlist2).cast("int").alias("l1_id"),
+            (F.col("segment_id") % nlist2).alias("l2_id"),
+            F.transform("s", lambda x: x["m"]).alias("centroid"),
+        )
     )
 
 
@@ -909,7 +1006,7 @@ def knn_graph_layered2(
     walked by the shared segment kernel. The pinned and cold modes merge
     with one window; the served mode runs its one walk job at call time,
     merges on the driver and returns a local relation
-    (`_walk_served_segments`)."""
+    (`_served_walk`, `_collect_served_topk`)."""
     if isinstance(queries, DataFrame):
         queries = queries.select("q_id", vec_col).toPandas()
     q_ids = queries["q_id"].to_numpy(dtype=np.int64)
@@ -936,19 +1033,12 @@ def knn_graph_layered2(
     sids, first = np.unique(sel_key[by], return_index=True)
     probed = dict(zip(sids.tolist(), np.split(sel_q[by], first[1:])))
     if index.serve_dir is not None:
-        return _walk_served_segments(
-            index.segments.sparkSession,
-            index.serve_dir,
-            probed,
-            q_ids,
-            Q,
-            k,
-            beam,
-            rounds,
-            n_entry,
-            id_col,
-            vec_col,
+        spark = index.segments.sparkSession
+        walk = _served_walk(
+            spark, index.serve_dir, probed, q_ids, Q, k, beam, rounds, n_entry,
+            id_col, vec_col,
         )
+        return _collect_served_topk(spark, walk, k)
     return _walk_probed_segments(
         index.segments,
         probed,
@@ -1474,39 +1564,86 @@ def materialize_layered2(
     segments PARTITIONED BY segment_id, the DISTRIBUTED L2 centroid
     table (never collected whole — probes pull only probed cells into a
     byte-capped driver cache, the property that lets segment count
-    exceed any driver-sized top layer), and a driver-sized L1
-    sidecar (nlist1 rows by design). `pinned` picks the re-open mode
+    exceed any driver-sized top layer), and a driver-sized L1 sidecar
+    (nlist1 rows by design) that the driver writes with pyarrow, no
+    Spark job. The two table writes are the only Spark jobs of a
+    materialize with ``pinned=False``. `pinned` picks the re-open mode
     (see open_layered2) — pass False when the caller wants the
     cold-serving relation, so the write path never shuffles/persists a
-    full cached copy it is not going to use."""
+    full cached copy it is not going to use. Like the _EPOCH stamp, the
+    sidecar assumes `path` is a local or shared POSIX path."""
     spark = index.segments.sparkSession
     index.segments.write.mode("overwrite").partitionBy("segment_id").parquet(
         os.path.join(path, "segments")
     )
     _write_epoch(os.path.join(path, "segments"))
     index.l2_table.write.mode("overwrite").parquet(os.path.join(path, "l2"))
-    rows = [
-        (
-            i,
-            [float(x) for x in index.l1_centroids[i]],
-            index.nlist1,
-            index.nlist2,
-            index.degree,
-        )
-        for i in range(index.nlist1)
-    ]
-    spark.createDataFrame(
-        rows,
-        "l1_id long, centroid array<double>, nlist1 int, nlist2 int, degree int",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "l1"))
+    _write_l1(os.path.join(path, "l1"), index)
     return open_layered2(spark, path, pinned=pinned)
+
+
+def _write_l1(l1_dir: str, index: LayeredGraph2Index) -> None:
+    """Overwrite `l1_dir` with one parquet file of the L1 sidecar: one
+    row per L1 centroid, in the schema the Spark writer used to give it
+    (l1_id long, centroid array<double>, nlist1 int, nlist2 int,
+    degree int), so indexes written before and after read alike."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    C = np.ascontiguousarray(index.l1_centroids, dtype=np.float64)
+    n, dim = C.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * dim)
+    table = pa.table(
+        {
+            "l1_id": pa.array(np.arange(n, dtype=np.int64)),
+            "centroid": pa.ListArray.from_arrays(offsets, pa.array(C.ravel())),
+            "nlist1": pa.array(np.full(n, index.nlist1, dtype=np.int32)),
+            "nlist2": pa.array(np.full(n, index.nlist2, dtype=np.int32)),
+            "degree": pa.array(np.full(n, index.degree, dtype=np.int32)),
+        }
+    )
+    shutil.rmtree(l1_dir, ignore_errors=True)
+    os.makedirs(l1_dir)
+    pq.write_table(table, os.path.join(l1_dir, "part-00000.parquet"))
+
+
+def _footer_schema(root: str):
+    """The Spark schema of the Spark-written parquet files under `root`,
+    from the row metadata Spark's writer leaves in every file footer,
+    read from the first data file (names starting with "_" or "." are
+    skipped, as Spark's listing skips them). One footer read on the
+    driver, where `spark.read.parquet` would run a schema-inference
+    job; schema inference reads the same metadata."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    for top, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            meta = pq.read_schema(os.path.join(top, data[0])).metadata
+            return StructType.fromJson(
+                json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+            )
+    raise FileNotFoundError(f"no parquet data file under {root}")
 
 
 def open_layered2(
     spark, path: str, pinned: bool = True, served: bool = False
 ) -> LayeredGraph2Index:
     """Re-open a materialized layered2 index: L1 sidecar to the driver
-    (nlist1 rows), L2 table stays a distributed relation.
+    (nlist1 rows, read with pyarrow), L2 table stays a distributed
+    relation. The L2 and segment relations are read with the schema of
+    their parquet footers (`_footer_schema`; segment_id, the partition
+    column, as int), so the served and cold opens run no Spark job. (A
+    segment table of more than
+    spark.sql.sources.parallelPartitionDiscovery.threshold partition
+    directories, 32 by default, is listed by a Spark job, as any
+    partitioned parquet read is.)
 
     Three serving modes for the segment table:
 
@@ -1534,23 +1671,31 @@ def open_layered2(
       with no Exchange and no window. Results are identical across
       all three modes (same kernel, same rows — pinned in
       tests/test_index.py)."""
-    meta = spark.read.parquet(os.path.join(path, "l1"))
-    rows = meta.orderBy("l1_id").collect()
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    meta = pq.read_table(os.path.join(path, "l1")).sort_by("l1_id")
+    n = meta.num_rows
     l1 = np.ascontiguousarray(
-        np.stack([np.asarray(r["centroid"]) for r in rows]), dtype=np.float64
+        meta.column("centroid").combine_chunks().flatten().to_numpy().reshape(n, -1),
+        dtype=np.float64,
     )
     nlist1, nlist2, degree = (
-        int(rows[0]["nlist1"]),
-        int(rows[0]["nlist2"]),
-        int(rows[0]["degree"]),
+        int(meta.column(c)[0].as_py()) for c in ("nlist1", "nlist2", "degree")
     )
     # NOT persisted: probes read L2 rows through the index object's
     # byte-capped driver cache (LayeredGraph2Index.l2_rows), which scans
     # this relation only for cells it has not cached yet, so the open
     # stays side-effect-free
-    l2 = spark.read.parquet(os.path.join(path, "l2"))
-    segs = spark.read.parquet(os.path.join(path, "segments"))
-    serve_dir = os.path.join(path, "segments") if served else None
+    l2_dir = os.path.join(path, "l2")
+    l2 = spark.read.schema(_footer_schema(l2_dir)).parquet(l2_dir)
+    seg_dir = os.path.join(path, "segments")
+    # the partition column is in the directory names, not the files
+    seg_schema = StructType(
+        _footer_schema(seg_dir).fields + [StructField("segment_id", IntegerType())]
+    )
+    segs = spark.read.schema(seg_schema).parquet(seg_dir)
+    serve_dir = seg_dir if served else None
     if pinned and not served:
         segs = segs.repartition(nlist1 * nlist2, "segment_id").persist()
         segs.count()

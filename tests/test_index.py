@@ -133,28 +133,29 @@ def test_sq8_codec_roundtrip(spark, sf_dir):
 
 
 def test_ivf2_coarse_layer_is_exact_means(spark, sf_dir):
-    """layered2 routes on build_ivf2_index's output, so pin it directly:
-    every row lands in an in-range (l1_id, l2_id) sub-list, the
+    """layered2 routes on its two-level coarse layer, so pin it directly
+    on build_layered_graph2's output: every row lands in an in-range
+    (l1_id, l2_id) sub-list (segment_id = l1_id·nlist2 + l2_id), the
     distributed L2 table has exactly one row per non-empty sub-list, and
     each L2 centroid is the exact mean of its sub-list's vectors."""
     import numpy as np
 
-    from cs598vectordb_spark.operators.ivf2 import build_ivf2_index
+    from cs598vectordb_spark.operators.graph import build_layered_graph2
 
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = build_ivf2_index(emb, nlist1=4, nlist2=4)
-    rows = idx.assigned.select("l1_id", "l2_id", "embedding").collect()
+    idx = build_layered_graph2(emb, nlist1=4, nlist2=4)
+    rows = idx.segments.select("segment_id", "embedding").collect()
     assert len(rows) == emb.count()
-    assert all(0 <= r.l1_id < 4 and 0 <= r.l2_id < 4 for r in rows)
+    assert all(0 <= r.segment_id // 4 < 4 and 0 <= r.segment_id % 4 < 4 for r in rows)
     members: dict[tuple[int, int], list] = {}
     for r in rows:
-        members.setdefault((r.l1_id, r.l2_id), []).append(r.embedding)
+        members.setdefault((r.segment_id // 4, r.segment_id % 4), []).append(r.embedding)
     table = {(r.l1_id, r.l2_id): r.centroid for r in idx.l2_table.collect()}
     assert set(table) == set(members)
     for key, vecs in members.items():
         mean = np.asarray(vecs, dtype=np.float64).mean(axis=0)
         np.testing.assert_allclose(np.asarray(table[key]), mean, rtol=0, atol=1e-6)
-    idx.assigned.unpersist()
+    idx.close()
     idx.l2_table.unpersist()
 
 
@@ -609,6 +610,187 @@ def _jobs_run(spark, group: str, fn):
         sc.setLocalProperty("spark.jobGroup.id", prev)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_layered2_setup_job_budget(spark, sf_dir, tmp_path):
+    """Set-up of a served index runs only the jobs that compute and
+    write what it reads: the build runs the L1 sample's job(s) and one
+    count that fills the segment and L2 caches (≤ 7 with AQE's stage
+    jobs), a materialize that re-opens cold writes the two tables (≤ 2),
+    and a served or cold open reads parquet footers only (0). The grid
+    has 16 segment directories, under the 32 past which Spark lists a
+    partitioned table with a job."""
+    from cs598vectordb_spark.operators import graph
+
+    emb = load_table(spark, sf_dir, "embeddings").persist()
+    emb.count()
+    idx, build = _jobs_run(
+        spark, "l2-setup-build", lambda: graph.build_layered_graph2(emb, 4, 4, degree=16)
+    )
+    path = str(tmp_path / "g2setup")
+    _, materialize = _jobs_run(
+        spark, "l2-setup-materialize", lambda: graph.materialize_layered2(idx, path, pinned=False)
+    )
+    served, open_served = _jobs_run(
+        spark, "l2-setup-open-served", lambda: graph.open_layered2(spark, path, served=True)
+    )
+    cold, open_cold = _jobs_run(
+        spark, "l2-setup-open-cold", lambda: graph.open_layered2(spark, path, pinned=False)
+    )
+    jobs = (build, materialize, open_served, open_cold)
+    assert build <= 7 and materialize <= 2 and open_served == open_cold == 0, jobs
+    assert served.serve_dir is not None and cold.serve_dir is None
+
+    def types(df):
+        return {f.name: f.dataType for f in df.schema.fields}
+
+    # the footer schemas give the relations the types the build wrote
+    assert types(cold.segments) == types(idx.segments)
+    assert types(cold.l2_table) == types(idx.l2_table)
+    idx.close()
+    idx.l2_table.unpersist()
+    emb.unpersist()
+
+
+def test_open_layered2_reads_spark_written_l1(spark, sf_dir, tmp_path):
+    """Indexes materialized by earlier builds hold an l1/ sidecar that
+    Spark wrote (a part file, _SUCCESS, .crc files); cached 1M graphs
+    are re-opened from such paths. open_layered2 must read that layout
+    to the same centroids, grid and probe rows as the driver-written
+    one, and Spark must read the driver-written sidecar to the rows
+    its own writer produced."""
+    import shutil
+
+    import numpy as np
+
+    from cs598vectordb_spark.operators import graph
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qpdf = queries_from_embeddings(emb, NQ).select("q_id", "embedding").toPandas()
+    idx = graph.build_layered_graph2(emb, 4, 4, degree=16)
+    path = str(tmp_path / "g2compat")
+    graph.materialize_layered2(idx, path, pinned=False)
+    kw = dict(k=K, nprobe1=2, nprobe2=6, beam=32)
+    new = graph.open_layered2(spark, path, served=True)
+    want = graph.knn_graph_layered2(new, qpdf, **kw).orderBy("q_id", "rank").collect()
+    l1_dir = os.path.join(path, "l1")
+    new_rows = spark.read.parquet(l1_dir).orderBy("l1_id").collect()
+
+    shutil.rmtree(l1_dir)
+    spark.createDataFrame(
+        [
+            (i, [float(x) for x in idx.l1_centroids[i]], idx.nlist1, idx.nlist2, idx.degree)
+            for i in range(idx.nlist1)
+        ],
+        "l1_id long, centroid array<double>, nlist1 int, nlist2 int, degree int",
+    ).coalesce(1).write.mode("overwrite").parquet(l1_dir)
+    files = os.listdir(l1_dir)
+    assert "_SUCCESS" in files and any(f.endswith(".crc") for f in files), files
+    assert spark.read.parquet(l1_dir).orderBy("l1_id").collect() == new_rows
+
+    old = graph.open_layered2(spark, path, served=True)
+    assert np.array_equal(old.l1_centroids, idx.l1_centroids)
+    assert (old.nlist1, old.nlist2, old.degree) == (idx.nlist1, idx.nlist2, idx.degree)
+    got = graph.knn_graph_layered2(old, qpdf, **kw).orderBy("q_id", "rank").collect()
+    assert got == want and len(got) == NQ * K
+    idx.close()
+    idx.l2_table.unpersist()
+
+
+def test_graph2_served_walk_input_is_local(spark, sf_dir, tmp_path):
+    """The served walk job reads its segment-id groups from a local
+    relation (LocalTableScan), not a pickled Python RDD
+    (`Scan ExistingRDD`, whose first use in a session costs over a
+    second), and runs one task per `_balanced_groups` group."""
+    import numpy as np
+
+    from cs598vectordb_spark.operators import graph
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qpdf = queries_from_embeddings(emb, NQ).select("q_id", "embedding").toPandas()
+    idx = graph.build_layered_graph2(emb, 4, 4, degree=16)
+    path = str(tmp_path / "g2walk")
+    graph.materialize_layered2(idx, path, pinned=False)
+    idx.close()
+    idx.l2_table.unpersist()
+    served = graph.open_layered2(spark, path, served=True)
+    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
+    Q = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
+    # every segment probed by every query
+    probed = {sid: np.arange(len(q_ids)) for sid in range(16)}
+    walk = graph._served_walk(
+        spark, served.serve_dir, probed, q_ids, Q, K, 24, 3, 8, "vec_id", "embedding"
+    )
+    plan = walk._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    sc = spark.sparkContext
+    groups = graph._balanced_groups(probed, sc.defaultParallelism)
+    rows, jobs = _jobs_run(spark, "graph2-walk-tasks", walk.collect)
+    assert jobs == 1 and rows
+    (job,) = sc.statusTracker().getJobIdsForGroup("graph2-walk-tasks")
+    tasks = [sc.statusTracker().getStageInfo(s).numTasks for s in sc.statusTracker().getJobInfo(job).stageIds]
+    assert tasks == [len(groups)], (tasks, groups)
+
+
+def test_layered2_build_persists_two_whole_tables(spark, sf_dir):
+    """The build leaves exactly two persisted RDDs, the segment table's
+    and the L2 table's, each a directly persisted frame:
+    `segments.unpersist()` frees the whole segment table (unpersisting a
+    projection of a persisted frame would free nothing), and the L2
+    table goes only with its own unpersist."""
+    from cs598vectordb_spark.operators.graph import build_layered_graph2
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    idx = build_layered_graph2(emb, 4, 4, degree=16)
+    assert len(persisted() - before) == 2
+    idx.segments.unpersist()
+    assert len(persisted() - before) == 1 and idx.l2_table.is_cached
+    idx.l2_table.unpersist()
+    assert persisted() - before == set()
+
+
+def test_layered2_insert_outlives_parent_close(spark, sf_dir):
+    """delete/insert hand the parent's L2 table to the index they
+    derive, and the protocol closes the parent once the new version
+    serves. After `close()` the derived index must probe to the same
+    rows, and its L2 rows must still come from the cached L2 table: one
+    Spark job, where a recomputed build pass would run its shuffle
+    stages as further jobs."""
+    from cs598vectordb_spark.operators.graph import (
+        LayeredGraph2Index,
+        build_layered_graph2,
+        insert_into_layered2,
+        knn_graph_layered2,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qpdf = queries_from_embeddings(emb, NQ).select("q_id", "embedding").toPandas()
+    parent = build_layered_graph2(emb.filter(F.col("vec_id") % 4 != 0), 4, 4, degree=16)
+    child = insert_into_layered2(parent, emb.filter(F.col("vec_id") % 4 == 0))
+    kw = dict(k=K, nprobe1=2, nprobe2=6, beam=32)
+    want = knn_graph_layered2(child, qpdf, **kw).orderBy("q_id", "rank").collect()
+    parent.close()
+
+    # a new index object over the same tables has an empty L2 driver cache
+    fresh = LayeredGraph2Index(
+        child.segments, child.l1_centroids, child.l2_table,
+        child.nlist1, child.nlist2, child.degree,
+    )
+    _, jobs = _jobs_run(
+        spark, "graph2-l2-after-close", lambda: fresh.l2_rows(list(range(fresh.nlist1)))
+    )
+    assert jobs == 1, jobs
+    got = knn_graph_layered2(fresh, qpdf, **kw).orderBy("q_id", "rank").collect()
+    assert got == want and len(got) == NQ * K
+    child.close()
+    child.l2_table.unpersist()
 
 
 def test_graph2_served_probe_is_one_job(spark, sf_dir, tmp_path):
